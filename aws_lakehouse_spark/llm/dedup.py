@@ -115,8 +115,10 @@ def minhash_signature(
 
 def _shingles_sql(text_col: str, k: int) -> str:
     """SQL text equivalent of :func:`shingles_col` (kept in lockstep;
-    used where the whole banding must be ONE expression tree)."""
-    toks = f"split({text_col}, ' ')"
+    used where the whole banding must be ONE expression tree). The
+    column name is backtick-quoted, as in :func:`simhash_col`, so a
+    keyword or a name with a space stays one identifier."""
+    toks = f"split(`{text_col}`, ' ')"
     return (
         f"array_distinct(transform(sequence(1, greatest(size({toks}) - {k - 1}, 1)), "
         f"i -> concat_ws(' ', slice({toks}, i, {k}))))"

@@ -916,6 +916,27 @@ def test_minhash_signature_str_path_equals_column_path(spark):
     assert old == new
 
 
+def test_shingles_sql_quotes_keyword_and_spaced_columns(spark):
+    """ADVICE r12: the SQL-text shingler must treat a column named
+    like a keyword, or containing a space, as one identifier and give
+    the Column-API path's minhash signatures."""
+    from aws_lakehouse_spark.llm.dedup import (
+        _shingles_sql,
+        minhash_signature,
+        shingles_col,
+    )
+
+    for name in ("order", "doc text"):
+        df = docs(spark, _PATH_DOCS).withColumnRenamed("text", name)
+        old = {r[0]: tuple(r)[1:] for r in df.select(
+            "doc_id", *minhash_signature(shingles_col(F.col(name), 3), 4)
+        ).collect()}
+        new = {r[0]: tuple(r)[1:] for r in df.select(
+            "doc_id", *minhash_signature(_shingles_sql(name, 3), 4)
+        ).collect()}
+        assert old == new, name
+
+
 def test_dot_norm_cosine_str_path_equals_column_path(spark):
     """ADVICE r11: pin the r11 fold fast path (str -> one F.expr
     string) to the Column/lambda path bit-for-bit, including the

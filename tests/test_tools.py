@@ -184,13 +184,10 @@ _RAW_BASE = {
     "calib_raw_sec": 1.5,
     "calib_engine_sec": 0.40,
     "calib_sched_sec": 1.2,
-    "calib_spark_sec": 0.1388,
-    "normalized": {"q1": 7.2, "q2": 14.4, "q3": 3.6},
 }
 
 
-def _raw_detail(mult, raw_canary, engine_canary, calib_spark,
-                sched_canary=None):
+def _raw_detail(mult, raw_canary, engine_canary, sched_canary=None):
     if sched_canary is None:
         # default: the sched canary moves with the raw canary, so
         # the pre-r11 test scenarios keep their meaning
@@ -202,11 +199,6 @@ def _raw_detail(mult, raw_canary, engine_canary, calib_spark,
         "calib_raw_sec": raw_canary,
         "calib_engine_sec": engine_canary,
         "calib_sched_sec": sched_canary,
-        "calib_spark_sec": calib_spark,
-        "normalized": {
-            n: round(v * mult / calib_spark, 2)
-            for n, v in _RAW_BASE["raw"].items()
-        },
     }
 
 
@@ -217,16 +209,16 @@ def test_raw_gate_three_way_verdict():
     between = mixed (FAIL)."""
     bench = _bench_module()
     # flat round: none, pass
-    g = bench._gate(_raw_detail(1.0, 1.5, 0.40, 0.14), _RAW_BASE)
+    g = bench._gate(_raw_detail(1.0, 1.5, 0.40), _RAW_BASE)
     assert g["uniform_shift_verdict"] == "none" and g["pass"]
     # everything +40% incl. both canaries: environment, pass
-    g = bench._gate(_raw_detail(1.4, 2.1, 0.56, 0.14), _RAW_BASE)
+    g = bench._gate(_raw_detail(1.4, 2.1, 0.56), _RAW_BASE)
     assert g["uniform_shift_verdict"] == "environment" and g["pass"]
     # queries +40%, canaries flat: code, FAIL
-    g = bench._gate(_raw_detail(1.4, 1.5, 0.40, 0.14), _RAW_BASE)
+    g = bench._gate(_raw_detail(1.4, 1.5, 0.40), _RAW_BASE)
     assert g["uniform_shift_verdict"] == "code" and not g["pass"]
     # queries +40%, canaries +14% (explained ~0.35): mixed, FAIL
-    g = bench._gate(_raw_detail(1.4, 1.71, 0.456, 0.14), _RAW_BASE)
+    g = bench._gate(_raw_detail(1.4, 1.71, 0.456), _RAW_BASE)
     assert g["uniform_shift_verdict"] == "mixed" and not g["pass"]
     # baseline predating the raw canaries: unattributable, pass
     old = {
@@ -235,7 +227,7 @@ def test_raw_gate_three_way_verdict():
         if k
         not in ("calib_raw_sec", "calib_engine_sec", "calib_sched_sec")
     }
-    g = bench._gate(_raw_detail(1.4, 2.1, 0.56, 0.14), old)
+    g = bench._gate(_raw_detail(1.4, 2.1, 0.56), old)
     assert g["uniform_shift_verdict"] == "unattributable" and g["pass"]
 
 
@@ -249,53 +241,42 @@ def test_raw_gate_r11_scheduler_drift_reads_environment():
     the same session read "code" on unchanged code."""
     bench = _bench_module()
     detail = _raw_detail(
-        1.31, 1.5 * 1.035, 0.40 * 1.115, 0.14, sched_canary=1.2 * 1.4
+        1.31, 1.5 * 1.035, 0.40 * 1.115, sched_canary=1.2 * 1.4
     )
     g = bench._gate(detail, _RAW_BASE)
     assert g["uniform_shift_verdict"] == "environment", g
     assert g["pass"], g
     # all three canaries flat on the same shift: still a code verdict
     g = bench._gate(
-        _raw_detail(1.31, 1.5, 0.40, 0.14, sched_canary=1.2), _RAW_BASE
+        _raw_detail(1.31, 1.5, 0.40, sched_canary=1.2), _RAW_BASE
     )
     assert g["uniform_shift_verdict"] == "code" and not g["pass"]
 
 
 def test_raw_gate_flags_per_query_regression():
     bench = _bench_module()
-    detail = _raw_detail(1.0, 1.5, 0.40, 0.14)
+    detail = _raw_detail(1.0, 1.5, 0.40)
     detail["warm_best"]["q2"] = 4.0  # 2x, +2.0 s absolute
     g = bench._gate(detail, _RAW_BASE)
     assert list(g["regressions"]) == ["q2"] and not g["pass"]
     # sub-floor growth never flags, whatever the ratio: q3 2x = +0.5s
     # exceeds the 0.3s floor, but 0.5x base of 0.2s would not
-    detail = _raw_detail(1.0, 1.5, 0.40, 0.14)
+    detail = _raw_detail(1.0, 1.5, 0.40)
     detail["warm_best"]["q3"] = 0.75  # 1.5x but +0.25 s < floor
     g = bench._gate(detail, _RAW_BASE)
     assert not g["regressions"] and g["pass"]
 
 
 def test_raw_gate_r10_driver_scenario_never_reads_code():
-    """The r10 proof case (verdict item 1): raw walls FLAT, the 0.1 s
-    calibration denominator halved between sessions. The old
+    """The r10 proof case (verdict item 1): raw walls FLAT while the
+    0.1 s calibration micro-probe halved between sessions. The old
     normalized gate printed FAIL + uniform_shift_verdict=code; the
-    raw gate must PASS, and the normalized ADVISORY must read
-    calibration-shift — never code."""
+    raw gate reads no micro-probe and must PASS."""
     bench = _bench_module()
-    # calib_spark 0.1388 -> 0.0975 (the r10 driver's measured swing):
-    # every normalized number inflates 1.42x while raw walls are flat
-    detail = _raw_detail(1.0, 1.5, 0.40, 0.0975)
+    detail = _raw_detail(1.0, 1.5, 0.40)
     g = bench._gate(detail, _RAW_BASE)
     assert g["pass"], g
     assert g["uniform_shift_verdict"] == "none"
-    adv = g["normalized_advisory"]
-    assert adv["median_ratio"] > 1.3  # the advisory DOES see the shift
-    assert adv["verdict"] == "calibration-shift"
-    # and the opposite swing (denominator doubled) also pins advisory
-    detail = _raw_detail(1.0, 1.5, 0.40, 0.28)
-    g = bench._gate(detail, _RAW_BASE)
-    assert g["pass"]
-    assert g["normalized_advisory"]["verdict"] == "calibration-shift"
 
 
 def test_raw_gate_passes_with_reason_on_pre_raw_baseline():
@@ -303,7 +284,7 @@ def test_raw_gate_passes_with_reason_on_pre_raw_baseline():
     base = {
         k: v for k, v in _RAW_BASE.items() if k != "raw"
     }
-    g = bench._gate(_raw_detail(1.0, 1.5, 0.40, 0.14), base)
+    g = bench._gate(_raw_detail(1.0, 1.5, 0.40), base)
     assert g["pass"] and "reason" in g
 
 
@@ -491,7 +472,7 @@ def test_raw_gate_engine_canary_design_versioned():
     base["calib_engine_design"] = 1
     # run at design 2 with an engine canary 2.8x the baseline level
     # (the design shift, not drift); raw+sched flat
-    detail = _raw_detail(1.0, 1.5, 0.40 * 2.8, 0.14, sched_canary=1.2)
+    detail = _raw_detail(1.0, 1.5, 0.40 * 2.8, sched_canary=1.2)
     detail["calib_engine_design"] = 2
     g = bench._gate(detail, base)
     # engine excluded -> max canary stays 1.0, drift ~1.0
@@ -501,3 +482,112 @@ def test_raw_gate_engine_canary_design_versioned():
     base["calib_engine_design"] = 2
     g = bench._gate(detail, base)
     assert g["max_canary_ratio"] > 2.5, g
+
+
+def test_raw_gate_stable_host_never_excuses_a_flag():
+    """ADVICE r12: with the worst canary clamped to >= 1.0, a query at
+    1.45x against a 0.9x median sat "inside 1.5x of the worst canary"
+    and was excused on a host whose canaries never moved. A flag is
+    excused only when the worst canary itself moved past the
+    uniform-shift threshold, so this must FAIL."""
+    bench = _bench_module()
+    names = [f"q{i}" for i in range(9)]
+    base = {
+        "round": 12,
+        "raw": {n: 2.0 for n in names},
+        "calib_raw_sec": 1.5,
+        "calib_engine_sec": 0.40,
+        "calib_sched_sec": 1.2,
+    }
+    detail = {
+        "warm_best": {n: 1.8 for n in names[:8]} | {"q8": 2.9},
+        "calib_raw_sec": 1.5,
+        "calib_engine_sec": 0.40,
+        "calib_sched_sec": 1.2,
+    }
+    g = bench._gate(detail, base)
+    assert g["max_canary_ratio"] == 1.0, g
+    assert list(g["regressions"]) == ["q8"] and not g["excused"], g
+    assert not g["pass"]
+
+
+def test_make_sfN_unit_factor_accepts_divisors_refuses_the_rest(
+    tmp_path, sf_dir
+):
+    """ADVICE r12: a source smaller than sf0.1 whose orders count
+    evenly divides 150k (sf0.01: 15 000 orders) tiles with unit factor
+    1; a whole multiple of 150k scales the units; any other count is
+    refused rather than guessed."""
+    import duckdb
+    from make_sfN import source_unit_factor
+
+    con = duckdb.connect()
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if os.path.exists(os.path.join(sf001, "orders.parquet")):
+        assert source_unit_factor(con, sf001) == 1
+
+    def source(n_orders: int) -> str:
+        d = tmp_path / f"n{n_orders}"
+        d.mkdir()
+        con.sql(
+            f"COPY (SELECT range AS o_orderkey FROM range({n_orders})) "
+            f"TO '{d}/orders.parquet' (FORMAT PARQUET)"
+        )
+        return str(d)
+
+    assert source_unit_factor(con, source(300_000)) == 2
+    with pytest.raises(ValueError, match="refusing to guess"):
+        source_unit_factor(con, source(7))
+
+
+def test_scale_bench_decade_ratio_cpus_and_design_refusal():
+    """The merged scale bench, driven by a fake cell runner (no
+    Spark): decade ratios over two sf dirs, the recorded core count,
+    the quarter-core probe over the worst decade ratios, and the
+    refusal to compare with a previous artifact of another design or
+    core count."""
+    import scale_bench as sb
+
+    base = {n: 1.0 + i / 10 for i, n in enumerate(sb.KERNELS)}
+    superlinear, serialized = sb.KERNELS[0], sb.KERNELS[1]
+    calls = []
+
+    def cell(name, sf_dir, trials, cores):
+        calls.append((name, sf_dir, trials, cores))
+        warm = base[name]
+        if sf_dir.endswith("sf0.01"):
+            warm *= 20 if name == superlinear else 10
+        if name != serialized:
+            warm *= 8 / cores
+        return [warm * 3, warm]
+
+    dirs = ["/data/sf0.01", "/data/sf0.001"]  # order does not matter
+    r = sb.scale_bench(dirs, 8, cell=cell)
+    assert r["cpus"] == 8 and r["design"] == sb.DESIGN
+    assert len(calls) == 2 * len(sb.KERNELS) + sb.PROBE_N
+    assert {c[2] for c in calls} == {sb.TRIALS}
+    assert r["decade_ratio"][superlinear] == 20.0
+    assert all(
+        v == 10.0 for n, v in r["decade_ratio"].items() if n != superlinear
+    )
+    assert r["sf"]["sf0.001"]["cold"][superlinear] == 3 * base[superlinear]
+    probe = r["core_probe"]
+    assert probe["sf"] == "sf0.01" and probe["cpus"] == 2
+    assert list(probe["warm"])[0] == superlinear
+    assert probe["ratio_quarter_over_full"][superlinear] == 4.0
+    assert probe["ratio_quarter_over_full"][serialized] == 1.0
+
+    # same design and core count: a delta per sf
+    same = sb.scale_bench(dirs, 8, prev=r, cell=cell)
+    assert same["delta_vs_prev"]["sf0.01"][superlinear] == 1.0
+    # another design, or another core count: refused, no numbers
+    for prev in ({**r, "design": "shared-session"}, {**r, "cpus": 32}):
+        out = sb.scale_bench(dirs, 8, prev=prev, cell=cell)
+        assert "delta_vs_prev" not in out
+        assert "method noise" in out["delta_vs_prev_refused"]
+
+    # two dirs that are not one decade apart are refused up front
+    calls.clear()
+    with pytest.raises(SystemExit):
+        sb.scale_bench(["/data/sf0.1", "/data/sf0.001"], 8, cell=cell)
+    assert not calls

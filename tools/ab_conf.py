@@ -3,18 +3,18 @@
 
 Conf changes can't be A/B'd inside one session (most are build-time),
 and cross-process single runs drift 1.4x on this host — so each
-(variant, query) cell is a FRESH JVM subprocess (the r10 sidecar
-lesson: spark.stop() keeps the py4j JVM alive and heap history
-contaminates every later wall) running N warm trials, and cells are
-COUNTERBALANCED per query (A, B, B, A) so neither variant
-systematically pays drift. The per-variant statistic is the min of
-its cells' warm-best walls — a real conf win lowers the floor.
+(variant, query) cell is a FRESH JVM (``tools/jvm_cell.py``: heap
+history contaminates every later wall of a shared session) running N
+trials, and cells are COUNTERBALANCED per query (A, B, B, A) so
+neither variant systematically pays drift. The per-variant statistic
+is the min of its cells' warm-best walls — a real conf win lowers the
+floor.
 
     python tools/ab_conf.py '{"label":"base"}' \
         '{"label":"shj","conf":{"spark.sql.join.preferSortMergeJoin":"false"}}' \
         query1 [query2 ...]
 
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32),
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (host cores),
 SPARK_GRAFT_AB_TRIALS (4).
 """
 
@@ -22,54 +22,18 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from jvm_cell import host_cpus, run_cell
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = host_cpus()
 TRIALS = int(os.environ.get("SPARK_GRAFT_AB_TRIALS", "4"))
-
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from aws_lakehouse_spark.registry import load_all
-from aws_lakehouse_spark.session import get_spark
-
-name, sf, cpus, trials = {name!r}, {sf!r}, {cpus}, {trials}
-extra = {extra!r}
-extra = dict(extra)
-extra.setdefault("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
-extra.setdefault("spark.sql.files.openCostInBytes", str(64 * 1024))
-fn = load_all()[name].fn
-spark = get_spark("ab-conf", master=f"local[{{cpus}}]",
-                  shuffle_partitions=cpus, extra_conf=extra)
-walls = []
-for _ in range(trials):
-    t0 = time.time()
-    fn(spark, sf).write.format("noop").mode("overwrite").save()
-    walls.append(round(time.time() - t0, 3))
-    spark.catalog.clearCache()
-print("AB_CELL " + json.dumps(walls))
-"""
-
-
-def run_cell(name: str, extra: dict) -> list[float]:
-    code = _CHILD.format(
-        repo=REPO, name=name, sf=SF_DIR, cpus=CPUS, trials=TRIALS,
-        extra=extra,
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True, text=True, timeout=1800,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("AB_CELL "):
-            return json.loads(line[len("AB_CELL "):])
-    sys.stderr.write(out.stdout[-2000:] + out.stderr[-4000:])
-    raise RuntimeError(f"cell failed: {name}")
+# the bench's split sizing (see bench.py); a variant's conf overrides it
+_SPLITS = {
+    "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(64 * 1024),
+}
 
 
 def main() -> int:
@@ -87,7 +51,9 @@ def main() -> int:
         cells = {"a": [], "b": []}
         for tag in ("a", "b", "b", "a"):
             v = a if tag == "a" else b
-            walls = run_cell(name, v.get("conf", {}))
+            walls = run_cell(
+                name, SF_DIR, TRIALS, CPUS, {**_SPLITS, **v.get("conf", {})}
+            )
             warm = walls[1:] or walls
             cells[tag].append(min(warm))
             print(f"  {name} [{v['label']}] walls={walls}", flush=True)

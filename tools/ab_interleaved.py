@@ -8,9 +8,9 @@ host drift alone). One process, one SparkSession, one JVM: each
 repetition runs the query once under each tree, ALTERNATING order
 per rep so neither side systematically pays warm-up or inherits the
 other's GC debt. The aws_lakehouse_spark module cache is cleared on
-every tree switch; a fixed all-cores synthetic Spark job (the
-calib_spark canary) runs per rep to expose host drift INSIDE the
-session — discard the run if calib swings more than ~2x.
+every tree switch; a fixed all-cores synthetic Spark job runs per rep
+to expose host drift INSIDE the session — discard the run if that
+``calib`` wall swings more than ~2x.
 
     git worktree add /tmp/abtree <ref-commit>
     python tools/ab_interleaved.py /tmp/abtree query1 [query2 ...]
@@ -36,9 +36,11 @@ import os
 import sys
 import time
 
+from jvm_cell import host_cpus
+
 HEAD_TREE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = host_cpus()
 REPS = int(os.environ.get("SPARK_GRAFT_AB_REPS", "7"))
 
 
@@ -65,7 +67,7 @@ def main() -> int:
     spark = get_spark(
         "ab",
         master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
+        shuffle_partitions=CPUS,
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(1 * 1024 * 1024),
             "spark.sql.files.openCostInBytes": str(64 * 1024),
@@ -76,7 +78,7 @@ def main() -> int:
 
     def calib() -> float:
         t0 = time.perf_counter()
-        spark.range(0, 50_000_000, 1, int(CPUS)).selectExpr(
+        spark.range(0, 50_000_000, 1, CPUS).selectExpr(
             "sum(id * 3 + 1) AS s"
         ).collect()
         return time.perf_counter() - t0

@@ -1,16 +1,21 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for named queries to plans/r12/.
+"""Dump `.explain("formatted")` for named queries to plans/r{N}/.
 
-Round-11 deliverable: for each query touched this round, commit
-``plans/r12/<query>_before.txt`` and ``..._after.txt`` so the plan
-claims in OPTIMIZATION_r12.md are checkable without running Spark.
+For each query a round touches, commit
+``plans/r{N}/<query>_before.txt`` and ``..._after.txt`` so the plan
+claims in that round's OPTIMIZATION notes are checkable without
+running Spark.
 
-    python tools/dump_plans_r12.py before               # all bench queries
-    python tools/dump_plans_r12.py after q1 q2 ...      # a subset
+    python tools/dump_plans.py --round 13 before          # all bench queries
+    python tools/dump_plans.py --round 13 after q1 q2 ... # a subset
+
+The session stays at ``local[8]`` with 8 shuffle partitions whatever
+the host, so dumps from different rounds show the same partitioning.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -21,10 +26,14 @@ from aws_lakehouse_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    assert suffix in ("before", "after"), suffix
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("suffix", choices=("before", "after"))
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    suffix = args.suffix
     registry = load_all()
-    names = sys.argv[2:] or [n for n, s in registry.items() if s.bench]
+    names = args.names or [n for n, s in registry.items() if s.bench]
     unknown = [n for n in names if n not in registry]
     assert not unknown, f"unknown queries: {unknown}"
 
@@ -32,11 +41,11 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r12",
+        f"r{args.round}",
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("dump-plans-r12", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("dump-plans", master="local[8]", shuffle_partitions=8)
     jvm = spark._sc._jvm
     for name in names:
         df = registry[name].fn(spark, sf_dir)

@@ -98,16 +98,22 @@ def source_unit_factor(con: duckdb.DuckDBPyConnection, src: str) -> int:
     OVERLAP — r12 caught this producing a smeared sf10 co-purchase
     graph whose density (and pagerank wall) exploded superlinearly.
     Scale every unit by the source's size relative to sf0.1, read off
-    the orders row count (150k at sf0.1)."""
+    the orders row count (150k at sf0.1). A SMALLER source whose
+    orders count evenly divides 150k (sf0.01, sf0.001) keeps factor
+    1: its key ranges sit inside the sf0.1 units, so replicas never
+    overlap (the combined key space just has gaps)."""
     n_orders = con.sql(
         f"SELECT COUNT(*) FROM read_parquet('{src}/orders.parquet')"
     ).fetchone()[0]
-    factor = max(1, round(n_orders / 150_000))
-    assert n_orders == 150_000 * factor, (
-        f"source orders count {n_orders} is not a whole multiple of "
-        "the sf0.1 cardinality; refusing to guess key offsets"
-    )
-    return factor
+    if 0 < n_orders <= 150_000 and 150_000 % n_orders == 0:
+        return 1
+    if n_orders <= 0 or n_orders % 150_000:
+        raise ValueError(
+            f"source orders count {n_orders} neither divides nor is a "
+            "whole multiple of the sf0.1 cardinality (150000); refusing "
+            "to guess key offsets"
+        )
+    return n_orders // 150_000
 
 
 def scale_table(

@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""Accept the current bench sidecar as the normalized-gate baseline.
+"""Accept the current bench sidecar as the raw-gate baseline.
 
-``bench.py`` gates every run's canary-normalized per-query ratios
-against ``BENCH_NORMALIZED_BASELINE.json`` (r7 verdict item 8 — host
-drift must not masquerade as regression or improvement). The baseline
-only moves DELIBERATELY: run this after a round's numbers are
-accepted (idle host confirmed via the canaries, no unexplained
-regressions) to promote ``BENCH_DETAIL.json``'s normalized map.
+``bench.py`` gates every run's raw per-query warm-best walls against
+``BENCH_NORMALIZED_BASELINE.json``, and attributes a uniform shift
+with the raw canary walls stored next to them. The baseline only
+moves DELIBERATELY: run this after a round's numbers are accepted
+(idle host confirmed via the canaries, no unexplained regressions)
+to promote ``BENCH_DETAIL.json``'s walls.
 
     python tools/refresh_bench_baseline.py --round 8
 """
@@ -25,17 +25,16 @@ def main() -> int:
     ap.add_argument("--round", type=int, required=True)
     args = ap.parse_args()
     detail = json.load(open(os.path.join(REPO, "BENCH_DETAIL.json")))
-    gate = detail.get("gate", detail.get("normalized_gate", {}))
+    gate = detail.get("gate", {})
     base = {
         "round": args.round,
-        "comment": "Per-query RAW trimmed-mean walls (seconds) plus "
+        "comment": "Per-query RAW warm-best walls (seconds) plus "
         "raw canary walls from the accepted round-"
-        f"{args.round} bench — bench.py's gate reads the raw walls "
-        "(r10 verdict item 1: the 0.1 s calib_spark normalization "
-        "denominator swings 2x between sessions and manufactured a "
-        "false code-regression FAIL). The normalized map stays for "
-        "the advisory block only. Refresh deliberately at round "
-        "close: python tools/refresh_bench_baseline.py --round N",
+        f"{args.round} bench on {detail.get('cpus')} cpus. Refresh "
+        "deliberately at round close: "
+        "python tools/refresh_bench_baseline.py --round N",
+        # walls from different core counts do not compare
+        "cpus": detail.get("cpus"),
         # raw per-query warm-best walls: the numbers the gate
         # decides on (min over warm trials — a code regression
         # raises the floor, GC spikes only the mean)
@@ -49,18 +48,13 @@ def main() -> int:
         # across equal designs
         "calib_engine_design": detail.get("calib_engine_design", 1),
         "calib_sched_sec": detail.get("calib_sched_sec"),
-        # advisory-only normalized schema (r7-r9 gate, demoted)
-        "calib_spark_sec": detail["calib_spark_sec"],
-        "normalized": detail["normalized"],
-        "headline_normalized": detail["headline_normalized"],
     }
     out = os.path.join(REPO, "BENCH_NORMALIZED_BASELINE.json")
     json.dump(base, open(out, "w"), indent=1)
     print(
-        f"baseline -> round {args.round}: {len(base['normalized'])} "
-        f"queries, headline_normalized {base['headline_normalized']} "
-        f"(previous gate: pass={gate.get('pass')}, "
-        f"total_ratio={gate.get('total_ratio')})"
+        f"baseline -> round {args.round}: {len(base['raw'])} "
+        f"queries on {base['cpus']} cpus (previous gate: "
+        f"pass={gate.get('pass')}, total_ratio={gate.get('total_ratio')})"
     )
     return 0
 

@@ -59,6 +59,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aws_lakehouse_spark.registry import load_all  # noqa: E402
 from aws_lakehouse_spark.session import get_spark  # noqa: E402
+from jvm_cell import host_cpus  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -92,7 +93,7 @@ def _fmt(n: int) -> str:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     registry = load_all()
     names = list(
         dict.fromkeys(
@@ -103,7 +104,7 @@ def main() -> int:
     spark = get_spark(
         "shuffle-audit",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": "4046",
