@@ -46,6 +46,10 @@ CALIB_ENGINE_DESIGN = 2
 # shifted and asks the canaries who moved it
 UNIFORM_SHIFT = 1.15
 
+# what a baseline without the field was taken at: the r11 baseline
+# predates the recorded cpus and sf, and ran sf0.1 on local[32]
+BASELINE_DEFAULTS = {"cpus": 32, "sf": 0.1}
+
 
 def run() -> dict:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -208,7 +212,7 @@ def run() -> dict:
         "calib_engine_design": CALIB_ENGINE_DESIGN,
         "calib_sched_sec": calib_sched,
     }
-    prelim = {"warm_best": warm_best, **canaries}
+    prelim = {"warm_best": warm_best, "cpus": cpus, "sf": sf, **canaries}
     gate = _gate(prelim)
     retested = sorted(gate.get("regressions", {}))
     for name in retested:
@@ -283,7 +287,9 @@ def _gate(detail: dict, base: dict | None = None) -> dict:
       "environment" (pass); canaries held = "code" (FAIL); between =
       "mixed" (FAIL);
     - a flag is excused only when the worst canary itself moved past
-      ``UNIFORM_SHIFT`` and the query's ratio sits inside 1.5x of it.
+      ``UNIFORM_SHIFT`` and the query's ratio sits inside 1.5x of it;
+    - a run on another core count or scale factor than the baseline
+      is refused (``pass`` false, reason recorded, no ratios).
 
     Walls are never divided by a canary: r7-r9 normalized by a 0.1 s
     micro-probe that swung 2x between sessions and manufactured a
@@ -298,6 +304,22 @@ def _gate(detail: dict, base: dict | None = None) -> dict:
         base = json.load(open(path))
 
     out: dict = {"baseline_round": base.get("round")}
+
+    # walls from another core count or scale factor do not compare:
+    # the canaries move with them, so the shift reads "environment"
+    # and every flag up to 1.5x the worst canary is excused (a 4-core
+    # sf0.01 run against the local[32] sf0.1 baseline excused eight
+    # queries at 1.9-3.6x). Refuse instead of excusing.
+    differ = [
+        f"{key} {base.get(key, default)} -> {detail[key]}"
+        for key, default in BASELINE_DEFAULTS.items()
+        if key in detail and detail[key] != base.get(key, default)
+    ]
+    if differ:
+        return out | {
+            "pass": False,
+            "reason": f"baseline and run differ in {', '.join(differ)}",
+        }
 
     # --- primary: raw warm-best walls -----------------------------
     base_raw = base.get("raw", {})
@@ -426,7 +448,7 @@ if __name__ == "__main__":
     print(
         "raw gate vs r%s baseline: %s (raw_median_ratio=%s, "
         "host_drift_ratio=%s, uniform_shift_verdict=%s, "
-        "total_ratio=%s, regressions=%s)"
+        "total_ratio=%s, regressions=%s)%s"
         % (
             gate.get("baseline_round"),
             "PASS" if gate.get("pass") else "FAIL",
@@ -435,6 +457,7 @@ if __name__ == "__main__":
             gate.get("uniform_shift_verdict"),
             gate.get("total_ratio"),
             sorted(gate.get("regressions", {})),
+            f" — {gate['reason']}" if "reason" in gate else "",
         )
     )
     print(json.dumps(headline_line))

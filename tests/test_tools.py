@@ -511,6 +511,56 @@ def test_raw_gate_stable_host_never_excuses_a_flag():
     assert not g["pass"]
 
 
+def test_raw_gate_refuses_another_core_count_or_scale():
+    """A run on another core count or scale factor than the baseline
+    is refused, never excused: its canaries move with the walls, so
+    the gate would read the shift as "environment". A baseline without
+    the fields counts as the r11 one (local[32], sf0.1); a run without
+    them (the committed replays) is gated as before."""
+    bench = _bench_module()
+    flat = _raw_detail(1.0, 1.5, 0.40)
+    g = bench._gate(flat | {"cpus": 32, "sf": 0.1}, _RAW_BASE)
+    assert g["pass"] and "reason" not in g, g
+    # 8x slower on an eighth of the cores, canaries 8x too: refused
+    slow = _raw_detail(8.0, 1.5 * 8, 0.40 * 8)
+    g = bench._gate(slow | {"cpus": 4, "sf": 0.1}, _RAW_BASE)
+    assert not g["pass"] and "cpus 32 -> 4" in g["reason"], g
+    assert "per_query_ratio" not in g and "excused" not in g
+    # the same walls gated without the fields: environment, pass
+    assert bench._gate(slow, _RAW_BASE)["pass"]
+    g = bench._gate(flat | {"cpus": 32, "sf": 0.01}, _RAW_BASE)
+    assert not g["pass"] and "sf 0.1 -> 0.01" in g["reason"], g
+    # a baseline recorded on 4 cores gates a 4-core run
+    base4 = _RAW_BASE | {"cpus": 4, "sf": 0.01}
+    g = bench._gate(flat | {"cpus": 4, "sf": 0.01}, base4)
+    assert g["pass"] and g["uniform_shift_verdict"] == "none", g
+
+
+def test_shuffle_gate_refuses_another_core_count(tmp_path, monkeypatch):
+    """The shuffle gate reads byte volumes whose partitioning follows
+    the core count: a baseline from another core count fails the gate
+    with the reason recorded; the same core count gates as before."""
+    import json
+
+    import shuffle_audit as sa
+
+    baseline = tmp_path / "SHUFFLE_BASELINE.json"
+    monkeypatch.setattr(sa, "BASELINE_PATH", str(baseline))
+    monkeypatch.setattr(sa, "REPO", str(tmp_path))
+    vol = {"input_bytes": 1 << 20, "shuffle_write": 4 << 20,
+           "shuffle_read": 4 << 20}
+    rows = [("q", vol, 4.0)]
+    baseline.write_text(json.dumps({"round": 10, "queries": {"q": vol}}))
+    # a baseline without cpus was taken on local[32]
+    assert sa._gate(rows, 32) == 0
+    assert sa._gate(rows, 4) == 1
+    gate = json.loads((tmp_path / "SHUFFLE_GATE.json").read_text())
+    assert not gate["pass"] and "32 cpus" in gate["failures"][0]
+    sa._accept(rows, "/data/sf0.1", 4)
+    assert json.loads(baseline.read_text())["cpus"] == 4
+    assert sa._gate(rows, 4) == 0
+
+
 def test_make_sfN_unit_factor_accepts_divisors_refuses_the_rest(
     tmp_path, sf_dir
 ):
@@ -543,12 +593,14 @@ def test_make_sfN_unit_factor_accepts_divisors_refuses_the_rest(
 def test_scale_bench_decade_ratio_cpus_and_design_refusal():
     """The merged scale bench, driven by a fake cell runner (no
     Spark): decade ratios over two sf dirs, the recorded core count,
-    the quarter-core probe over the worst decade ratios, and the
-    refusal to compare with a previous artifact of another design or
-    core count."""
+    the quarter-core probe over the worst decade ratios of the
+    linear-expected kernels only, and the refusal to compare with a
+    previous artifact of another design or core count."""
     import scale_bench as sb
 
     base = {n: 1.0 + i / 10 for i, n in enumerate(sb.KERNELS)}
+    # the pair emitters are by far the slowest and grow 100x a decade
+    base |= {n: 50.0 for n in sb.SMALLEST_SCALE_ONLY}
     superlinear, serialized = sb.KERNELS[0], sb.KERNELS[1]
     calls = []
 
@@ -556,7 +608,10 @@ def test_scale_bench_decade_ratio_cpus_and_design_refusal():
         calls.append((name, sf_dir, trials, cores))
         warm = base[name]
         if sf_dir.endswith("sf0.01"):
-            warm *= 20 if name == superlinear else 10
+            if name in sb.SMALLEST_SCALE_ONLY:
+                warm *= 100
+            else:
+                warm *= 20 if name == superlinear else 10
         if name != serialized:
             warm *= 8 / cores
         return [warm * 3, warm]
@@ -564,8 +619,16 @@ def test_scale_bench_decade_ratio_cpus_and_design_refusal():
     dirs = ["/data/sf0.01", "/data/sf0.001"]  # order does not matter
     r = sb.scale_bench(dirs, 8, cell=cell)
     assert r["cpus"] == 8 and r["design"] == sb.DESIGN
-    assert len(calls) == 2 * len(sb.KERNELS) + sb.PROBE_N
+    assert len(calls) == (
+        2 * len(sb.KERNELS) + len(sb.SMALLEST_SCALE_ONLY) + sb.PROBE_N
+    )
     assert {c[2] for c in calls} == {sb.TRIALS}
+    # the pair emitters run at the smaller scale only, are never
+    # ratioed and never probed
+    quadratic = set(sb.SMALLEST_SCALE_ONLY)
+    assert quadratic <= set(r["sf"]["sf0.001"]["warm"])
+    assert not quadratic & {c[0] for c in calls if c[1] == "/data/sf0.01"}
+    assert set(r["decade_ratio"]) == set(sb.KERNELS)
     assert r["decade_ratio"][superlinear] == 20.0
     assert all(
         v == 10.0 for n, v in r["decade_ratio"].items() if n != superlinear
@@ -585,6 +648,12 @@ def test_scale_bench_decade_ratio_cpus_and_design_refusal():
         out = sb.scale_bench(dirs, 8, prev=prev, cell=cell)
         assert "delta_vs_prev" not in out
         assert "method noise" in out["delta_vs_prev_refused"]
+
+    # one scale: the probe takes the slowest linear-expected kernels,
+    # never the (slower still) pair emitters
+    one = sb.scale_bench(["/data/sf0.001"], 8, cell=cell)
+    assert "decade_ratio" not in one
+    assert list(one["core_probe"]["warm"]) == sb.KERNELS[::-1][: sb.PROBE_N]
 
     # two dirs that are not one decade apart are refused up front
     calls.clear()

@@ -24,10 +24,10 @@ import json
 import os
 import sys
 
-from jvm_cell import host_cpus, run_cell
+from jvm_cell import run_cell
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = host_cpus()
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 TRIALS = int(os.environ.get("SPARK_GRAFT_AB_TRIALS", "4"))
 # the bench's split sizing (see bench.py); a variant's conf overrides it
 _SPLITS = {

@@ -36,11 +36,9 @@ import os
 import sys
 import time
 
-from jvm_cell import host_cpus
-
 HEAD_TREE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = host_cpus()
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 REPS = int(os.environ.get("SPARK_GRAFT_AB_REPS", "7"))
 
 

@@ -24,11 +24,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _MARKER = "CELL_WALLS "
 
 
-def host_cpus() -> int:
-    """``$SPARK_GRAFT_CPUS`` when set, else the host's core count."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-
-
 def run_cell(
     name: str,
     sf_dir: str,

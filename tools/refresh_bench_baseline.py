@@ -33,8 +33,10 @@ def main() -> int:
         f"{args.round} bench on {detail.get('cpus')} cpus. Refresh "
         "deliberately at round close: "
         "python tools/refresh_bench_baseline.py --round N",
-        # walls from different core counts do not compare
+        # walls from another core count or scale factor do not
+        # compare: the gate refuses a run that differs in either
         "cpus": detail.get("cpus"),
+        "sf": detail.get("sf"),
         # raw per-query warm-best walls: the numbers the gate
         # decides on (min over warm trials — a code regression
         # raises the floor, GC spikes only the mean)

@@ -17,20 +17,18 @@ The artifact ``BENCH_SCALE_r{N}.json`` records:
 
 - ``cpus``: walls run on ``local[cpus]``, the host's core count
   unless ``$SPARK_GRAFT_CPUS`` says otherwise;
-- ``sf``: warm and cold walls per scale directory;
+- ``sf``: warm and cold walls per scale directory (``SMALLEST_SCALE_ONLY``
+  under the smallest only);
 - ``decade_ratio`` (two scales one decade apart): warm wall at the
-  larger scale over the smaller; at or below 10 is linear or better.
-  The pair-emitting kernels (``join_range_banded``,
-  ``join_interval_overlap``, ``dedup_minhash_lsh_pairs``,
-  ``dedup_simhash_pairs``) grow their OUTPUT faster than their input
-  by definition, so a ratio above 10 there is not by itself a defect;
-- ``core_probe``: the ``PROBE_N`` kernels with the worst decade ratio
-  (the slowest warm walls when one scale is given) re-run at the
-  largest scale on a quarter of the cores. ``ratio_quarter_over_full``
-  near 1.0 means the wall did not move when three quarters of the
-  cores disappeared — hidden serialization (a one-split scan, a
-  Python-side loop, a single-partition window). Healthy CPU-bound
-  kernels land well above 1.5;
+  larger scale over the smaller, for the linear-expected ``KERNELS``;
+  at or below 10 is linear or better;
+- ``core_probe``: the ``PROBE_N`` linear-expected kernels with the
+  worst decade ratio (the slowest warm walls when one scale is given)
+  re-run at the largest scale on a quarter of the cores.
+  ``ratio_quarter_over_full`` near 1.0 means the wall did not move
+  when three quarters of the cores disappeared — hidden serialization
+  (a one-split scan, a Python-side loop, a single-partition window).
+  Healthy CPU-bound kernels land well above 1.5;
 - ``delta_vs_prev``: warm-wall ratios against ``BENCH_SCALE_r{N-1}``.
   The comparison is REFUSED (reason recorded, no numbers) when the
   previous artifact has another ``design`` or ``cpus``: a delta across
@@ -47,7 +45,7 @@ import os
 import re
 import sys
 
-from jvm_cell import REPO, host_cpus, run_cell
+from jvm_cell import REPO, run_cell
 
 # measurement-design version: bump whenever the cell shape changes so
 # no delta is ever computed across designs
@@ -55,8 +53,10 @@ DESIGN = "isolated-jvm-2trial-warm"
 TRIALS = 2
 PROBE_N = 5
 
+# linear-expected heavy kernels (the r9 two-decade set): measured at
+# every scale given, and the only kernels the decade ratio and the core
+# probe rank
 KERNELS = [
-    # linear-expected heavy kernels (the r9 two-decade set)
     "tpch_q1_pricing_summary",
     "medallion_star_revenue",
     "text_token_count",
@@ -70,14 +70,22 @@ KERNELS = [
     "ann_ivf_topk",
     "graph_pagerank_topk",
     "text_span_dedup_apply",
-    "dedup_incremental_minhash",
-    # the r8 one-split class: banded joins and pair generators whose
-    # serialization onto a few splits only shows a decade above the
-    # bench scale
+]
+
+# the r8 one-split class (banded joins and pair generators) plus the
+# incremental minhash pipeline: measured at the smallest scale given
+# only, as the sf1 sidecar did. Their serialization onto a few splits
+# already shows a decade above the bench scale, while their OUTPUT
+# grows faster than their input by definition (dedup_simhash_pairs
+# emits 16.8M rows at sf1): a decade higher they would measure their
+# output, not the engine, and their ~100x decade ratios would crowd
+# the linear kernels out of the core probe.
+SMALLEST_SCALE_ONLY = [
     "join_range_banded",
     "join_interval_overlap",
     "dedup_minhash_lsh_pairs",
     "dedup_simhash_pairs",
+    "dedup_incremental_minhash",
 ]
 
 
@@ -110,16 +118,19 @@ def _measure(
 def scale_bench(
     sf_dirs: list[str], cpus: int, prev: dict | None = None, cell=run_cell
 ) -> dict:
-    """Measure ``KERNELS`` over one or two scale dirs; ``cell`` runs
-    one (kernel, sf_dir, trials, cores) cell and returns its walls."""
+    """Measure ``KERNELS`` over one or two scale dirs and
+    ``SMALLEST_SCALE_ONLY`` over the smaller; ``cell`` runs one
+    (kernel, sf_dir, trials, cores) cell and returns its walls."""
     sf_dirs = sorted(sf_dirs, key=_scale)
     scales = [_scale(d) for d in sf_dirs]
     if len(scales) == 2 and abs(scales[1] / scales[0] - 10) > 1e-6:
         raise SystemExit(f"{sf_dirs} are not one decade apart")
     labels = [_label(d) for d in sf_dirs]
     walls = {
-        label: _measure(KERNELS, d, cpus, cell)
-        for label, d in zip(labels, sf_dirs)
+        label: _measure(
+            KERNELS + (SMALLEST_SCALE_ONLY if i == 0 else []), d, cpus, cell
+        )
+        for i, (label, d) in enumerate(zip(labels, sf_dirs))
     }
     result: dict = {
         "design": DESIGN, "cpus": cpus, "trials": TRIALS, "sf": walls
@@ -131,7 +142,7 @@ def scale_bench(
         result["decade_ratio"] = {
             n: round(top[n] / low[n], 2) for n in KERNELS if low[n]
         }
-    rank = result.get("decade_ratio", top)
+    rank = result.get("decade_ratio") or {n: top[n] for n in KERNELS}
     probed = sorted(rank, key=rank.get, reverse=True)[:PROBE_N]
     quarter = max(1, cpus // 4)
     slow = _measure(probed, sf_dirs[-1], quarter, cell)["warm"]
@@ -182,13 +193,15 @@ def main() -> int:
 
     # fail before any JVM starts: an unregistered kernel must not
     # abort the run halfway and lose the walls already measured
-    unknown = [n for n in KERNELS if n not in load_all()]
+    registry = load_all()
+    unknown = [n for n in KERNELS + SMALLEST_SCALE_ONLY if n not in registry]
     if unknown:
-        raise SystemExit(f"KERNELS not in registry: {unknown}")
+        raise SystemExit(f"kernels not in registry: {unknown}")
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     prev_path = os.path.join(REPO, f"BENCH_SCALE_r{args.round - 1:02d}.json")
     prev = json.load(open(prev_path)) if os.path.exists(prev_path) else None
-    result = {"round": args.round, **scale_bench(sf_dirs, host_cpus(), prev)}
+    result = {"round": args.round, **scale_bench(sf_dirs, cpus, prev)}
     out = os.path.join(REPO, f"BENCH_SCALE_r{args.round:02d}.json")
     with open(out, "w") as fh:
         json.dump(result, fh, indent=1)

@@ -59,7 +59,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aws_lakehouse_spark.registry import load_all  # noqa: E402
 from aws_lakehouse_spark.session import get_spark  # noqa: E402
-from jvm_cell import host_cpus  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -93,7 +92,7 @@ def _fmt(n: int) -> str:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = host_cpus()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     registry = load_all()
     names = list(
         dict.fromkeys(
@@ -175,21 +174,28 @@ def main() -> int:
 
     rc = 0
     if "--gate" in sys.argv:
-        rc = _gate(rows)
+        rc = _gate(rows, cpus)
     if "--accept" in sys.argv:
-        _accept(rows, sf_dir)
+        _accept(rows, sf_dir, cpus)
     return rc
 
 
-def _gate(rows) -> int:
+def _gate(rows, cpus: int) -> int:
     if not os.path.exists(BASELINE_PATH):
         print(
             "gate: no SHUFFLE_BASELINE.json — run --accept first "
             "to record one"
         )
         return 1
-    base = json.load(open(BASELINE_PATH))["queries"]
+    accepted = json.load(open(BASELINE_PATH))
+    base = accepted["queries"]
     failures, new = [], []
+    # shuffle partitions follow the core count, so volumes from
+    # another core count do not compare; the r10 baseline predates the
+    # field and ran on local[32]
+    if (base_cpus := accepted.get("cpus", 32)) != cpus:
+        failures.append(f"baseline taken on {base_cpus} cpus, run on {cpus}")
+        rows = []
     for name, d, _ in rows:
         b = base.get(name)
         if b is None:
@@ -207,7 +213,7 @@ def _gate(rows) -> int:
     if new:
         print(f"gate: {len(new)} queries not in baseline: {new}")
     verdict = "FAIL" if failures else "PASS"
-    base_round = json.load(open(BASELINE_PATH))["round"]
+    base_round = accepted["round"]
     print(
         f"shuffle gate vs r{base_round} baseline: {verdict}"
         + (f" — {failures}" if failures else "")
@@ -229,10 +235,11 @@ def _gate(rows) -> int:
     return 1 if failures else 0
 
 
-def _accept(rows, sf_dir: str) -> None:
+def _accept(rows, sf_dir: str, cpus: int) -> None:
     payload = {
         "round": int(os.environ.get("SPARK_GRAFT_ROUND", "0")),
         "sf_dir": sf_dir,
+        "cpus": cpus,
         "comment": "Per-query shuffle byte volumes from the accepted "
         "round's audit. --gate fails any query whose shuffle_write or "
         "shuffle_read grew >1.5x AND >1 MiB vs these. Promote "
