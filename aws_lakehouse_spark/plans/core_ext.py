@@ -1660,7 +1660,7 @@ def snapshot_stats_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert snapshot_write(
         spark, clustered, table, "overwrite", stats_cols=["o_orderkey"]
     ) == 0
-    planned, total = plan_pruned_files(table, "o_orderkey", 1000, 3000)
+    planned, total = plan_pruned_files(table, {"o_orderkey": (1000, 3000)})
     if total < 2 or not planned:
         # too few rows for a multi-file layout, or the fixed probe
         # range misses the data: pruning has nothing to certify
@@ -1668,7 +1668,7 @@ def snapshot_stats_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "o_orderstatus string, n_orders bigint, total_price double"
         )
     assert 0 < len(planned) < total, (planned, total)
-    pruned = read_snapshot_pruned(spark, table, "o_orderkey", 1000, 3000)
+    pruned = read_snapshot_pruned(spark, table, {"o_orderkey": (1000, 3000)})
     return (
         pruned.groupBy("o_orderstatus")
         .agg(
@@ -2049,7 +2049,7 @@ def snapshot_partition_evolution_q(
     new_files = set(_read_manifest(table, v1)["files"]) - files_v0
     assert files_v0 <= set(_read_manifest(table, v1)["files"])
     # a range inside the new regime plans only fine-spec files
-    planned, total = plan_pruned_files(table, "o_orderkey", 200, 350)
+    planned, total = plan_pruned_files(table, {"o_orderkey": (200, 350)})
     if total < 2 or not planned:
         # too few rows for the two-spec layout, or the fixed probe
         # range misses the data: no evolution pruning to certify
@@ -2059,9 +2059,7 @@ def snapshot_partition_evolution_q(
     assert 0 < len(planned) < total, (planned, total)
     assert set(planned) <= new_files, (planned, new_files)
     assert versions(table) == [v0, v1]
-    pruned = read_snapshot_pruned(
-        spark, table, "o_orderkey", 200, 350
-    )
+    pruned = read_snapshot_pruned(spark, table, {"o_orderkey": (200, 350)})
     return (
         pruned.groupBy("o_orderstatus")
         .agg(
@@ -2516,8 +2514,8 @@ def snapshot_optimize_zorder_q(
 
     from aws_lakehouse_spark.sources.snapshots import (
         optimize_zorder,
-        plan_pruned_files_multi,
-        read_snapshot_pruned_multi,
+        plan_pruned_files,
+        read_snapshot_pruned,
         snapshot_write,
     )
 
@@ -2540,7 +2538,7 @@ def snapshot_optimize_zorder_q(
         "o_custkey": (20, 60),
         "o_totalprice": (50000.0, 150000.0),
     }
-    before, total_before = plan_pruned_files_multi(table, preds)
+    before, total_before = plan_pruned_files(table, preds)
     # strict improvement is certifiable only when the ingest layout
     # leaves >1 file overlapping the probe box; on layouts where the
     # probe is already answered from <=1 file (tiny tables, or probe
@@ -2569,7 +2567,7 @@ def snapshot_optimize_zorder_q(
             },
             n_files=8,
         )
-        after, total_after = plan_pruned_files_multi(table, preds)
+        after, total_after = plan_pruned_files(table, preds)
         if not (
             len(after) / total_after < len(before) / total_before
             and len(after) < total_after
@@ -2579,7 +2577,7 @@ def snapshot_optimize_zorder_q(
                 f"before {len(before)}/{total_before}, "
                 f"after {len(after)}/{total_after}"
             )
-    pruned = read_snapshot_pruned_multi(spark, table, preds)
+    pruned = read_snapshot_pruned(spark, table, preds)
     return (
         pruned.groupBy("o_orderstatus")
         .agg(

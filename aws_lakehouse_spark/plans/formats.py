@@ -352,8 +352,8 @@ def join_bucketed_colocated_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def layout_zorder_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_lakehouse_spark.layout import zorder_code
     from aws_lakehouse_spark.sources.snapshots import (
-        plan_pruned_files_multi,
-        read_snapshot_pruned_multi,
+        plan_pruned_files,
+        read_snapshot_pruned,
         snapshot_write,
     )
 
@@ -380,7 +380,7 @@ def layout_zorder_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_cols=["user_id", "value"],
     ) == 0
     preds = {"user_id": (3, 9), "value": (10.0, 60.0)}
-    planned, total = plan_pruned_files_multi(table, preds)
+    planned, total = plan_pruned_files(table, preds)
     if total < 2 or not planned:
         # too few rows for a multi-file Z-order layout, or the fixed
         # probe box misses the data: pruning has nothing to certify
@@ -388,7 +388,7 @@ def layout_zorder_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "event_type string, n_events bigint, total_value double"
         )
     assert 0 < len(planned) < total, (planned, total)
-    pruned = read_snapshot_pruned_multi(spark, table, preds)
+    pruned = read_snapshot_pruned(spark, table, preds)
     return (
         pruned.groupBy("event_type")
         .agg(

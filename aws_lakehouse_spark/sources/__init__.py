@@ -16,7 +16,6 @@ from aws_lakehouse_spark.sources.writers import (
     sink_csv_path,
     sink_json_path,
     create_table_if_absent,
-    write_with_fallback,
     upsert_table,
 )
 from aws_lakehouse_spark.sources.ingest import ingest_copy
@@ -41,7 +40,6 @@ __all__ = [
     "sink_csv_path",
     "sink_json_path",
     "create_table_if_absent",
-    "write_with_fallback",
     "upsert_table",
     "ingest_copy",
     "compact_files",

@@ -5,9 +5,10 @@ source prefix, filters to ``.parquet``, and copies each object into
 the Bronze layout *iff absent* (idempotent daily re-runs,
 ``:45-53,183-186,242-245``). Engine equivalent without boto3: Spark
 reads the source directly and writes the Bronze partition layout;
-idempotency is a target-existence check — file-level bookkeeping
-replaced by partition-level presence, which is what scales (one
-listing per partition instead of one HEAD per object).
+idempotency is ONE existence check on the whole dataset directory
+``{bronze_root}/{dataset}`` — not per object, and not per partition:
+a target that already holds any data is skipped entirely, so new
+partitions for a later day are NOT ingested into an existing target.
 """
 
 from __future__ import annotations
@@ -41,8 +42,9 @@ def ingest_copy(
     ``{bronze_root}/{dataset}/KEY=value/...`` — the same layout the
     reference's Lambda constructs by string-formatting object keys
     (``nyc_tlc_ingest.py:30-37``), except Spark's ``partitionBy``
-    produces it natively. Skips entirely when the target already has
-    data (idempotent re-run).
+    produces it natively. Skips entirely when the dataset directory
+    already has any data (idempotent re-run); the check does not look
+    at which partitions the source would add.
 
     Returns a small manifest dict (driver-side bookkeeping only —
     no per-row driver work).

@@ -2,14 +2,12 @@
 
 The reference runs three Iceberg procedures per table nightly
 (``glue-jobs/iceberg_maintenance.py:47-81``): expire_snapshots,
-rewrite_data_files (binpack, 256 MB), remove_orphan_files. These are
-format-bound; the engine is format-aware:
+rewrite_data_files (binpack, 256 MB), remove_orphan_files. The
+engine has one table format, the manifest log of
+``sources.snapshots``:
 
-- Delta/Iceberg catalog available → issue the native procedure;
-- table carries the engine's own manifest log
-  (``sources.snapshots`` — Delta/Iceberg jars are unobtainable in
-  this sandbox, see that module's probe notes) → REAL snapshot
-  expiry and orphan-file removal against the manifest log;
+- table carries a manifest log → REAL snapshot expiry and
+  orphan-file removal against it;
 - bare plain-Parquet tables → compaction is a real
   repartition-rewrite (small-file problem is format-independent);
   snapshot/orphan ops are documented no-ops (no snapshot metadata
@@ -26,13 +24,6 @@ import math
 from pyspark.sql import SparkSession
 
 TARGET_FILE_BYTES = 256 * 1024 * 1024  # ref iceberg_maintenance.py:66
-
-
-def _is_delta(spark: SparkSession) -> bool:
-    try:
-        return "io.delta" in spark.conf.get("spark.sql.extensions", "")
-    except Exception:
-        return False
 
 
 def _table_location(spark: SparkSession, table: str) -> str | None:
@@ -63,12 +54,8 @@ def expire_snapshots(
     table_path: str | None = None,
 ) -> dict:
     """M1 — drop table-format snapshots older than the retention
-    window. Delta: VACUUM; manifest-logged table (sources.snapshots):
-    real manifest expiry; bare plain Parquet: no snapshot metadata
-    exists → no-op."""
-    if _is_delta(spark):
-        spark.sql(f"VACUUM {table} RETAIN {retain_days * 24} HOURS")
-        return {"table": table, "op": "expire_snapshots", "applied": True}
+    window. Manifest-logged table (sources.snapshots): real manifest
+    expiry; bare plain Parquet: no snapshot metadata exists → no-op."""
     path = _snapshot_log_path(spark, table, table_path)
     if path:
         from aws_lakehouse_spark.sources import snapshots
@@ -219,12 +206,19 @@ def run_maintenance(
 ) -> list[dict]:
     """M4 — per-table loop with error isolation
     (``iceberg_maintenance.py:34-44,83-84``): one bad table never
-    blocks the rest."""
+    blocks the rest. Each table's location is looked up once and
+    serves both snapshot-log ops (compaction keeps a managed table's
+    location)."""
     results = []
     for table in tables:
-        for op in (expire_snapshots, compact_files, remove_orphans):
+        path = _table_location(spark, table)
+        for op, kw in (
+            (expire_snapshots, {"table_path": path}),
+            (compact_files, {}),
+            (remove_orphans, {"table_path": path}),
+        ):
             try:
-                results.append(op(spark, table))
+                results.append(op(spark, table, **kw))
             except Exception as exc:  # isolate, continue
                 results.append(
                     {"table": table, "op": op.__name__, "error": str(exc)}

@@ -1,21 +1,18 @@
-"""Minimal snapshot/transaction log over plain-Parquet tables.
+"""Minimal snapshot/transaction log over plain-Parquet tables — the
+engine's only table format.
 
 The reference's Silver/Gold tables are Iceberg: ACID append,
 snapshots, time travel, expire_snapshots / remove_orphan_files
 procedures (``glue-jobs/noaa_ghcn_bronze_to_silver.py:108-143``,
-``glue-jobs/iceberg_maintenance.py:47-81``). Delta/Iceberg jars are
-unobtainable in this sandbox — probed: no ``delta``/``pyiceberg``
-package, no delta/iceberg jars under pyspark/jars, no ivy cache, no
-network for ``--packages`` resolution — so this module implements
+``glue-jobs/iceberg_maintenance.py:47-81``). This module implements
 the table-format *idea* from first principles, the way Delta's log
 works: a table is a directory of immutable parquet files plus an
 ordered log of manifests, where manifest N lists the files live at
-version N. On a cluster where the Delta runtime IS usable, the core
-surface (``snapshot_write`` / ``read_snapshot`` / ``merge_into`` /
-``rewrite_data_files``) delegates to the real format per table — see
-``sources/format_backend.py``; the manifest log remains both the
-offline implementation and the home of the extensions (WAP, branches,
-segments, stats/bloom manifest pruning).
+version N. WAP staging, branches, tags, segments and stats/bloom
+manifest pruning all live on the same log. A directory that holds
+a Delta table's ``_delta_log`` is refused by every write and read
+with ``RuntimeError``, so the log never adopts or corrupts a table
+another program wrote.
 
 - writes go through ``snapshot_write``: new part files land in the
   directory (parquet append — filenames are already UUID-unique),
@@ -24,7 +21,9 @@ segments, stats/bloom manifest pruning).
   what makes time travel and snapshot expiry meaningful;
 - ``read_snapshot(..., version=N)`` is a real time-travel read: it
   hands Catalyst exactly manifest N's file list (scan prunes to
-  those files; all pushdown still applies);
+  those files; all pushdown still applies). Every reader and planner
+  resolves ``version=None`` to main's latest PUBLISHED version and
+  raises ``ValueError`` on an empty or staged-only log;
 - ``expire_snapshots`` (M1) drops manifests beyond the retention
   window — real work with an ``applied: True`` result;
 - ``remove_orphans`` (M3) diffs the directory against the union of
@@ -69,15 +68,16 @@ def _log_path(table_path: str) -> str:
     return os.path.join(table_path, LOG_DIR)
 
 
-def _backend(spark: SparkSession, table_path: str) -> str:
-    """Per-table backend routing: 'delta' when the real format serves
-    this table (jars + extension present, or the table was born
-    Delta — see ``sources/format_backend.py``), else 'manifest'. In
-    the jar-less sandbox this is always 'manifest', so routing is a
-    no-op by construction."""
-    from aws_lakehouse_spark.sources import format_backend as _fmt
-
-    return _fmt.backend_for(spark, table_path)
+def _refuse_foreign(table_path: str) -> None:
+    """A directory holding a Delta ``_delta_log`` was written by
+    another program: reading it as bare parquet would return
+    uncommitted or tombstoned files as live rows, and committing a
+    manifest into it would fork the table's history. Refuse both."""
+    if os.path.isdir(os.path.join(table_path, "_delta_log")):
+        raise RuntimeError(
+            f"{table_path!r} is a Delta table (it holds _delta_log); "
+            "the snapshot log neither reads nor writes foreign tables"
+        )
 
 
 def _manifest_file(table_path: str, version: int) -> str:
@@ -297,36 +297,7 @@ def snapshot_write(
         raise ValueError(f"snapshot_write mode must be append/overwrite, got {mode!r}")
     if staged_id is not None and branch is not None:
         raise ValueError("staged_id and branch are mutually exclusive")
-    if _backend(spark, table_path) == "delta":
-        # delegate the core surface to the real format (r7 verdict
-        # item 4); the manifest log's extensions have no Delta
-        # translation, so asking for them on a table that already IS
-        # Delta is an error, never a silent semantic drop
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
-        extras = {
-            "stats_cols": stats_cols,
-            "bloom_cols": bloom_cols,
-            "staged_id": staged_id,
-            "branch": branch,
-            "segmented": segmented or None,
-        }
-        bad = sorted(k for k, v in extras.items() if v)
-        if not bad:
-            return _fmt.delta_write(spark, df, table_path, mode)
-        if os.path.isdir(os.path.join(table_path, _fmt.DELTA_LOG_DIR)):
-            raise ValueError(
-                f"snapshot_write option(s) {bad} are manifest-log "
-                "extensions; not supported on a Delta-backed table"
-            )
-        # a BRAND-NEW table asking for manifest-only extensions is
-        # born on the manifest backend — the only one that implements
-        # them. Routing it to Delta would make the engine's own
-        # stats/bloom/WAP/branch queries raise precisely on the
-        # Delta-capable clusters format_backend exists for (r9
-        # advice). backend_for keeps reading it as manifest from the
-        # first commit on (birth format sticks), so every later read
-        # and write of this table stays consistent.
+    _refuse_foreign(table_path)
     if branch is not None:
         resolve_branch(table_path, branch)  # must exist; raises otherwise
     os.makedirs(_log_path(table_path), exist_ok=True)
@@ -458,29 +429,69 @@ def snapshot_write(
     return version
 
 
-def _commit_manifest(table_path: str, version: int, manifest: dict) -> None:
-    """Atomically publish ``manifest`` as ``version`` — put-if-absent.
-
-    The tmp file is hard-linked to the final name (atomic, fails with
-    EEXIST if any other writer got there first) rather than
-    ``os.replace``d (which would silently clobber the winner). A
-    losing writer raises :class:`SnapshotConflictError`; its data
-    files stay on disk, unreferenced by any manifest, until
-    ``remove_orphans`` reclaims them.
-    """
-    final = _manifest_file(table_path, version)
-    tmp = final + f".{os.getpid()}.{id(manifest)}.tmp"
+def _put_if_absent(final: str, content: dict) -> bool:
+    """Write ``content`` as JSON at ``final`` only if nothing is there;
+    False when another writer got there first. The tmp file is
+    hard-linked to the final name (atomic, fails with EEXIST) rather
+    than ``os.replace``d (which would silently clobber the winner).
+    Manifests, tags and branch refs all commit through here."""
+    tmp = f"{final}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
+        json.dump(content, fh)
     try:
         os.link(tmp, final)
+        return True
     except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
+
+
+def _commit_manifest(table_path: str, version: int, manifest: dict) -> None:
+    """Atomically publish ``manifest`` as ``version`` — put-if-absent.
+    A losing writer raises :class:`SnapshotConflictError`; its data
+    files stay on disk, unreferenced by any manifest, until
+    ``remove_orphans`` reclaims them."""
+    if not _put_if_absent(_manifest_file(table_path, version), manifest):
         raise SnapshotConflictError(
             f"version {version} at {table_path!r} was committed by "
             f"another writer; re-read the table state and retry"
-        ) from None
-    finally:
-        os.remove(tmp)
+        )
+
+
+def _commit_copy(
+    table_path: str,
+    version: int,
+    src_table: str,
+    src_version: int,
+    provenance: dict,
+    prefix: str = "",
+) -> int:
+    """Commit ``version`` of ``table_path`` as a metadata-only copy of
+    ``src_table``'s manifest ``src_version``: its files, stats, bloom
+    and complete per-file row counts (a legacy source is backfilled
+    from footers, so the copy is countable without a scan). Each file
+    reference becomes ``os.path.join(prefix, f)`` — the identity for
+    the default empty prefix, an absolute path into the source for a
+    shallow clone. ``provenance`` (mode plus where the files came
+    from) heads the manifest. Returns ``version``."""
+    src = _read_manifest(src_table, src_version)
+    ref = {f: os.path.join(prefix, f) for f in src["files"]}
+    rows = _complete_rows(src_table, src)
+    manifest = {
+        "version": version,
+        **provenance,
+        "committed_at": time.time(),
+        "files": sorted(ref.values()),
+    }
+    for key in ("stats", "bloom"):
+        if src.get(key):
+            manifest[key] = {
+                ref[f]: meta for f, meta in src[key].items() if f in ref
+            }
+    manifest["rows"] = {ref[f]: n for f, n in rows.items()}
+    _commit_manifest(table_path, version, manifest)
+    return version
 
 
 def published_versions(table_path: str) -> list[int]:
@@ -511,45 +522,60 @@ def publish_staged(table_path: str, staged_id: str) -> int:
         raise ValueError(
             f"no staged snapshot with id {staged_id!r} at {table_path!r}"
         )
-    target = _read_manifest(table_path, staged_v)
-    vs = versions(table_path)
-    new_version = vs[-1] + 1
-    manifest = {
-        "version": new_version,
-        "mode": "publish",
-        "published_from": staged_v,
-        "staged_id": staged_id,
-        "committed_at": time.time(),
-        "files": target["files"],
-    }
-    if target.get("stats"):
-        manifest["stats"] = target["stats"]
-    if target.get("bloom"):
-        manifest["bloom"] = target["bloom"]
-    # always complete: publishing a legacy staged snapshot backfills
-    # its per-file counts from footers, so the published commit (and
-    # everything downstream) is metadata-only countable
-    manifest["rows"] = _complete_rows(table_path, target)
-    _commit_manifest(table_path, new_version, manifest)
-    return new_version
+    return _commit_copy(
+        table_path,
+        versions(table_path)[-1] + 1,
+        table_path,
+        staged_v,
+        {
+            "mode": "publish",
+            "published_from": staged_v,
+            "staged_id": staged_id,
+        },
+    )
 
 
-def _current_published_version(table_path: str) -> int:
-    """Latest PUBLISHED version, with :func:`read_snapshot`'s error
-    contract: maintenance ops (OPTIMIZE, rewrite_data_files) must
-    read the same head a plain read would — indexing a staged-only
-    log would silently rewrite unpublished WAP data, and an empty
-    log must raise the same ``ValueError``, not a bare IndexError."""
+def _resolve_version(table_path: str, version: int | None = None) -> int:
+    """The version a read, plan or maintenance op works on. ``None``
+    means main's latest PUBLISHED version — never a staged WAP batch
+    awaiting audit nor a branch commit; an explicit ``version`` may
+    name either (that is how a stage is audited). Raises
+    ``ValueError`` on an empty log, a staged-only log with no
+    explicit version, and a version that is not committed."""
+    _refuse_foreign(table_path)
     vs = versions(table_path)
     if not vs:
         raise ValueError(f"no snapshots at {table_path}")
-    pub = published_versions(table_path)
-    if not pub:
+    if version is None:
+        pub = published_versions(table_path)
+        if not pub:
+            raise ValueError(
+                f"no published snapshots at {table_path} "
+                f"(staged-only history; publish or read by version)"
+            )
+        return pub[-1]
+    if version not in vs:
         raise ValueError(
-            f"no published snapshots at {table_path} "
-            f"(staged-only history; publish or read by version)"
+            f"version {version} not in {vs} (expired or never committed)"
         )
-    return pub[-1]
+    return version
+
+
+def _read_files(
+    spark: SparkSession,
+    table_path: str,
+    files: list[str],
+    merge_schema: bool = False,
+) -> DataFrame:
+    """Scan exactly ``files`` (relative to ``table_path``, or absolute
+    for a shallow clone's references); no files reads as the table's
+    zero-row frame."""
+    if not files:
+        return spark.read.parquet(table_path).limit(0)
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*[os.path.join(table_path, f) for f in files])
 
 
 def read_snapshot(
@@ -561,83 +587,74 @@ def read_snapshot(
     published, though an explicit ``version`` can audit them).
     Column pruning and filter pushdown apply per-file as with any
     parquet scan."""
-    if _backend(spark, table_path) == "delta":
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
-        return _fmt.delta_read(spark, table_path, version)
-    if version is None:
-        v = _current_published_version(table_path)
-    else:
-        v = version
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs} (expired or never committed)")
+    v = _resolve_version(table_path, version)
     files = _read_manifest(table_path, v)["files"]
-    if not files:
-        return spark.read.parquet(table_path).limit(0)
-    return spark.read.parquet(*[os.path.join(table_path, f) for f in files])
+    return _read_files(spark, table_path, files)
+
+
+def _plan_files(
+    table_path: str, version: int | None, meta_key: str, excludes
+) -> tuple[list[str], int]:
+    """Manifest scan planning: keep each live file unless
+    ``excludes(file_meta)`` proves it holds no match, where
+    ``file_meta`` is the file's entry under ``meta_key`` ("stats" or
+    "bloom"; empty when none was recorded, which never excludes).
+    Returns ``(planned_files, total_live_files)``."""
+    m = _read_manifest(table_path, _resolve_version(table_path, version))
+    meta = m.get(meta_key, {})
+    planned = [f for f in m["files"] if not excludes(meta.get(f, {}))]
+    return planned, len(m["files"])
 
 
 def plan_pruned_files(
     table_path: str,
-    col: str,
-    lo,
-    hi,
+    preds: dict,
     version: int | None = None,
 ) -> tuple[list[str], int]:
-    """Iceberg-style scan planning: the manifest's per-file min/max
-    stats select only the files whose ``[min, max]`` range for
-    ``col`` intersects ``[lo, hi]``. Files without recorded stats
-    for ``col`` are kept (pruning must never drop a candidate).
+    """Iceberg-style conjunctive scan planning: keep a file only if
+    EVERY ``col: (lo, hi)`` predicate intersects that file's recorded
+    min/max (missing stats for a column keep the file — never skip a
+    candidate). This is the planner a Z-ORDERED layout feeds: Morton
+    clustering makes every file's footer range tight on every
+    clustered column simultaneously, so an N-dimensional range query
+    prunes multiplicatively instead of on one leading column.
     Returns ``(planned_files, total_live_files)``."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    m = _read_manifest(table_path, v)
-    stats = m.get("stats", {})
-    planned = []
-    for f in m["files"]:
-        rng = stats.get(f, {}).get(col)
-        if rng is None or not (hi < rng[0] or lo > rng[1]):
-            planned.append(f)
-    return planned, len(m["files"])
+
+    def excludes(fstats: dict) -> bool:
+        return any(
+            (rng := fstats.get(col)) is not None
+            and (hi < rng[0] or lo > rng[1])
+            for col, (lo, hi) in preds.items()
+        )
+
+    return _plan_files(table_path, version, "stats", excludes)
 
 
 def read_snapshot_pruned(
     spark: SparkSession,
     table_path: str,
-    col: str,
-    lo,
-    hi,
+    preds: dict,
     version: int | None = None,
 ) -> DataFrame:
-    """Range read that opens ONLY the stat-intersecting files (plus
-    the exact residual filter — files are pruned, rows inside a
-    surviving file still get the predicate). This is the
+    """Ranged read that opens ONLY the stat-intersecting files
+    (conjunctive pruning over ``{col: (lo, hi)}``), with the exact
+    residual filters applied to surviving rows. This is the
     metadata-pruned scan that keeps a key-ranged query over a
     petabyte table proportional to the files actually touched —
     the same job hive partitioning does for dates, but driven by
     footer stats on ANY clustered column, no directory layout
     needed."""
+    import functools
+    import operator
+
     import pyspark.sql.functions as F
 
-    planned, _total = plan_pruned_files(table_path, col, lo, hi, version)
-    if not planned:
-        return (
-            spark.read.parquet(table_path)
-            .limit(0)
-            .filter(F.col(col).between(lo, hi))
-        )
-    return (
-        spark.read.parquet(
-            *[os.path.join(table_path, f) for f in planned]
-        ).filter(F.col(col).between(lo, hi))
+    planned, _total = plan_pruned_files(table_path, preds, version)
+    residual = functools.reduce(
+        operator.and_,
+        [F.col(c).between(lo, hi) for c, (lo, hi) in preds.items()],
     )
+    return _read_files(spark, table_path, planned).filter(residual)
 
 
 def read_snapshot_incremental(
@@ -648,86 +665,27 @@ def read_snapshot_incremental(
 ) -> DataFrame:
     """Iceberg incremental-scan semantics: read ONLY the data files
     ADDED after ``since_version`` up to ``to_version`` (default
-    latest) — the input an incremental consumer (downstream ETL, a
-    backfill, a CDC-less append feed) processes per cycle. A
+    latest published) — the input an incremental consumer (downstream
+    ETL, a backfill, a CDC-less append feed) processes per cycle. A
     metadata-only diff of the two manifests' file lists; cost is
     proportional to the files appended, never the table. Overwritten
     files (removed then re-added) count as added — same as Iceberg's
     append-scan over an overwrite boundary."""
-    vs = versions(table_path)
-    if since_version not in vs:
-        raise ValueError(f"version {since_version} not in {vs}")
-    v_to = (published_versions(table_path) or vs)[-1] if to_version is None else to_version
-    if v_to not in vs:
-        raise ValueError(f"version {v_to} not in {vs}")
-    base = set(_read_manifest(table_path, since_version)["files"])
-    now = _read_manifest(table_path, v_to)["files"]
-    added = [f for f in now if f not in base]
-    if not added:
-        return spark.read.parquet(table_path).limit(0)
-    return spark.read.parquet(
-        *[os.path.join(table_path, f) for f in added]
+    base = set(
+        _read_manifest(
+            table_path, _resolve_version(table_path, since_version)
+        )["files"]
     )
+    now = _read_manifest(table_path, _resolve_version(table_path, to_version))
+    added = [f for f in now["files"] if f not in base]
+    return _read_files(spark, table_path, added)
 
 
-def plan_pruned_files_multi(
-    table_path: str,
-    preds: dict,
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """Conjunctive multi-column scan planning: keep a file only if
-    EVERY ``col: (lo, hi)`` predicate intersects that file's recorded
-    min/max (missing stats for a column keep the file — never skip a
-    candidate). This is the planner a Z-ORDERED layout feeds: Morton
-    clustering makes every file's footer range tight on every
-    clustered column simultaneously, so an N-dimensional range query
-    prunes multiplicatively instead of on one leading column."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    m = _read_manifest(table_path, v)
-    stats = m.get("stats", {})
-    planned = []
-    for f in m["files"]:
-        fstats = stats.get(f, {})
-        keep = True
-        for col, (lo, hi) in preds.items():
-            rng = fstats.get(col)
-            if rng is not None and (hi < rng[0] or lo > rng[1]):
-                keep = False
-                break
-        if keep:
-            planned.append(f)
-    return planned, len(m["files"])
-
-
-def read_snapshot_pruned_multi(
-    spark: SparkSession,
-    table_path: str,
-    preds: dict,
-    version: int | None = None,
-) -> DataFrame:
-    """Multi-column ranged read over only the stat-intersecting files
-    (conjunctive pruning), with the exact residual filters applied to
-    surviving rows."""
-    import functools
-    import operator
-
-    import pyspark.sql.functions as F
-
-    planned, _total = plan_pruned_files_multi(table_path, preds, version)
-    residual = functools.reduce(
-        operator.and_,
-        [F.col(c).between(lo, hi) for c, (lo, hi) in preds.items()],
-    )
-    if not planned:
-        return spark.read.parquet(table_path).limit(0).filter(residual)
-    return spark.read.parquet(
-        *[os.path.join(table_path, f) for f in planned]
-    ).filter(residual)
+def _recorded_cols(manifest: dict, meta_key: str) -> list[str]:
+    """Columns the manifest records ``meta_key`` ("stats" or "bloom")
+    for on any file — the skipping surface a rewrite carries over."""
+    per_file = manifest.get(meta_key, {}).values()
+    return sorted({c for fmeta in per_file for c in fmeta})
 
 
 def optimize_zorder(
@@ -754,7 +712,7 @@ def optimize_zorder(
     usually ARRIVES clustered by ingest time, while queries filter on
     other columns; re-clustering periodically makes every file's
     footer range tight on every Z-ordered column simultaneously, so
-    ``plan_pruned_files_multi``'s conjunctive pruning drops from
+    ``plan_pruned_files``' conjunctive pruning drops from
     "every file overlaps" to a cell of the file grid. Returns the
     committed version.
 
@@ -769,20 +727,15 @@ def optimize_zorder(
     layout (the rewrite is one fresh segment either way)."""
     from aws_lakehouse_spark.layout import zorder_code
 
-    cur_v = _current_published_version(table_path)
+    cur_v = _resolve_version(table_path)
     cur_m = _read_manifest(table_path, cur_v)
     if stats_cols is None:
-        carried = {
-            c for fstats in cur_m.get("stats", {}).values() for c in fstats
-        }
-        stats_cols = sorted(set(col_ranges) | carried)
+        carried = _recorded_cols(cur_m, "stats")
+        stats_cols = sorted(set(col_ranges) | set(carried))
     if bloom_cols is None:
-        carried_bloom = {
-            c for fbloom in cur_m.get("bloom", {}).values() for c in fbloom
-        }
-        bloom_cols = sorted(carried_bloom)
+        bloom_cols = _recorded_cols(cur_m, "bloom")
 
-    current = read_snapshot(spark, table_path)
+    current = read_snapshot(spark, table_path, cur_v)
     clustered = (
         current.withColumn("__z", zorder_code(col_ranges, bits))
         .repartitionByRange(n_files, "__z")
@@ -816,22 +769,12 @@ def rewrite_data_files(
     carries through, same policy as :func:`optimize_zorder`; unlike
     Z-ordering this preserves no clustering — it is the cheap
     rewrite you run hourly, with OPTIMIZE ZORDER the periodic one.
-    Returns {files_before, files_after, version}. Delta-backed
-    tables run the real ``OPTIMIZE`` (Delta sizes output files
-    itself, so ``target_files`` does not apply there)."""
-    if _backend(spark, table_path) == "delta":
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
-        return _fmt.delta_rewrite_data_files(spark, table_path)
-    cur_v = _current_published_version(table_path)
+    Returns {files_before, files_after, version}."""
+    cur_v = _resolve_version(table_path)
     cur_m = _read_manifest(table_path, cur_v)
-    stats_cols = sorted(
-        {c for fstats in cur_m.get("stats", {}).values() for c in fstats}
-    )
-    bloom_cols = sorted(
-        {c for fbloom in cur_m.get("bloom", {}).values() for c in fbloom}
-    )
-    current = read_snapshot(spark, table_path)
+    stats_cols = _recorded_cols(cur_m, "stats")
+    bloom_cols = _recorded_cols(cur_m, "bloom")
+    current = read_snapshot(spark, table_path, cur_v)
     v = snapshot_write(
         spark,
         current.coalesce(target_files),
@@ -946,20 +889,13 @@ def plan_bloom_pruned_files(
     ``value``. Files without a recorded bloom for ``col`` are kept
     (pruning must never drop a candidate). Returns
     ``(planned_files, total_live_files)``."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    m = _read_manifest(table_path, v)
-    blooms = m.get("bloom", {})
-    planned = []
-    for f in m["files"]:
-        hx = blooms.get(f, {}).get(col)
-        if hx is None or _bloom_maybe_contains(hx, value):
-            planned.append(f)
-    return planned, len(m["files"])
+    return _plan_files(
+        table_path,
+        version,
+        "bloom",
+        lambda fbloom: col in fbloom
+        and not _bloom_maybe_contains(fbloom[col], value),
+    )
 
 
 def read_snapshot_bloom_pruned(
@@ -978,15 +914,7 @@ def read_snapshot_bloom_pruned(
     import pyspark.sql.functions as F
 
     planned, _total = plan_bloom_pruned_files(table_path, col, value, version)
-    if not planned:
-        return (
-            spark.read.parquet(table_path)
-            .limit(0)
-            .filter(F.col(col) == value)
-        )
-    return spark.read.parquet(
-        *[os.path.join(table_path, f) for f in planned]
-    ).filter(F.col(col) == value)
+    return _read_files(spark, table_path, planned).filter(F.col(col) == value)
 
 
 def expire_snapshots(
@@ -1147,15 +1075,8 @@ def delete_where(
     """
     import pyspark.sql.functions as F  # noqa: F401 (Column coercion)
 
-    pub = published_versions(table_path)
-    vs = versions(table_path)
-    if not pub and not vs:
-        # preserve the pre-manifest-sum error contract: a table with
-        # no snapshots is a ValueError, not a bare IndexError from
-        # versions()[-1]
-        raise ValueError(f"no snapshots at {table_path}")
-    base_v = pub[-1] if pub else vs[-1]
-    current = read_snapshot(spark, table_path)
+    base_v = _resolve_version(table_path)
+    current = read_snapshot(spark, table_path, base_v)
     cond = predicate if not isinstance(predicate, str) else F.expr(predicate)
     # Iceberg/Delta DELETE removes rows where the predicate is TRUE;
     # rows where it evaluates NULL (three-valued logic, e.g. a
@@ -1209,18 +1130,9 @@ def read_snapshot_evolved(
     Plain ``read_snapshot`` hands Catalyst one file list and lets
     parquet's own schema resolution pick a winner; this variant sets
     ``mergeSchema`` so heterogeneous manifests read correctly."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
+    v = _resolve_version(table_path, version)
     files = _read_manifest(table_path, v)["files"]
-    if not files:
-        return spark.read.parquet(table_path).limit(0)
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_path, f) for f in files]
-    )
+    return _read_files(spark, table_path, files, merge_schema=True)
 
 
 def merge_into(
@@ -1262,34 +1174,8 @@ def merge_into(
     shape); the duplicate-key guard is a count-aggregate on the
     source keyed the same way, so it reuses the join's partitioning.
     Copy-on-write commit like :func:`delete_where`.
-
-    On a Delta-backed table (``sources/format_backend.py``) the
-    default surface — update-all / insert-all / optional matched
-    delete — delegates to the real ``DeltaTable.merge`` (target
-    aliased ``t``, source ``s``, so a Delta-side delete condition
-    uses Delta's own alias convention); custom
-    ``when_matched_update`` assignments are manifest-only (their
-    ``__src_`` reference convention has no faithful translation).
     """
     import pyspark.sql.functions as F
-
-    if _backend(spark, table_path) == "delta":
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
-        if when_matched_update is not None:
-            raise ValueError(
-                "custom when_matched_update assignments are a "
-                "manifest-log extension; use the update-all default "
-                "on Delta-backed tables"
-            )
-        return _fmt.delta_merge(
-            spark,
-            table_path,
-            source,
-            on,
-            when_matched_delete=when_matched_delete,
-            when_not_matched_insert=when_not_matched_insert,
-        )
 
     target = read_snapshot(spark, table_path)
     t_cols = target.columns
@@ -1368,29 +1254,16 @@ def rollback_to(table_path: str, version: int) -> int:
     audit, and the restore itself is one more commit that readers
     pick up atomically. Metadata-only: no data files move or rewrite,
     so a restore of a petabyte table costs one manifest write.
+    The restored table keeps the target's stats/bloom pruning.
     Returns the newly committed version."""
-    vs = versions(table_path)
-    if version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
-    target = _read_manifest(table_path, version)
-    new_version = vs[-1] + 1
-    manifest = {
-        "version": new_version,
-        "mode": "rollback",
-        "rolled_back_to": version,
-        "committed_at": time.time(),
-        "files": target["files"],
-    }
-    if target.get("stats"):
-        # carry the target's per-file stats so a restored table keeps
-        # its min/max scan pruning
-        manifest["stats"] = target["stats"]
-    if target.get("bloom"):
-        manifest["bloom"] = target["bloom"]
-    # restoring a legacy version backfills its counts from footers
-    manifest["rows"] = _complete_rows(table_path, target)
-    _commit_manifest(table_path, new_version, manifest)
-    return new_version
+    version = _resolve_version(table_path, version)
+    return _commit_copy(
+        table_path,
+        versions(table_path)[-1] + 1,
+        table_path,
+        version,
+        {"mode": "rollback", "rolled_back_to": version},
+    )
 
 
 def clone_snapshot(
@@ -1414,42 +1287,23 @@ def clone_snapshot(
     for its clones, exactly as VACUUM on a Delta source breaks its
     shallow clones.
     """
-    vs = versions(src_table)
-    if not vs:
-        raise ValueError(f"no snapshots at {src_table}")
-    v = (published_versions(src_table) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
+    v = _resolve_version(src_table, version)
+    _refuse_foreign(dst_table)
     if versions(dst_table):
         raise ValueError(f"clone target {dst_table!r} already has snapshots")
-    src = _read_manifest(src_table, v)
     src_root = os.path.abspath(src_table)
+    os.makedirs(_log_path(dst_table), exist_ok=True)
     # absolute refs: read_snapshot's os.path.join(dst, f) returns f
     # unchanged when f is absolute, so the clone's reads, appends and
     # copy-on-write DML work with no special-casing anywhere
-    remap = {f: os.path.join(src_root, f) for f in src["files"]}
-    os.makedirs(_log_path(dst_table), exist_ok=True)
-    manifest = {
-        "version": 0,
-        "mode": "clone",
-        "cloned_from": {"table": src_root, "version": v},
-        "committed_at": time.time(),
-        "files": sorted(remap.values()),
-    }
-    if src.get("stats"):
-        manifest["stats"] = {
-            remap[f]: s for f, s in src["stats"].items() if f in remap
-        }
-    if src.get("bloom"):
-        manifest["bloom"] = {
-            remap[f]: b for f, b in src["bloom"].items() if f in remap
-        }
-    # completed against the SOURCE (absolute refs resolve there), then
-    # remapped: a clone of a legacy table is fully counted from birth
-    src_rows = _complete_rows(src_table, src)
-    manifest["rows"] = {remap[f]: src_rows[f] for f in src["files"]}
-    _commit_manifest(dst_table, 0, manifest)
-    return 0
+    return _commit_copy(
+        dst_table,
+        0,
+        src_table,
+        v,
+        {"mode": "clone", "cloned_from": {"table": src_root, "version": v}},
+        prefix=src_root,
+    )
 
 
 def tag_snapshot(
@@ -1461,28 +1315,18 @@ def tag_snapshot(
     manifests and commit put-if-absent like them: re-tagging an
     existing name raises :class:`SnapshotConflictError` rather than
     silently moving a published label. Returns the tagged version."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
+    v = _resolve_version(table_path, version)
     if "/" in name or name.startswith("."):
         raise ValueError(f"invalid tag name {name!r}")
     tags_dir = os.path.join(_log_path(table_path), "tags")
     os.makedirs(tags_dir, exist_ok=True)
-    final = os.path.join(tags_dir, f"{name}.json")
-    tmp = final + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"name": name, "version": v, "tagged_at": time.time()}, fh)
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
+    if not _put_if_absent(
+        os.path.join(tags_dir, f"{name}.json"),
+        {"name": name, "version": v, "tagged_at": time.time()},
+    ):
         raise SnapshotConflictError(
             f"tag {name!r} already exists at {table_path!r}"
-        ) from None
-    finally:
-        os.remove(tmp)
+        )
     return v
 
 
@@ -1525,37 +1369,20 @@ def create_branch(
     ``ValueError`` instead of silently stealing the name. Branch
     commits land via ``snapshot_write(..., branch=name)``; main
     readers never see them until :func:`fast_forward_main`."""
-    vs = versions(table_path)
-    if version is None:
-        pub = published_versions(table_path)
-        if not pub:
-            raise ValueError(f"no published snapshots at {table_path!r}")
-        version = pub[-1]
-    if version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
+    version = _resolve_version(table_path, version)
     if "/" in name or name.startswith("."):
         raise ValueError(f"invalid branch name {name!r}")
     os.makedirs(_branches_dir(table_path), exist_ok=True)
-    final = os.path.join(_branches_dir(table_path), f"{name}.json")
-    tmp = final + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "name": name,
-                "version": version,
-                "fork_base": version,
-                "updated_at": time.time(),
-            },
-            fh,
-        )
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise ValueError(
-            f"branch {name!r} already exists at {table_path!r}"
-        ) from None
-    finally:
-        os.remove(tmp)
+    if not _put_if_absent(
+        os.path.join(_branches_dir(table_path), f"{name}.json"),
+        {
+            "name": name,
+            "version": version,
+            "fork_base": version,
+            "updated_at": time.time(),
+        },
+    ):
+        raise ValueError(f"branch {name!r} already exists at {table_path!r}")
     return version
 
 
@@ -1658,24 +1485,17 @@ def fast_forward_main(table_path: str, name: str) -> int:
             f"from the fork base {fork_base} to {main_head}; rebase or "
             f"merge explicitly"
         )
-    target = _read_manifest(table_path, head)
-    vs = versions(table_path)
-    new_version = vs[-1] + 1
-    manifest = {
-        "version": new_version,
-        "mode": "publish",
-        "fast_forwarded_from": name,
-        "published_from": head,
-        "committed_at": time.time(),
-        "files": target["files"],
-    }
-    if target.get("stats"):
-        manifest["stats"] = target["stats"]
-    if target.get("bloom"):
-        manifest["bloom"] = target["bloom"]
-    # fast-forwarding a legacy branch head backfills its counts
-    manifest["rows"] = _complete_rows(table_path, target)
-    _commit_manifest(table_path, new_version, manifest)
+    new_version = _commit_copy(
+        table_path,
+        versions(table_path)[-1] + 1,
+        table_path,
+        head,
+        {
+            "mode": "publish",
+            "fast_forwarded_from": name,
+            "published_from": head,
+        },
+    )
     # continue-then-merge-again: the branch keeps its head, but its
     # fork base advances to the commit main just gained
     _move_branch(table_path, name, head, fork_base=new_version)

@@ -1,10 +1,11 @@
 """Sink operators (SURVEY §2.1 S4-S7, §1.3 write semantics).
 
-Reproduces the reference's write ladder — try the managed table
-format, fall back to plain Parquet
-(``noaa_ghcn_bronze_to_silver.py:106-152``) — with the semantics
-that matter preserved across formats: append for facts, overwrite
-for dimensions, partition columns on every fact write.
+The reference's write ladder tries Iceberg and falls back to plain
+Parquet (``noaa_ghcn_bronze_to_silver.py:106-152``). The engine
+writes the plain-Parquet rung for catalog tables and keeps
+snapshotted tables on its own manifest log (``sources.snapshots``),
+with the semantics that matter preserved: append for facts,
+overwrite for dimensions, partition columns on every fact write.
 
 Scale defaults: ``maxRecordsPerFile`` bounds output file size (the
 reference compacts to 256 MB after the fact — M2; we also avoid
@@ -145,27 +146,6 @@ def create_table_if_absent(
     )
 
 
-def write_with_fallback(
-    df: DataFrame,
-    table: str,
-    mode: str = "append",
-    partition_by: Sequence[str] = (),
-    preferred_fmt: str = "delta",
-) -> str:
-    """The reference's graceful format ladder (S4+S6+S7): try the
-    ACID table format, fall back to plain Parquet managed tables
-    (``noaa_ghcn_bronze_to_silver.py:106-152``). Returns the format
-    actually used, so callers/maintenance know which procedures
-    apply."""
-    sink = sink_table_append if mode == "append" else sink_table_overwrite
-    try:
-        sink(df, table, partition_by, fmt=preferred_fmt)
-        return preferred_fmt
-    except Exception:
-        sink(df, table, partition_by, fmt="parquet")
-        return "parquet"
-
-
 def upsert_table(
     spark: SparkSession,
     table: str,
@@ -176,10 +156,11 @@ def upsert_table(
     """MERGE-style upsert (SCD-1) onto a managed table without a
     transactional format: rows in ``updates`` replace current rows
     with the same key; all other current rows survive. This is the
-    plain-Parquet stand-in for Iceberg ``MERGE INTO`` — the op the
-    reference's ACID layer provides (its maintenance job presumes
-    Iceberg, ``iceberg_maintenance.py``); with Delta/Iceberg jars
-    present, ``write_with_fallback`` + native MERGE supersede this.
+    plain-Parquet, catalog-table counterpart of Iceberg ``MERGE
+    INTO`` — the op the reference's ACID layer provides (its
+    maintenance job presumes Iceberg, ``iceberg_maintenance.py``).
+    It never issues a native MERGE; tables kept on the snapshot log
+    merge through ``sources.snapshots.merge_into`` instead.
 
     Implementation: anti-join current⟂updates on the key (drops
     superseded rows), union the updates, stage to a temp table, then

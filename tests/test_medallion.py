@@ -212,22 +212,39 @@ def test_pipeline_empty_input_short_circuit(spark, tmp_path):
     assert "silver_to_gold" not in manifest
 
 
-def test_maintenance_compaction(spark, tmp_path):
+def test_maintenance_compaction(spark, tmp_path, monkeypatch):
     import pyspark.sql.functions as F
 
-    from aws_lakehouse_spark.sources.maintenance import run_maintenance
+    from aws_lakehouse_spark.sources import maintenance
 
     spark.range(0, 10_000).withColumn("v", F.rand(42)).repartition(
         20
     ).write.mode("overwrite").saveAsTable("t_maint")
     before = len(spark.table("t_maint").inputFiles())
-    results = run_maintenance(spark, ["t_maint"])
+    # one catalog DESCRIBE per table serves both snapshot-log ops
+    lookups = []
+    real_location = maintenance._table_location
+    monkeypatch.setattr(
+        maintenance,
+        "_table_location",
+        lambda s, t: lookups.append(t) or real_location(s, t),
+    )
+    results = maintenance.run_maintenance(spark, ["t_maint"])
+    assert lookups == ["t_maint"]
     ops = {r["op"]: r for r in results}
     assert ops["compact_files"]["applied"]
     after = len(spark.table("t_maint").inputFiles())
     assert after <= ops["compact_files"]["target_files"] < before
     assert spark.table("t_maint").count() == 10_000
-    assert not ops["expire_snapshots"]["applied"]  # plain parquet no-op
+    # plain parquet no-ops, the same entries each op returns alone
+    assert ops["expire_snapshots"] == {
+        "table": "t_maint", "op": "expire_snapshots", "applied": False,
+        "reason": "no snapshot metadata for plain parquet tables",
+    }
+    assert ops["remove_orphans"] == {
+        "table": "t_maint", "op": "remove_orphans", "applied": False,
+        "reason": "plain parquet: all files under location are live",
+    }
 
 
 def test_maintenance_compaction_partitioned_preserves_data(spark):

@@ -433,14 +433,15 @@ def test_all_null_stats_column_is_always_candidate(spark, tmp_path):
     snapshots.snapshot_write(
         spark, df.repartition(4), table, "overwrite", stats_cols=["k", "v"]
     )
-    planned, total = snapshots.plan_pruned_files(table, "v", 1, 5)
+    planned, total = snapshots.plan_pruned_files(table, {"v": (1, 5)})
     assert total == 4
     assert len(planned) == total  # stats-less: always-candidate
     assert (
-        snapshots.read_snapshot_pruned(spark, table, "v", 1, 5).count() == 0
+        snapshots.read_snapshot_pruned(spark, table, {"v": (1, 5)}).count()
+        == 0
     )
     # the sibling column with real stats is unaffected
-    assert snapshots.plan_pruned_files(table, "k", 1, 5)[1] == 4
+    assert snapshots.plan_pruned_files(table, {"k": (1, 5)})[1] == 4
 
 
 def test_merge_into_update_insert_delete_arms(spark, table_path):
@@ -619,13 +620,13 @@ def test_file_stats_pruning_plans_subset_and_never_drops(spark, tmp_path):
         "overwrite",
         stats_cols=["k"],
     )
-    planned, total = snapshots.plan_pruned_files(table, "k", 100, 250)
+    planned, total = snapshots.plan_pruned_files(table, {"k": (100, 250)})
     assert total == 5 and 0 < len(planned) < total
 
     got = {
         r["k"]
         for r in snapshots.read_snapshot_pruned(
-            spark, table, "k", 100, 250
+            spark, table, {"k": (100, 250)}
         ).collect()
     }
     assert got == set(range(100, 251))
@@ -636,13 +637,13 @@ def test_file_stats_pruning_plans_subset_and_never_drops(spark, tmp_path):
     got2 = {
         r["k"]
         for r in snapshots.read_snapshot_pruned(
-            spark, table, "k", 2000, 2005
+            spark, table, {"k": (2000, 2005)}
         ).collect()
     }
     assert got2 == set(range(2000, 2006))
 
     # disjoint range plans zero files and returns an empty frame
-    planned3, _ = snapshots.plan_pruned_files(table, "k", 50_000, 60_000)
+    planned3, _ = snapshots.plan_pruned_files(table, {"k": (50_000, 60_000)})
     stats_files = [
         f for f in planned3
     ]
@@ -653,7 +654,7 @@ def test_file_stats_pruning_plans_subset_and_never_drops(spark, tmp_path):
         )["files"]
         for f in stats_files
     )
-    empty = snapshots.read_snapshot_pruned(spark, table, "k", -10, -5)
+    empty = snapshots.read_snapshot_pruned(spark, table, {"k": (-10, -5)})
     assert empty.count() == 0
 
 
@@ -673,7 +674,7 @@ def test_rollback_preserves_file_stats(spark, tmp_path):
         table, "overwrite",
     )
     snapshots.rollback_to(table, 0)
-    planned, total = snapshots.plan_pruned_files(table, "k", 0, 50)
+    planned, total = snapshots.plan_pruned_files(table, {"k": (0, 50)})
     assert total == 5 and 0 < len(planned) < total
 
 
@@ -776,8 +777,9 @@ def test_incremental_scan_reads_only_appended(spark, tmp_path):
 
 
 def test_multi_column_pruning_conjunctive(spark, tmp_path):
-    """plan_pruned_files_multi keeps a file only when EVERY predicate
-    intersects; a column without stats never causes a skip."""
+    """plan_pruned_files keeps a file only when EVERY predicate
+    intersects; a column without stats never causes a skip. A
+    one-entry dict is the single-column planner and reader."""
     from aws_lakehouse_spark.sources import snapshots
 
     table = str(tmp_path / "multi")
@@ -789,24 +791,36 @@ def test_multi_column_pruning_conjunctive(spark, tmp_path):
         spark, clustered, table, "overwrite", stats_cols=["a", "b"]
     )
     # a in [0,100] selects the low-a file; b in [899,999] agrees
-    planned, total = snapshots.plan_pruned_files_multi(
+    planned, total = snapshots.plan_pruned_files(
         table, {"a": (0, 100), "b": (899, 999)}
     )
     assert total == 4 and len(planned) == 1
+    # one column alone plans the same file; the other column's stats
+    # alone agree
+    assert snapshots.plan_pruned_files(table, {"a": (0, 100)}) == (
+        planned, 4
+    )
+    assert snapshots.plan_pruned_files(table, {"b": (899, 999)}) == (
+        planned, 4
+    )
     # contradictory predicates -> zero files
-    planned, _ = snapshots.plan_pruned_files_multi(
+    planned, _ = snapshots.plan_pruned_files(
         table, {"a": (0, 100), "b": (0, 50)}
     )
     assert planned == []
     # un-stat'd column keeps all candidates from the other predicate
-    planned, _ = snapshots.plan_pruned_files_multi(
+    planned, _ = snapshots.plan_pruned_files(
         table, {"a": (0, 100), "nope": (0, 1)}
     )
     assert len(planned) == 1
-    got = snapshots.read_snapshot_pruned_multi(
+    got = snapshots.read_snapshot_pruned(
         spark, table, {"a": (0, 100), "b": (899, 999)}
     )
     assert got.count() == 101
+    assert (
+        snapshots.read_snapshot_pruned(spark, table, {"a": (0, 100)}).count()
+        == 101
+    )
 
 
 def test_wap_staged_invisible_until_published(spark, tmp_path):
@@ -997,7 +1011,7 @@ def test_shallow_clone_carries_stats_and_time_travels(spark, tmp_path):
     )
     snapshots.clone_snapshot(src, dst)
     # min/max skipping works from commit zero on the clone
-    planned, total = snapshots.plan_pruned_files(dst, "id", 0, 10)
+    planned, total = snapshots.plan_pruned_files(dst, {"id": (0, 10)})
     assert 0 < len(planned) < total
     # cloning a PAST version pins that version's file set
     dst2 = str(tmp_path / "clone_stats_dst2")
@@ -1082,11 +1096,11 @@ def test_segmented_stats_carried_and_pruned(spark, table_path):
     m = snapshots._read_manifest(table_path, 1)
     assert m["stats"]  # merged across segments
     planned, total = snapshots.plan_pruned_files(
-        table_path, "id", 1000, 1050
+        table_path, {"id": (1000, 1050)}
     )
     assert 0 < len(planned) < total
     got = snapshots.read_snapshot_pruned(
-        spark, table_path, "id", 1000, 1050
+        spark, table_path, {"id": (1000, 1050)}
     )
     assert got.count() == 10
 
@@ -1357,172 +1371,102 @@ def test_legacy_logs_stay_metadata_only_through_every_path(
     assert (res["rows_before"], res["rows_deleted"]) == (4, 2)
 
 
-# --- real table-format delegation (sources/format_backend.py) -------
-
-
-def test_backend_routing_is_manifest_in_sandbox(spark, table_path):
-    """No Delta jars in this sandbox -> the probe is False, new and
-    existing tables route to the manifest backend, and the delegation
-    layer changes NOTHING (the r7 verdict item-4 contract)."""
-    from aws_lakehouse_spark.sources import format_backend as fmt
-
-    assert fmt.delta_runtime_available(spark) is False
-    # new table
-    assert fmt.backend_for(spark, table_path) == "manifest"
-    # existing manifest table keeps its backend even if a runtime
-    # were to appear later
-    snapshots.snapshot_write(spark, _df(spark, 0, 5), table_path, "overwrite")
-    assert fmt.backend_for(spark, table_path) == "manifest"
-    # env pin always forces the offline implementation
-    os.environ["SPARK_GRAFT_TABLE_FORMAT"] = "manifest"
-    try:
-        assert fmt.backend_for(spark, str(table_path) + "_new") == "manifest"
-    finally:
-        del os.environ["SPARK_GRAFT_TABLE_FORMAT"]
+# --- one table format: foreign tables are refused ------------------
 
 
 def test_delta_table_without_runtime_refuses_loudly(spark, tmp_path):
-    """A directory that IS a Delta table must not be silently read as
-    bare parquet by the manifest backend when the runtime is absent —
-    that would return uncommitted/tombstoned files as live rows."""
-    from aws_lakehouse_spark.sources import format_backend as fmt
-
+    """A directory that IS a Delta table (it holds ``_delta_log``) was
+    written by another program: the snapshot log must neither read it
+    as bare parquet — that would return uncommitted/tombstoned files
+    as live rows — nor commit into it."""
     t = str(tmp_path / "delta_born")
-    os.makedirs(os.path.join(t, fmt.DELTA_LOG_DIR))
-    with pytest.raises(RuntimeError, match="Delta"):
-        fmt.backend_for(spark, t)
+    os.makedirs(os.path.join(t, "_delta_log"))
+    before = sorted(os.listdir(t))
     with pytest.raises(RuntimeError, match="Delta"):
         snapshots.read_snapshot(spark, t)
+    with pytest.raises(RuntimeError, match="Delta"):
+        snapshots.snapshot_write(spark, _df(spark, 0, 5), t, "overwrite")
+    assert sorted(os.listdir(t)) == before == ["_delta_log"]
+    assert os.listdir(os.path.join(t, "_delta_log")) == []
 
 
-def test_delta_delegation_matches_manifest_backend(spark, tmp_path):
-    """WITH a usable Delta runtime (jars + SQL extension — never true
-    in this sandbox, so this skips here): the same lifecycle through
-    both backends yields identical query results. This is the
-    delegation's equivalence oracle on a real cluster."""
-    from aws_lakehouse_spark.sources import format_backend as fmt
+def test_staged_only_log_has_no_default_head(spark, tmp_path):
+    """A log whose only snapshot is a staged WAP batch has no main
+    head: every entry point that defaults its version raises the same
+    ValueError as read_snapshot instead of falling through to the
+    unpublished stage (planning it, tagging it, or cloning it as the
+    clone's PUBLISHED v0 — which would skip the audit entirely),
+    while an explicit version still reads the stage for audit."""
+    t = str(tmp_path / "staged_only")
+    df = spark.range(0, 10).selectExpr("id AS a", "id * 2 AS v").coalesce(1)
+    assert snapshots.snapshot_write(
+        spark, df, t, "append", staged_id="b1",
+        stats_cols=["a"], bloom_cols=["a"],
+    ) == 0
+    assert snapshots.published_versions(t) == []
+    with pytest.raises(ValueError) as head:
+        snapshots.read_snapshot(spark, t)
+    msg = str(head.value)
+    assert "no published snapshots" in msg
 
-    if not fmt.delta_runtime_available(spark):
-        pytest.skip(
-            "no usable Delta runtime (jar + SQL extension) — "
-            "exhaustive probe transcript: DELTA_PROBE_r09.md"
-        )
+    clone = str(tmp_path / "staged_only_clone")
+    defaults = {
+        "tag_snapshot": lambda: snapshots.tag_snapshot(t, "prod"),
+        "clone_snapshot": lambda: snapshots.clone_snapshot(t, clone),
+        "create_branch": lambda: snapshots.create_branch(t, "dev"),
+        "plan_pruned_files": lambda: snapshots.plan_pruned_files(
+            t, {"a": (0, 5)}
+        ),
+        "read_snapshot_pruned": lambda: snapshots.read_snapshot_pruned(
+            spark, t, {"a": (0, 5)}
+        ),
+        "plan_bloom_pruned_files": lambda: snapshots.plan_bloom_pruned_files(
+            t, "a", 3
+        ),
+        "read_snapshot_bloom_pruned": (
+            lambda: snapshots.read_snapshot_bloom_pruned(spark, t, "a", 3)
+        ),
+        "read_snapshot_evolved": lambda: snapshots.read_snapshot_evolved(
+            spark, t
+        ),
+        "read_snapshot_incremental": (
+            lambda: snapshots.read_snapshot_incremental(spark, t, 0)
+        ),
+        "optimize_zorder": lambda: snapshots.optimize_zorder(
+            spark, t, {"a": (0, 10)}, n_files=1
+        ),
+        "rewrite_data_files": lambda: snapshots.rewrite_data_files(
+            spark, t, target_files=1
+        ),
+        "delete_where": lambda: snapshots.delete_where(spark, t, "a > 3"),
+        "update_where": lambda: snapshots.update_where(
+            spark, t, "a > 3", {"v": "0"}
+        ),
+        "merge_into": lambda: snapshots.merge_into(
+            spark, t, df.limit(1), on=["a"]
+        ),
+    }
+    for name, call in defaults.items():
+        with pytest.raises(ValueError) as err:
+            call()
+        assert str(err.value) == msg, name
+    # nothing was committed, tagged, branched or cloned
+    assert snapshots.versions(t) == [0]
+    assert snapshots.list_tags(t) == {}
+    assert snapshots.list_branches(t) == {}
+    assert snapshots.versions(clone) == []
 
-    mani = str(tmp_path / "mani")
-    os.environ["SPARK_GRAFT_TABLE_FORMAT"] = "manifest"
-    try:
-        snapshots.snapshot_write(spark, _df(spark, 0, 10), mani, "overwrite")
-        snapshots.snapshot_write(spark, _df(spark, 10, 15), mani, "append")
-        snapshots.merge_into(
-            spark,
-            mani,
-            _df(spark, 12, 18).withColumn("v", F.col("id") * 3),
-            on=["id"],
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_TABLE_FORMAT"]
-
-    delt = str(tmp_path / "delt")
-    v0 = snapshots.snapshot_write(spark, _df(spark, 0, 10), delt, "overwrite")
-    v1 = snapshots.snapshot_write(spark, _df(spark, 10, 15), delt, "append")
-    assert os.path.isdir(os.path.join(delt, fmt.DELTA_LOG_DIR))
-    assert (v0, v1) == (0, 1)
-    # time travel parity
-    assert snapshots.read_snapshot(spark, delt, 0).count() == 10
-    assert snapshots.read_snapshot(spark, delt, 1).count() == 15
-    snapshots.merge_into(
-        spark,
-        delt,
-        _df(spark, 12, 18).withColumn("v", F.col("id") * 3),
-        on=["id"],
+    # an explicit version still audits the stage
+    assert snapshots.read_snapshot(spark, t, 0).count() == 10
+    assert snapshots.read_snapshot_evolved(spark, t, 0).count() == 10
+    planned, total = snapshots.plan_pruned_files(
+        t, {"a": (0, 5)}, version=0
     )
-    got = {
-        (r["id"], r["v"])
-        for r in snapshots.read_snapshot(spark, delt).collect()
-    }
-    want = {
-        (r["id"], r["v"])
-        for r in snapshots.read_snapshot(spark, mani).collect()
-    }
-    assert got == want
-    res = snapshots.rewrite_data_files(spark, delt, target_files=1)
-    assert res["applied"] is True and res["backend"] == "delta"
-    got2 = {
-        (r["id"], r["v"])
-        for r in snapshots.read_snapshot(spark, delt).collect()
-    }
-    assert got2 == want
-
-
-def test_new_table_with_manifest_extensions_skips_delta_routing(
-    spark, tmp_path, monkeypatch
-):
-    """On a Delta-CAPABLE cluster, a brand-new table asking for
-    manifest-only extensions (stats/bloom/WAP/branch/segments) must be
-    born on the manifest backend rather than raise — otherwise the
-    engine's own registry queries (snapshot_stats_pruned_scan,
-    snapshot_bloom_pruned_scan, snapshot_optimize_zorder all write
-    fresh tables with stats_cols) break precisely in the environment
-    format_backend.py was built for (r9 advice). A table that already
-    HAS a _delta_log keeps the loud ValueError."""
-    from aws_lakehouse_spark.sources import format_backend as fmt
-
-    monkeypatch.setattr(fmt, "delta_runtime_available", lambda s: True)
-
-    t = str(tmp_path / "fresh")
-    v0 = snapshots.snapshot_write(
-        spark, _df(spark, 0, 10), t, "overwrite", stats_cols=["id"]
+    assert total == 1 and len(planned) == 1
+    assert snapshots.read_snapshot_pruned(
+        spark, t, {"a": (0, 5)}, version=0
+    ).count() == 6
+    assert snapshots.plan_bloom_pruned_files(t, "a", 3, version=0)[0] == (
+        planned
     )
-    assert v0 == 0
-    # born manifest: birth format sticks for every later read/write
-    assert fmt.backend_for(spark, t) == "manifest"
-    assert snapshots.read_snapshot(spark, t).count() == 10
-    planned, total = snapshots.plan_pruned_files(t, "id", 3, 3)
-    assert total >= 1
-
-    # existing Delta tables still reject manifest-only extensions
-    delt = str(tmp_path / "born_delta")
-    os.makedirs(os.path.join(delt, fmt.DELTA_LOG_DIR))
-    with pytest.raises(ValueError, match="manifest-log"):
-        snapshots.snapshot_write(
-            spark, _df(spark, 0, 5), delt, "overwrite", stats_cols=["id"]
-        )
-
-
-def test_registry_snapshot_queries_run_under_delta_capable_runtime(
-    spark, sf_dir, monkeypatch
-):
-    """The three registry queries that write fresh tables with
-    stats_cols must run end-to-end when backend_for would prefer
-    Delta for new tables (mocked runtime; the stats_cols fallback
-    keeps every table in these queries manifest-born, so no real
-    Delta write is ever attempted)."""
-    from aws_lakehouse_spark.registry import load_all
-    from aws_lakehouse_spark.sources import format_backend as fmt
-
-    monkeypatch.setattr(fmt, "delta_runtime_available", lambda s: True)
-    reg = load_all()
-    for name in (
-        "snapshot_stats_pruned_scan",
-        "snapshot_bloom_pruned_scan",
-        "snapshot_optimize_zorder",
-    ):
-        df = reg[name].fn(spark, sf_dir)
-        assert df.count() >= 0, name
-
-
-def test_delta_merge_rejects_manifest_style_delete_condition(spark, tmp_path):
-    """The manifest merge references source columns as __src_<col>;
-    Delta uses t./s. aliases. A manifest-style condition on the delta
-    path must fail loudly (before any Delta call) instead of failing
-    to resolve downstream or silently diverging (r9 advice)."""
-    from aws_lakehouse_spark.sources import format_backend as fmt
-
-    with pytest.raises(ValueError, match="__src_"):
-        fmt.delta_merge(
-            spark,
-            str(tmp_path / "t"),
-            _df(spark, 0, 3),
-            on=["id"],
-            when_matched_delete="__src_op = 'D'",
-        )
+    assert snapshots.tag_snapshot(t, "audit", version=0) == 0
