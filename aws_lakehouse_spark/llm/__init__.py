@@ -28,7 +28,6 @@ from aws_lakehouse_spark.llm.dedup import (
     minhash_signature,
     lsh_band_pairs,
     jaccard_pairs,
-    simhash_col,
 )
 from aws_lakehouse_spark.llm.similarity import (
     cosine_sim_col,
@@ -46,7 +45,6 @@ __all__ = [
     "minhash_signature",
     "lsh_band_pairs",
     "jaccard_pairs",
-    "simhash_col",
     "cosine_sim_col",
     "brute_force_topk",
     "lsh_bucket_topk",

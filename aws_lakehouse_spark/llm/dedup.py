@@ -51,23 +51,17 @@ def exact_dedup(
     )
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
+def shingles_col(text_col: str, k: int = 3) -> Column:
     """Distinct k-token shingles of a document as an array column.
 
     Built with sequence+transform over one split — no explode until
-    a join actually needs rows.
-    """
-    toks = F.split(text, " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    )
+    a join actually needs rows. One ``F.expr`` string: a single py4j
+    round trip with JVM-side parsing, where each Python-lambda HOF
+    costs ~60-100 round trips of query-build time per call site."""
+    return F.expr(_shingles_sql(text_col, k))
 
 
-def minhash_signature(
-    shingles: Column | str, num_hashes: int = 4
-) -> list[Column]:
+def minhash_signature(shingles: str, num_hashes: int = 4) -> list[Column]:
     """MinHash signature: hash function j is the j-th 8-hex-char
     slice of ONE md5 per shingle (disjoint digest slices are
     independent hashes), minimized over the shingle set.
@@ -77,46 +71,24 @@ def minhash_signature(
     ordering is engine-agnostic, so signatures stay bit-identical
     everywhere. Supports up to 4 hashes per md5 (32 hex chars).
 
-    Pass ``shingles`` as the SQL TEXT of the shingle-array expression
-    (e.g. :func:`_shingles_sql`) where possible: each Python-lambda
-    HOF costs ~60-100 py4j round trips of pure query-BUILD time per
-    call site (the r11 ``dot_col`` lesson), while one ``F.expr``
-    string is a single round trip with JVM-side parsing. Both paths
-    build the identical ``array_min(transform(transform(...)))``
-    expression — md5 hex slices are integers/strings, so results are
-    trivially bit-identical (pinned by a unit test).
+    ``shingles`` is the SQL TEXT of the shingle-array expression
+    (e.g. :func:`_shingles_sql`); each hash is one ``F.expr`` string.
     """
     if num_hashes > 4:
         raise ValueError("num_hashes > 4 needs a second digest")
-    if isinstance(shingles, str):
-        return [
-            F.expr(
-                f"array_min(transform(transform({shingles}, s -> md5(s)), "
-                f"h -> substring(h, {1 + 8 * j}, 8)))"
-            ).alias(f"minhash_{j}")
-            for j in range(num_hashes)
-        ]
-    # one shared md5 per shingle; each hash slices its own 8 chars
-    hashed = F.transform(shingles, F.md5)
-
-    def slicer(j: int):
-        start = 1 + 8 * j
-
-        def h(s: Column) -> Column:
-            return F.substring(s, start, 8)
-
-        return h
-
     return [
-        F.array_min(F.transform(hashed, slicer(j))).alias(f"minhash_{j}")
+        F.expr(
+            f"array_min(transform(transform({shingles}, s -> md5(s)), "
+            f"h -> substring(h, {1 + 8 * j}, 8)))"
+        ).alias(f"minhash_{j}")
         for j in range(num_hashes)
     ]
 
 
 def _shingles_sql(text_col: str, k: int) -> str:
-    """SQL text equivalent of :func:`shingles_col` (kept in lockstep;
-    used where the whole banding must be ONE expression tree). The
-    column name is backtick-quoted, as in :func:`simhash_col`, so a
+    """SQL text of :func:`shingles_col`, for callers that splice the
+    shingle array into a larger expression (the LSH banding must be
+    ONE expression tree). The column name is backtick-quoted, so a
     keyword or a name with a space stays one identifier."""
     toks = f"split(`{text_col}`, ' ')"
     return (
@@ -240,7 +212,7 @@ def jaccard_pairs(
     # tokenize+shingle runs once per doc, not once per consumer
     sh = df.select(
         F.col(id_col).alias("doc_id"),
-        shingles_col(F.col(text_col), shingle_k).alias("shingles"),
+        shingles_col(text_col, shingle_k).alias("shingles"),
     ).localCheckpoint(eager=False)
     exploded = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     if max_shingle_df is not None:
@@ -288,7 +260,7 @@ def jaccard_pairs(
 
 
 def connected_components(
-    pairs: DataFrame, max_iterations: int = 15, pin: str = "checkpoint"
+    pairs: DataFrame, max_iterations: int = 15
 ) -> DataFrame:
     """Resolve near-dup pairs into duplicate clusters: (node, component)
     where component = min doc id reachable through the pair graph.
@@ -312,22 +284,14 @@ def connected_components(
     unmaterialized, silently re-attaching their lineage to the next
     round.
 
-    The edge frame is pinned once for the rounds; ``pin`` selects
-    how, with the same two measured regimes as
-    ``operators/graph._pagerank_rounds``: ``"checkpoint"`` (default)
-    stores raw row partitions once and lets AQE broadcast the
-    node-sized label vector into each round's join — measured ~1.3-3x
-    faster end-to-end than the cache (which pays the columnar build
-    over the edge frame plus GC pressure while its preserved
-    ``hashpartitioning(dst)`` fact goes unused under broadcast);
-    ``"persist"`` (``repartition(dst).persist()``) keeps that fact
-    for the regime where the label vector outgrows the broadcast
-    threshold and each round must be a co-partitioned join with zero
-    exchange on the edge side.
+    The edge frame is pinned once for the rounds with a lazy
+    ``localCheckpoint``: raw row partitions stored once, while AQE
+    broadcasts the node-sized label vector into each round's join.
+    A ``repartition(dst).persist()`` pin measured ~1.3-3x slower
+    end-to-end (the columnar build over the edge frame plus GC
+    pressure, while its preserved ``hashpartitioning(dst)`` fact goes
+    unused under broadcast).
     """
-    from aws_lakehouse_spark.operators.graph import _check_pin
-
-    _check_pin(pin)
     # no .distinct() on edges: every downstream use is a min
     # aggregation, which duplicate edges cannot perturb — the
     # dedup shuffle would be pure overhead
@@ -347,14 +311,7 @@ def connected_components(
             F.least(F.col("src"), F.col("__m")).alias("component"),
         )
     )
-    if pin == "persist":
-        # co-partitioned-SMJ regime: keep the hashpartitioning(dst)
-        # fact for label vectors past the broadcast threshold
-        edges = edges.repartition("dst").persist()
-    else:
-        # measured default (see docstring): raw-row checkpoint, AQE
-        # broadcasts the node-sized labels into each round's join
-        edges = edges.localCheckpoint(eager=False)
+    edges = edges.localCheckpoint(eager=False)
     labels = labels.localCheckpoint(eager=False)
     for _ in range(max_iterations):
         neighbor_min = (
@@ -407,12 +364,6 @@ def connected_components(
         labels = new_labels.drop("__prev")
         if changed == 0:
             break
-    if pin == "persist":
-        # the returned frame is a MATERIALIZED checkpoint (every
-        # round's convergence count scans all partitions), so it no
-        # longer reads through the edge cache — release those blocks
-        # eagerly instead of leaving them to the context cleaner
-        edges.unpersist()
     return labels
 
 
@@ -441,7 +392,7 @@ def verified_near_dup_pairs(
     # otherwise pins the whole pipeline to one scan task
     sh = widen_if_narrow(df).select(
         F.col(id_col).alias("doc_id"),
-        shingles_col(F.col(text_col), shingle_k).alias("sh"),
+        shingles_col(text_col, shingle_k).alias("sh"),
     ).localCheckpoint(eager=False)
     band_rows = lsh_band_rows_sql(
         text_col, shingle_k, num_hashes=4, band_size=2, shingles_expr="sh"
@@ -557,82 +508,8 @@ def near_duplicate_survivors_by_quality(
     )
 
 
-def simhash_col(text: Column | str, bits: int = 16) -> Column:
-    """SimHash fingerprint: per-token md5 → first 28 hex bits as int;
-    fingerprint bit i is the sign of Σ_tokens (±1 by token bit i).
-
-    Pure array-expression implementation (conv + bitwise ops inside
-    aggregate) — deterministic and portable. Pass the text column
-    NAME to build the whole fingerprint as ONE ``F.expr`` string
-    (single py4j round trip) instead of ``bits`` Python-lambda HOF
-    aggregates (~60-100 round trips each); both paths build the
-    identical integer-arithmetic expression (unit-test pinned).
-    """
-    if isinstance(text, str):
-        hashes = (
-            f"transform(array_distinct(split(`{text}`, ' ')), "
-            "t -> cast(conv(substring(md5(t), 1, 7), 16, 10) as bigint))"
-        )
-        terms = " + ".join(
-            f"(case when aggregate({hashes}, 0, (acc, h) -> acc + "
-            f"(case when (h & {1 << i}) != 0 then 1 else -1 end)) > 0 "
-            f"then {1 << i} else 0 end)"
-            for i in range(bits)
-        )
-        return F.expr(f"cast({terms} as bigint)")
-    toks = F.array_distinct(F.split(text, " "))
-    hashes = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("long")
-    )
-    def bit_vote(i: int):
-        mask = 1 << i
-
-        def merge(acc: Column, h: Column) -> Column:
-            return acc + F.when(h.bitwiseAND(F.lit(mask)) != 0, 1).otherwise(-1)
-
-        return merge
-
-    bit_sums = [
-        F.aggregate(hashes, F.lit(0), bit_vote(i)) for i in range(bits)
-    ]
-    fingerprint = None
-    for i, s in enumerate(bit_sums):
-        term = F.when(s > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return fingerprint.cast("bigint")
-
-
-def _band_tok_hash(start: int, hex_chars: int):
-    """Closure factory (NOT a default-arg lambda — PySpark HOF
-    lambdas are arity-inspected): per-token hash from a slice of the
-    md5 hex digest."""
-
-    def h(t: Column) -> Column:
-        return F.conv(F.substring(F.md5(t), start, hex_chars), 16, 10).cast(
-            "long"
-        )
-
-    return h
-
-
-def _vote_merge(masks: Column):
-    """aggregate-merge closure: add ±1 per fingerprint bit position
-    based on the token hash's bit, carried as an array accumulator —
-    ONE pass over the token array per band instead of one per bit."""
-
-    def merge(acc: Column, h: Column) -> Column:
-        def upd(a: Column, m: Column) -> Column:
-            return a + F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(
-                F.lit(-1)
-            ).cast("long")
-
-        return F.zip_with(acc, masks, upd)
-
-    return merge
-
-
 def simhash_band_cols(
-    text: Column | str, n_bands: int = 4, band_bits: int = 16
+    text_col: str, n_bands: int = 4, band_bits: int = 16
 ) -> list[Column]:
     """64-bit SimHash as ``n_bands`` independent ``band_bits``-bit
     band values (default 4×16 = 64 fingerprint bits, 65,536 buckets
@@ -649,60 +526,33 @@ def simhash_band_cols(
     fingerprint, whose top band would wrap negative in two's-
     complement BIGINT on one engine but error on another.
 
-    Pass the text column NAME to emit each band as ONE ``F.expr``
-    string: the Column path builds 3 nested Python-lambda HOFs per
-    band (~60-100 py4j round trips each, pure query-BUILD time,
-    re-paid on every fresh plan — the r11 ``dot_col`` lesson), the
-    string path parses JVM-side in one round trip per band. Both
-    paths build the identical expression (integer arithmetic, no
-    accumulation-order sensitivity; unit-test pinned).
+    Each band is ONE ``F.expr`` string over the backtick-quoted
+    column name: one py4j round trip per band, parsed JVM-side.
     """
-    if isinstance(text, str):
-        hex_chars = band_bits // 4
-        masks_sql = (
-            "array(" + ", ".join(f"{1 << i}L" for i in range(band_bits)) + ")"
-        )
-        zero_sql = f"array_repeat(0L, {band_bits})"
-        out_sql = []
-        for b in range(n_bands):
-            hashes = (
-                f"transform(array_distinct(split(`{text}`, ' ')), "
-                f"t -> cast(conv(substring(md5(t), {1 + hex_chars * b}, "
-                f"{hex_chars}), 16, 10) as bigint))"
-            )
-            bit_sums = (
-                f"aggregate({hashes}, {zero_sql}, (acc, h) -> "
-                f"zip_with(acc, {masks_sql}, (a, m) -> a + "
-                "cast(case when (h & m) != 0 then 1 else -1 end as bigint)))"
-            )
-            band_val = (
-                f"aggregate(zip_with({bit_sums}, {masks_sql}, "
-                "(s, m) -> case when s > 0 then m else 0L end), "
-                "0L, (acc, x) -> acc + x)"
-            )
-            out_sql.append(F.expr(band_val).alias(f"simhash_b{b}"))
-        return out_sql
-    toks = F.array_distinct(F.split(text, " "))
     hex_chars = band_bits // 4
-    masks = F.array(
-        *[F.lit(1 << i).cast("long") for i in range(band_bits)]
+    masks_sql = (
+        "array(" + ", ".join(f"{1 << i}L" for i in range(band_bits)) + ")"
     )
-    zero = F.array_repeat(F.lit(0).cast("long"), band_bits)
-    out = []
+    zero_sql = f"array_repeat(0L, {band_bits})"
+    out_sql = []
     for b in range(n_bands):
-        hashes = F.transform(toks, _band_tok_hash(1 + hex_chars * b, hex_chars))
-        bit_sums = F.aggregate(hashes, zero, _vote_merge(masks))
-        band_val = F.aggregate(
-            F.zip_with(
-                bit_sums,
-                masks,
-                lambda s, m: F.when(s > 0, m).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+        hashes = (
+            f"transform(array_distinct(split(`{text_col}`, ' ')), "
+            f"t -> cast(conv(substring(md5(t), {1 + hex_chars * b}, "
+            f"{hex_chars}), 16, 10) as bigint))"
         )
-        out.append(band_val.alias(f"simhash_b{b}"))
-    return out
+        bit_sums = (
+            f"aggregate({hashes}, {zero_sql}, (acc, h) -> "
+            f"zip_with(acc, {masks_sql}, (a, m) -> a + "
+            "cast(case when (h & m) != 0 then 1 else -1 end as bigint)))"
+        )
+        band_val = (
+            f"aggregate(zip_with({bit_sums}, {masks_sql}, "
+            "(s, m) -> case when s > 0 then m else 0L end), "
+            "0L, (acc, x) -> acc + x)"
+        )
+        out_sql.append(F.expr(band_val).alias(f"simhash_b{b}"))
+    return out_sql
 
 
 def simhash_hamming_pairs(
@@ -918,7 +768,7 @@ def incremental_lsh_matches(
     )
     sh_batch = batch.select(
         F.col(id_col).alias("doc_id"),
-        shingles_col(F.col(text_col), shingle_k).alias("sh_b"),
+        shingles_col(text_col, shingle_k).alias("sh_b"),
     )
     c = corpus.select(
         F.col(id_col).alias("__cid"), F.col(text_col).alias("__ctext")
@@ -928,7 +778,7 @@ def incremental_lsh_matches(
     ).select(
         F.explode("doc_ids").alias("doc_id"),
         "corpus_id",
-        shingles_col(F.col("__ctext"), shingle_k).alias("sh_c"),
+        shingles_col("__ctext", shingle_k).alias("sh_c"),
     )
     verified = (
         pairs.join(F.broadcast(sh_batch), "doc_id")
@@ -982,7 +832,7 @@ def containment_pairs(
     # tokenize+shingle runs once per doc, not once per consumer
     sh = df.select(
         F.col(id_col).alias("doc_id"),
-        shingles_col(F.col(text_col), shingle_k).alias("shingles"),
+        shingles_col(text_col, shingle_k).alias("shingles"),
     ).localCheckpoint(eager=False)
     exploded = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     if max_shingle_df is not None:

@@ -60,44 +60,34 @@ def covariance_matrix(
     df: DataFrame, vec_col: str = "embedding", dim: int = 64
 ) -> tuple[int, np.ndarray, np.ndarray]:
     """(n, mean (dim), population covariance (dim×dim)) of the
-    vectors — E[xxᵀ] − μμᵀ from the single-scan partials. The
-    posexplode/groupBy reduction ships #partitions·(dim+dim²) narrow
-    rows, collapsed map-side; the collect is dim² scalars."""
-    # lazy localCheckpoint, NOT .cache(): Spark's CacheManager matches
-    # canonicalized plans across DataFrame objects, so a cache here
-    # would let bench trial k+1 silently read trial k's partials —
-    # the no-result-caching-across-trials rule (r11 verdict item 8).
-    # The partials plan is shuffle-free (one mapInPandas over the
-    # scan), so the checkpoint stays truly lazy under AQE; the first
-    # aggregate below materializes every partition once and the other
-    # two read the stored rows.
-    partials = covariance_partials(df, vec_col, dim).localCheckpoint(
-        eager=False
+    vectors — E[xxᵀ] − μμᵀ from the single-scan partials. ONE
+    posexplode/groupBy reduction over ``[n] ++ s ++ o`` ships
+    #partitions·(1+dim+dim²) narrow rows, collapsed map-side; the
+    collect is 1+dim+dim² scalars. One job reads the partials, so
+    they need no pin (n is a per-partition row count, exact as a
+    double far past any corpus size)."""
+    partials = covariance_partials(df, vec_col, dim)
+    rows = (
+        partials.select(
+            F.posexplode(
+                F.concat(F.array(F.col("n").cast("double")), "s", "o")
+            ).alias("i", "v")
+        )
+        .groupBy("i")
+        .agg(F.sum("v").alias("v"))
+        .collect()
     )
-    n = partials.agg(F.sum("n").alias("n")).collect()[0]["n"] or 0
+    flat = np.zeros(1 + dim + dim * dim)
+    for r in rows:
+        flat[r["i"]] = r["v"]
+    n = int(flat[0])
     if not n:
         raise ValueError("covariance_matrix: empty input")
-    s_rows = (
-        partials.select(F.posexplode("s").alias("i", "v"))
-        .groupBy("i")
-        .agg(F.sum("v").alias("v"))
-        .collect()
-    )
-    o_rows = (
-        partials.select(F.posexplode("o").alias("i", "v"))
-        .groupBy("i")
-        .agg(F.sum("v").alias("v"))
-        .collect()
-    )
-    s = np.zeros(dim)
-    for r in s_rows:
-        s[r["i"]] = r["v"]
-    o = np.zeros(dim * dim)
-    for r in o_rows:
-        o[r["i"]] = r["v"]
+    s = flat[1 : 1 + dim]
+    o = flat[1 + dim :]
     mean = s / n
     cov = o.reshape(dim, dim) / n - np.outer(mean, mean)
-    return int(n), mean, cov
+    return n, mean, cov
 
 
 def principal_components(

@@ -25,40 +25,29 @@ from pyspark.sql import Column, DataFrame, Window
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """SQL text of the sequential dot fold over two array columns —
-    the exact expression the Column path builds (zip_with multiply,
-    0.0 double seed, left-to-right accumulate), emitted as one
-    string. Same summation order, bit-identical results."""
+    """SQL text of the sequential dot fold over two array columns:
+    zip_with multiply, 0.0 double seed, left-to-right accumulate."""
     return (
         f"aggregate(zip_with(`{a}`, `{b}`, (x, y) -> x * y), "
         "0.0D, (acc, v) -> acc + v)"
     )
 
 
-def dot_col(a: Column | str, b: Column | str) -> Column:
-    """Sequential-order dot product of two double arrays.
+def dot_col(a: str, b: str) -> Column:
+    """Sequential-order dot product of two double-array columns,
+    named by ``a`` and ``b``.
 
-    Pass column NAMES where possible: each Python-lambda HOF costs
-    ~60-100 py4j round trips (~20 ms) of pure query-BUILD time per
-    call site, re-paid on every fresh plan, while parsing one
-    ``F.expr`` string is a single round trip with JVM-side parsing
-    (the :func:`hyperplane_signature` lesson, r11: construction of
-    the vector queries was 0.3-0.5 s of almost pure py4j socket
-    wait). Both paths build the same ``aggregate(zip_with(...))``
-    expression — same fold order, bit-identical scores."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    One ``F.expr`` string: a single py4j round trip with JVM-side
+    parsing, where each Python-lambda HOF costs ~60-100 round trips
+    (~20 ms) of pure query-BUILD time per call site, re-paid on every
+    fresh plan (the :func:`hyperplane_signature` lesson, r11:
+    construction of the vector queries was 0.3-0.5 s of almost pure
+    py4j socket wait)."""
+    return F.expr(_dot_sql(a, b))
 
 
-def norm_col(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(f"sqrt({_dot_sql(a, a)})")
-    return F.sqrt(dot_col(a, a))
+def norm_col(a: str) -> Column:
+    return F.expr(f"sqrt({_dot_sql(a, a)})")
 
 
 def cosine_ratio_col(dot: Column, na: Column, nb: Column) -> Column:
@@ -75,11 +64,10 @@ def cosine_ratio_col(dot: Column, na: Column, nb: Column) -> Column:
     return dot / F.nullif(na * nb, F.lit(0.0))
 
 
-def cosine_sim_col(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; inputs should be pre-cast to
-    ``array<double>`` (float32→float64 widening is exact). Zero
-    vectors yield NULL (see :func:`cosine_ratio_col`). Column names
-    take the one-expr-string fast path (see :func:`dot_col`)."""
+def cosine_sim_col(a: str, b: str) -> Column:
+    """Cosine similarity of two named columns; inputs should be
+    pre-cast to ``array<double>`` (float32→float64 widening is
+    exact). Zero vectors yield NULL (see :func:`cosine_ratio_col`)."""
     return cosine_ratio_col(dot_col(a, b), norm_col(a), norm_col(b))
 
 

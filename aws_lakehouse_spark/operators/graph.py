@@ -20,10 +20,11 @@ Catalyst owns the physical strategy:
   closing-edge semi-join are both plain equi-joins — shuffle-
   partitioned, no cartesian anywhere.
 - **PageRank / LPA** — the textbook iterate as K rounds of (join +
-  keyed aggregate); a lazy ``localCheckpoint(eager=False)`` every
-  THIRD round bounds the plan depth without paying a
-  materialization barrier per round (a per-round barrier costs
-  ~25% of the 5-round wall at sf0.1).
+  keyed aggregate) over an adjacency pinned once with a lazy
+  ``localCheckpoint``; another lazy checkpoint every
+  :data:`ROUNDS_PER_CHECKPOINT`-th round bounds the plan depth
+  without paying a materialization barrier per round (a per-round
+  barrier costs ~25% of the 5-round wall at sf0.1).
 
 r11 measurement note on ``localCheckpoint(eager=False)`` under AQE
 (Spark 4): the call is NOT free at build time — compiling the
@@ -33,8 +34,9 @@ plan that executes every upstream shuffle stage eagerly (probed: a
 1.7-1.8 s inside the call). The eager=False form still skips the
 final-stage materialization and the plan-depth bounding argument is
 unchanged; the measured alternatives stay worse or equal (pin
-removal 1.0-1.27x, no mid-round checkpoint 1.0x, persist regimes per
-the function docstrings below).
+removal 1.0-1.27x, no mid-round checkpoint 1.0x, a
+``repartition(src).persist()`` adjacency 3-4x — see
+:func:`_pagerank_rounds`).
 """
 
 from __future__ import annotations
@@ -129,17 +131,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 # for ordinary nodes.
 DEFAULT_MAX_DEGREE = 100_000
 
-
-def _check_pin(pin: str) -> None:
-    """The two materialization regimes are exact strings; anything
-    else ("Persist", "cache", a typo) must error rather than silently
-    fall through to the checkpoint path — a caller targeting the
-    past-broadcast-threshold regime would otherwise get the wrong
-    materialization with no signal."""
-    if pin not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"pin must be 'checkpoint' or 'persist', got {pin!r}"
-        )
+# PageRank and LPA checkpoint their node-sized state every this many
+# rounds: bound (don't flatten) the plan — a per-round barrier costs
+# ~25% of the 5-round wall (sf0.1); the r11/r12 cadence A/Bs (sf0.1
+# and sf1, 5 and 10 rounds) measured every-3rd within noise of the
+# alternatives.
+ROUNDS_PER_CHECKPOINT = 3
 
 
 def sliced_adjacency(
@@ -185,7 +182,7 @@ def _slice_nbr_lists(
     ``(src, deg, slice_i, nbrs)`` shape :func:`sliced_adjacency`
     produces, via array slicing. The caller already materialized the
     full list once (its input contract); this bounds everything
-    DOWNSTREAM — the persisted frame, the per-round join fan-out,
+    DOWNSTREAM — the pinned frame, the per-round join fan-out,
     and each explode — at ``max_degree`` elements per row. Ordinary
     nodes (the overwhelming majority) take the single-slice fast
     path: ``sequence(0, 0)`` → one full-array slice, no copy
@@ -209,52 +206,29 @@ def _slice_nbr_lists(
 
 
 def _pagerank_rounds(
-    sliced: DataFrame,
-    iterations: int,
-    damping: float,
-    pin: str = "checkpoint",
-    checkpoint_cadence: int = 3,
+    sliced: DataFrame, iterations: int, damping: float
 ) -> DataFrame:
     """The synchronous PageRank iterate over a hub-sliced adjacency
     frame ``(src, deg, slice_i, nbrs)``; see :func:`pagerank` for the
     algorithm/scale contract.
 
-    ``pin`` selects how the adjacency is materialized for the rounds
-    — both regimes were MEASURED (sf0.1, local[32], warm, best-of-3):
-
-    - ``"checkpoint"`` (default): ``localCheckpoint`` stores raw
-      row-format partitions once; every round's join scans them with
-      no rebuild. The plan loses the ``hashpartitioning(src)`` fact,
-      but that fact is worthless while the rank vector fits a
-      broadcast: AQE plans each round as a broadcast join (rank side
-      node-sized), so the adjacency is never exchanged anyway.
-      Measured 1.5-1.8 s for 5 rounds.
-    - ``"persist"``: ``repartition("src").persist()`` keeps the
-      partitioning fact — the right trade only in the billion-node
-      regime where ranks outgrow broadcast and each round must be a
-      co-partitioned SMJ (zero exchange on the edge side; the shape
-      ``tests/test_plans.py::
-      test_pregel_adjacency_partitioning_survives_pinning`` locks).
-      At any broadcastable scale it is pure overhead: building the
-      columnar cache (array columns) plus its GC pressure measured
-      5-8.6 s for the same rounds, 3-4x the checkpoint path, while
-      AQE broadcast made the preserved partitioning moot.
-
-    Callers targeting rank vectors past the broadcast threshold pass
-    ``pin="persist"``; everything below takes the measured default."""
-    _check_pin(pin)
-    if pin == "persist":
-        sliced = sliced.repartition("src").persist()
-    else:
-        sliced = sliced.localCheckpoint(eager=False)
+    The adjacency is pinned for the rounds with a lazy
+    ``localCheckpoint``: raw row-format partitions stored once, which
+    every round's join scans with no rebuild. The plan loses the
+    ``hashpartitioning(src)`` fact, but AQE plans each round as a
+    broadcast join (rank side node-sized), so the adjacency is never
+    exchanged anyway. Measured (sf0.1, local[32], warm, best-of-3):
+    1.5-1.8 s for 5 rounds, against 5-8.6 s for a
+    ``repartition("src").persist()`` pin, whose columnar cache build
+    over array columns plus GC pressure buys a partitioning fact that
+    only pays once the rank vector outgrows the broadcast threshold."""
+    sliced = sliced.localCheckpoint(eager=False)
     nodes = sliced.select("src").distinct()
     n = nodes.count()
     if n == 0:
         # a filtered edge set can legitimately be empty (e.g. a
         # min-weight cut on a sparse graph); the rank of an empty
         # graph is an empty frame, not a 1/0 division
-        if pin == "persist":
-            sliced.unpersist()
         return nodes.select(
             F.col("src").alias("node"), F.lit(0.0).alias("pr")
         )
@@ -272,26 +246,8 @@ def _pagerank_rounds(
         pr = msgs.groupBy("node").agg(
             (F.lit(base) + F.lit(damping) * F.sum("c")).alias("pr")
         )
-        # bound (don't flatten) the plan: checkpoint every
-        # ``checkpoint_cadence``-th round (0 = never) — a per-round
-        # barrier costs ~25% of the 5-round wall (sf0.1); the r11/r12
-        # cadence A/Bs (sf0.1 and sf1, 5 and 10 rounds) measured
-        # every-3rd within noise of the alternatives, so 3 stays.
-        if (
-            checkpoint_cadence > 0
-            and (i + 1) % checkpoint_cadence == 0
-            and (i + 1) < iterations
-        ):
+        if (i + 1) % ROUNDS_PER_CHECKPOINT == 0 and (i + 1) < iterations:
             pr = pr.localCheckpoint(eager=False)
-    if pin == "persist":
-        # pin the NODE-sized result eagerly so the EDGE-sized
-        # adjacency cache can be released here — a lazy result would
-        # read through the cache and leak the CacheManager entry for
-        # the session lifetime. Checkpoint mode needs neither: its
-        # RDD blocks are reclaimed by the ContextCleaner once the
-        # frame is garbage-collected.
-        pr = pr.localCheckpoint(eager=True)
-        sliced.unpersist()
     return pr
 
 
@@ -300,7 +256,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     max_degree: int = DEFAULT_MAX_DEGREE,
-    pin: str = "checkpoint",
 ) -> DataFrame:
     """PageRank on an undirected (src<dst, distinct) edge list:
     symmetric adjacency, uniform ``1/N`` init, K synchronous rounds of
@@ -322,23 +277,23 @@ def pagerank(
     web-scale super-hub can't OOM an executor or serialize the
     explode — contributions from its slices re-merge in the same
     keyed aggregate every round already runs, at no extra cost),
-    materialized ONCE for the rounds (``pin`` — see
-    :func:`_pagerank_rounds` for the measured checkpoint-vs-persist
-    regimes); messages explode out of the neighbor lists only AFTER
-    the per-round join, so the edge-sized frame is never a join
-    input (vs joining the raw 2×|E| adjacency every round). The only
-    data-sized movement per round is the contribution aggregate's
-    shuffle, which map-side partial aggregation bounds at
-    (nodes × partitions). This is the Pregel shape: edges stay put,
-    only the O(N) rank vector moves.
-    Lineage is truncated with a lazy ``localCheckpoint`` every THIRD
-    round, not every round: each checkpoint costs a materialization
-    barrier (~25% of the 5-round wall when done per-round, measured
-    at sf0.1), while the plan tree only needs bounding, not
-    flattening — three unchained rounds deepen it by a constant.
+    materialized ONCE for the rounds (a lazy ``localCheckpoint``; see
+    :func:`_pagerank_rounds` for the measurement); messages explode
+    out of the neighbor lists only AFTER the per-round join, so the
+    edge-sized frame is never a join input (vs joining the raw 2×|E|
+    adjacency every round). The only data-sized movement per round is
+    the contribution aggregate's shuffle, which map-side partial
+    aggregation bounds at (nodes × partitions). This is the Pregel
+    shape: edges stay put, only the O(N) rank vector moves.
+    Lineage is truncated with a lazy ``localCheckpoint`` every
+    :data:`ROUNDS_PER_CHECKPOINT`-th round, not every round: each
+    checkpoint costs a materialization barrier (~25% of the 5-round
+    wall when done per-round, measured at sf0.1), while the plan tree
+    only needs bounding, not flattening — three unchained rounds
+    deepen it by a constant.
     """
     return _pagerank_rounds(
-        sliced_adjacency(edges, max_degree), iterations, damping, pin
+        sliced_adjacency(edges, max_degree), iterations, damping
     )
 
 
@@ -347,7 +302,6 @@ def pagerank_from_adjacency(
     iterations: int = 5,
     damping: float = 0.85,
     max_degree: int = DEFAULT_MAX_DEGREE,
-    pin: str = "checkpoint",
 ) -> DataFrame:
     """PageRank rounds over a prebuilt adjacency-list frame
     ``(src, nbrs)`` — one row per node, ``nbrs`` its DISTINCT
@@ -359,7 +313,7 @@ def pagerank_from_adjacency(
     aggregate is bounded at ``max_degree`` elements per row; see
     :func:`pagerank` for the algorithm/scale contract."""
     return _pagerank_rounds(
-        _slice_nbr_lists(adj_lists, max_degree), iterations, damping, pin
+        _slice_nbr_lists(adj_lists, max_degree), iterations, damping
     )
 
 
@@ -367,7 +321,6 @@ def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
     max_degree: int = DEFAULT_MAX_DEGREE,
-    pin: str = "checkpoint",
 ) -> DataFrame:
     """Synchronous label propagation (community detection) on an
     undirected ``(src < dst)`` distinct edge list; returns
@@ -385,38 +338,25 @@ def label_propagation(
     SLICED at build time via :func:`sliced_adjacency` — a super-hub
     past ``max_degree`` neighbors becomes several bounded rows whose
     votes re-merge in the per-(node, label) count the round already
-    runs), materialized ONCE for the rounds (``pin`` — see
-    :func:`_pagerank_rounds` for the measured checkpoint-vs-persist
-    regimes). Votes
-    explode out of the neighbor lists only after the join, and the
-    vote count's map-side partial aggregation bounds the shuffle at
-    (node, label)-cardinality. The per-node argmax runs
+    runs), materialized ONCE for the rounds with a lazy
+    ``localCheckpoint`` (see :func:`_pagerank_rounds` for the
+    measurement). Votes explode out of the neighbor lists only after
+    the join, and the vote count's map-side partial aggregation bounds
+    the shuffle at (node, label)-cardinality. The per-node argmax runs
     ``min_by(label, (-votes, label))`` — one aggregate, no window
-    sort. A lazy ``localCheckpoint`` every THIRD round bounds the
-    plan depth (same policy and measurement as
-    :func:`pagerank_from_adjacency`: a per-round barrier costs ~25%
-    of the wall and the tree only needs bounding, not flattening);
-    total cost stays O(rounds) keyed shuffles.
+    sort. A lazy ``localCheckpoint`` every
+    :data:`ROUNDS_PER_CHECKPOINT`-th round bounds the plan depth (same
+    policy and measurement as :func:`pagerank_from_adjacency`: a
+    per-round barrier costs ~25% of the wall and the tree only needs
+    bounding, not flattening); total cost stays O(rounds) keyed
+    shuffles.
     """
-    _check_pin(pin)
-    if pin == "persist":
-        # keeps the hashpartitioning(src) fact for the co-partitioned
-        # SMJ regime (label vector past the broadcast threshold)
-        adj_lists = (
-            sliced_adjacency(edges, max_degree)
-            .repartition("src")
-            .persist()
-        )
-    else:
-        # measured default — see _pagerank_rounds: AQE broadcasts the
-        # node-sized label vector each round, so the cache's preserved
-        # partitioning buys nothing while its build + GC cost 3-4x
-        adj_lists = sliced_adjacency(edges, max_degree).localCheckpoint(
-            eager=False
-        )
+    adj_lists = sliced_adjacency(edges, max_degree).localCheckpoint(
+        eager=False
+    )
     labels = (
         adj_lists.select("src")
-        .distinct()  # exchange-free: partitioned by src already
+        .distinct()
         .select(F.col("src").alias("node"), F.col("src").alias("label"))
     )
     for r in range(rounds):
@@ -433,13 +373,6 @@ def label_propagation(
                 "min_by(label, struct(-v, label))"
             ).alias("label")
         )
-        # same bounded-plan policy as pagerank_from_adjacency: a
-        # barrier every 3rd round, not every round
-        if (r + 1) % 3 == 0 and (r + 1) < rounds:
+        if (r + 1) % ROUNDS_PER_CHECKPOINT == 0 and (r + 1) < rounds:
             labels = labels.localCheckpoint(eager=False)
-    if pin == "persist":
-        # same cache-release contract as _pagerank_rounds: pin the
-        # node-sized labels, release the edge-sized adjacency cache
-        labels = labels.localCheckpoint(eager=True)
-        adj_lists.unpersist()
     return labels

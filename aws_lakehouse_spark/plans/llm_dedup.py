@@ -876,7 +876,7 @@ def dedup_minhash_jaccard_estimate_q(
         .select("doc_a", "doc_b", est_expr.alias("jaccard_est"))
     )
     sh = docs.select(
-        "doc_id", shingles_col(F.col("text"), 3).alias("sh")
+        "doc_id", shingles_col("text", 3).alias("sh")
     ).localCheckpoint(eager=False)
     exact = (
         F.size(F.array_intersect("x.sh", "y.sh"))

@@ -157,7 +157,7 @@ def text_fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(F.col("text")).alias("doc_fp"),
         F.array_min(
-            F.transform(shingles_col(F.col("text"), 3), lambda s: F.md5(s))
+            F.transform(shingles_col("text", 3), lambda s: F.md5(s))
         ).alias("min_shingle_fp"),
     )
 
@@ -674,7 +674,7 @@ def text_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
     ).select(
         "doc_id",
-        shingles_col(F.col("text"), k=3).alias("shingles"),
+        shingles_col("text", k=3).alias("shingles"),
         _bucket_col().alias("bucket"),
     )
     eval_sh = (
@@ -741,7 +741,6 @@ def text_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "globally-hot tokens from concentrating on one reducer.",
 )
 def text_repetition_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aws_lakehouse_spark.llm.dedup import shingles_col
     from aws_lakehouse_spark.operators.joins import widen_if_underparallel
 
     # tokenize/shingle explodes serialize on a one-split corpus (r9
@@ -1698,7 +1697,7 @@ def text_curation_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.size(F.array_distinct(toks)) / F.greatest(n, F.lit(1))).alias(
             "distinct_ratio"
         ),
-        shingles_col(F.col("text"), 5).alias("shingles"),
+        shingles_col("text", 5).alias("shingles"),
         bucket.alias("__bucket"),
     ).localCheckpoint(eager=False)
     # the digest-dedup shuffle must NOT carry `shingles` (by far the

@@ -208,14 +208,17 @@ def run_maintenance(
     (``iceberg_maintenance.py:34-44,83-84``): one bad table never
     blocks the rest. Each table's location is looked up once and
     serves both snapshot-log ops (compaction keeps a managed table's
-    location)."""
+    location). ``retain_days`` is both the snapshot-expiry window and
+    the orphan-file age floor."""
     results = []
     for table in tables:
         path = _table_location(spark, table)
         for op, kw in (
-            (expire_snapshots, {"table_path": path}),
+            (expire_snapshots,
+             {"retain_days": retain_days, "table_path": path}),
             (compact_files, {}),
-            (remove_orphans, {"table_path": path}),
+            (remove_orphans,
+             {"older_than_days": retain_days, "table_path": path}),
         ):
             try:
                 results.append(op(spark, table, **kw))

@@ -400,51 +400,3 @@ def test_mega_basket_join_path_matches_array_expansion(spark, tmp_path):
         e for e in routed if 100 <= e[0] and e[1] <= 108 and e[0] < e[1]
     ]
     assert len(mega_pairs) >= 36
-
-
-def test_pin_persist_matches_checkpoint_kernels(spark):
-    """The non-default ``pin="persist"`` regime (rank/label vectors
-    past the broadcast threshold) must produce the same fixed point
-    as the measured-default checkpoint pin — the pin only changes
-    HOW the adjacency is materialized for the rounds, never what
-    they compute. Covers PageRank, LPA, and the dedup CC kernel."""
-    from aws_lakehouse_spark.llm.dedup import connected_components
-    from aws_lakehouse_spark.operators.graph import (
-        label_propagation,
-        pagerank,
-    )
-
-    pairs = [(0, i) for i in range(1, 12)] + [(12, 13), (13, 14)]
-    edges = _edges(spark, pairs)
-
-    pr_c = {r["node"]: r["pr"] for r in pagerank(edges, 3).collect()}
-    pr_p = {
-        r["node"]: r["pr"]
-        for r in pagerank(edges, 3, pin="persist").collect()
-    }
-    assert set(pr_c) == set(pr_p)
-    for n in pr_c:
-        assert math.isclose(pr_c[n], pr_p[n], rel_tol=1e-12), n
-
-    lp_c = {
-        r["node"]: r["label"]
-        for r in label_propagation(edges, 2).collect()
-    }
-    lp_p = {
-        r["node"]: r["label"]
-        for r in label_propagation(edges, 2, pin="persist").collect()
-    }
-    assert lp_c == lp_p
-
-    cc_pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6)], "doc_a bigint, doc_b bigint"
-    )
-    cc_c = {
-        r["node"]: r["component"]
-        for r in connected_components(cc_pairs).collect()
-    }
-    cc_p = {
-        r["node"]: r["component"]
-        for r in connected_components(cc_pairs, pin="persist").collect()
-    }
-    assert cc_c == cc_p == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5}

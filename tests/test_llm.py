@@ -3,13 +3,14 @@ similarity-search correctness, text features, multimodal plumbing."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pyspark.sql.functions as F
 
 from aws_lakehouse_spark.llm.dedup import (
     exact_dedup,
     jaccard_pairs,
     lsh_band_pairs,
-    simhash_col,
 )
 from aws_lakehouse_spark.llm.multimodal import (
     attach_media_columns,
@@ -55,19 +56,6 @@ def test_lsh_finds_exact_duplicates(spark):
     assert (1, 3) not in pairs
 
 
-def test_simhash_identical_equal_and_disjoint_differ(spark):
-    df = docs(spark, [
-        (1, "spark shuffle partition broadcast join"),
-        (2, "spark shuffle partition broadcast join"),
-        (3, "llama gradient tokenizer embedding corpus"),
-    ])
-    out = {r["doc_id"]: r["sh"] for r in
-           df.select("doc_id", simhash_col(F.col("text")).alias("sh")).collect()}
-    assert out[1] == out[2]
-    assert out[1] != out[3]
-    assert 0 <= out[1] < 2**16
-
-
 def test_simhash_band_cols_64bit(spark):
     from aws_lakehouse_spark.llm.dedup import simhash_band_cols
 
@@ -78,7 +66,7 @@ def test_simhash_band_cols_64bit(spark):
     ])
     rows = {r["doc_id"]: tuple(r[f"simhash_b{b}"] for b in range(4))
             for r in df.select(
-                "doc_id", *simhash_band_cols(F.col("text"))).collect()}
+                "doc_id", *simhash_band_cols("text")).collect()}
     assert rows[1] == rows[2]
     assert rows[1] != rows[3]
     for v in rows[1]:
@@ -89,7 +77,7 @@ def _simhash_candidate_count(spark_df):
     from aws_lakehouse_spark.llm.dedup import simhash_band_cols
 
     fp = spark_df.select(
-        F.col("doc_id"), *simhash_band_cols(F.col("text"))
+        F.col("doc_id"), *simhash_band_cols("text")
     )
     bands = None
     for b in range(4):
@@ -116,7 +104,6 @@ def test_simhash_banding_candidate_volume_realistic(spark):
     """On a realistic-vocabulary 500-doc corpus, 4×16-bit banding
     prunes candidates to ≪ N² (the scale property that makes SimHash
     a join, not a disguised cross join)."""
-    import hashlib
 
     def words(doc, n=40):
         return " ".join(
@@ -863,12 +850,12 @@ def test_bpe_apply_matches_fold_reference_edge_cases(spark):
         assert got[i][1] == len(expect)
 
 
-# --- str-vs-Column fast-path equality pins (r11/r12 F.expr paths) ---
-# Each builder has two construction paths: Python-lambda HOF Columns
-# and a single F.expr SQL string (one py4j round trip). These tests
-# pin the two paths to EXACT output equality so a future edit to
-# either (seed type, fold order, hash slice) cannot silently diverge
-# them — the parity artifacts only cover the path the queries use.
+# --- hash and vector kernels against pure-Python references ---
+# Each kernel is one F.expr SQL string. These tests recompute its
+# output in plain Python (hashlib md5 hex slices; a left-to-right
+# fold from a 0.0 seed, which IEEE doubles make bit-identical), so a
+# changed hex-slice offset, fold seed or fold order fails here and
+# not only in the parity artifacts.
 
 _PATH_DOCS = [
     (1, "spark shuffle partition broadcast join spark"),
@@ -879,47 +866,72 @@ _PATH_DOCS = [
 ]
 
 
-def test_simhash_col_str_path_equals_column_path(spark):
-    df = docs(spark, _PATH_DOCS)
-    old = {r[0]: r[1] for r in
-           df.select("doc_id", simhash_col(F.col("text")).alias("s")).collect()}
-    new = {r[0]: r[1] for r in
-           df.select("doc_id", simhash_col("text").alias("s")).collect()}
-    assert old == new
+def _md5_hex(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
 
 
-def test_simhash_band_cols_str_path_equals_column_path(spark):
+def _ref_shingles(text: str, k: int) -> set[str]:
+    # split on one space, keep empty tokens; one shingle for a
+    # document shorter than k tokens
+    toks = text.split(" ")
+    return {
+        " ".join(toks[i:i + k]) for i in range(max(len(toks) - (k - 1), 1))
+    }
+
+
+def _ref_minhash(text: str, k: int = 3, num_hashes: int = 4) -> tuple:
+    digests = [_md5_hex(s) for s in _ref_shingles(text, k)]
+    return tuple(
+        min(d[8 * j:8 * j + 8] for d in digests) for j in range(num_hashes)
+    )
+
+
+def _ref_simhash_bands(text: str, n_bands: int = 4, band_bits: int = 16):
+    hex_chars = band_bits // 4
+    toks = set(text.split(" "))
+    bands = []
+    for b in range(n_bands):
+        hashes = [
+            int(_md5_hex(t)[hex_chars * b:hex_chars * (b + 1)], 16)
+            for t in toks
+        ]
+        bands.append(sum(
+            1 << i for i in range(band_bits)
+            if sum(1 if h & (1 << i) else -1 for h in hashes) > 0
+        ))
+    return tuple(bands)
+
+
+def _ref_dot(a: list[float], b: list[float]) -> float:
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def test_simhash_band_cols_match_md5_reference(spark):
     from aws_lakehouse_spark.llm.dedup import simhash_band_cols
 
     df = docs(spark, _PATH_DOCS)
-    old = {r[0]: tuple(r)[1:] for r in
-           df.select("doc_id", *simhash_band_cols(F.col("text"))).collect()}
-    new = {r[0]: tuple(r)[1:] for r in
+    got = {r[0]: tuple(r)[1:] for r in
            df.select("doc_id", *simhash_band_cols("text")).collect()}
-    assert old == new
+    assert got == {i: _ref_simhash_bands(t) for i, t in _PATH_DOCS}
 
 
-def test_minhash_signature_str_path_equals_column_path(spark):
-    from aws_lakehouse_spark.llm.dedup import (
-        _shingles_sql,
-        minhash_signature,
-        shingles_col,
-    )
+def test_minhash_signature_matches_md5_reference(spark):
+    from aws_lakehouse_spark.llm.dedup import _shingles_sql, minhash_signature
 
     df = docs(spark, _PATH_DOCS)
-    old = {r[0]: tuple(r)[1:] for r in df.select(
-        "doc_id", *minhash_signature(shingles_col(F.col("text"), 3), 4)
-    ).collect()}
-    new = {r[0]: tuple(r)[1:] for r in df.select(
+    got = {r[0]: tuple(r)[1:] for r in df.select(
         "doc_id", *minhash_signature(_shingles_sql("text", 3), 4)
     ).collect()}
-    assert old == new
+    assert got == {i: _ref_minhash(t) for i, t in _PATH_DOCS}
 
 
 def test_shingles_sql_quotes_keyword_and_spaced_columns(spark):
     """ADVICE r12: the SQL-text shingler must treat a column named
-    like a keyword, or containing a space, as one identifier and give
-    the Column-API path's minhash signatures."""
+    like a keyword, or containing a space, as one identifier; its
+    shingles and minhash signatures match the Python reference."""
     from aws_lakehouse_spark.llm.dedup import (
         _shingles_sql,
         minhash_signature,
@@ -928,19 +940,23 @@ def test_shingles_sql_quotes_keyword_and_spaced_columns(spark):
 
     for name in ("order", "doc text"):
         df = docs(spark, _PATH_DOCS).withColumnRenamed("text", name)
-        old = {r[0]: tuple(r)[1:] for r in df.select(
-            "doc_id", *minhash_signature(shingles_col(F.col(name), 3), 4)
+        got = {r[0]: (set(r[1]), tuple(r)[2:]) for r in df.select(
+            "doc_id",
+            shingles_col(name, 3),
+            *minhash_signature(_shingles_sql(name, 3), 4),
         ).collect()}
-        new = {r[0]: tuple(r)[1:] for r in df.select(
-            "doc_id", *minhash_signature(_shingles_sql(name, 3), 4)
-        ).collect()}
-        assert old == new, name
+        want = {
+            i: (_ref_shingles(t, 3), _ref_minhash(t)) for i, t in _PATH_DOCS
+        }
+        assert got == want, name
 
 
-def test_dot_norm_cosine_str_path_equals_column_path(spark):
-    """ADVICE r11: pin the r11 fold fast path (str -> one F.expr
-    string) to the Column/lambda path bit-for-bit, including the
-    zero-vector NULL guard."""
+def test_dot_norm_cosine_match_python_fold(spark):
+    """ADVICE r11: the dot fold is the left-to-right sum from a 0.0
+    double seed, bit-for-bit, including the zero-vector NULL guard
+    and overflow to inf."""
+    import math
+
     from aws_lakehouse_spark.llm.similarity import (
         cosine_sim_col,
         dot_col,
@@ -952,20 +968,21 @@ def test_dot_norm_cosine_str_path_equals_column_path(spark):
         (2, [0.1, -0.2, 0.3], [-0.4, 0.5, -0.6]),
         (3, [0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),  # zero vector -> NULL cosine
         (4, [1e-300, 1e300, -1e300], [1e300, 1e-300, 1e-300]),
+        (5, [1.0, 1e16, -1e16], [1.0, 1.0, 1.0]),  # 0.0 only left-to-right
     ]
     df = spark.createDataFrame(
         rows, "id long, a array<double>, b array<double>"
     )
-    old = {r[0]: tuple(r)[1:] for r in df.select(
-        "id",
-        dot_col(F.col("a"), F.col("b")).alias("d"),
-        norm_col(F.col("a")).alias("n"),
-        cosine_sim_col(F.col("a"), F.col("b")).alias("c"),
-    ).collect()}
-    new = {r[0]: tuple(r)[1:] for r in df.select(
+    got = {r[0]: tuple(r)[1:] for r in df.select(
         "id",
         dot_col("a", "b").alias("d"),
         norm_col("a").alias("n"),
         cosine_sim_col("a", "b").alias("c"),
     ).collect()}
-    assert old == new
+    want = {}
+    for i, a, b in rows:
+        d, na, nb = _ref_dot(a, b), math.sqrt(_ref_dot(a, a)), math.sqrt(
+            _ref_dot(b, b)
+        )
+        want[i] = (d, na, None if na * nb == 0.0 else d / (na * nb))
+    assert got == want

@@ -313,64 +313,6 @@ def test_aqe_splits_skewed_join(spark):
                 spark.conf.set(k, v)
 
 
-def test_pregel_adjacency_partitioning_survives_pinning(spark):
-    """The r5 perf fix's contract: the persisted, repartition(src)-ed
-    adjacency keeps its hashpartitioning fact, so a Pregel round's
-    join plans with NO exchange on the edge side — only the message
-    aggregate's node-keyed exchange moves data. localCheckpoint
-    would erase the fact (LogicalRDD reports UnknownPartitioning)
-    and silently re-exchange the edge-sized frame every round at
-    scale; this guards against regressing persist back to
-    checkpoint. Broadcast is disabled so the test sees the at-scale
-    (non-broadcast) join shape."""
-    import pyspark.sql.functions as F
-
-    from aws_lakehouse_spark.operators.graph import sliced_adjacency
-
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        edges = spark.createDataFrame(
-            [(0, i) for i in range(1, 40)] + [(1, 2), (3, 4)],
-            "src bigint, dst bigint",
-        )
-        pinned = sliced_adjacency(edges, max_degree=8).repartition(
-            "src"
-        ).persist()
-        pinned.count()
-        pr = (
-            pinned.select("src")
-            .distinct()
-            .select(F.col("src").alias("node"), F.lit(0.1).alias("pr"))
-        )
-        msgs = pinned.join(
-            pr.select(F.col("node").alias("src"), "pr"), "src"
-        ).select(
-            F.explode("nbrs").alias("node"),
-            (F.col("pr") / F.col("deg")).alias("c"),
-        )
-        rnd = msgs.groupBy("node").agg(F.sum("c").alias("pr"))
-        plan = spark._sc._jvm.PythonSQLUtils.explainString(
-            rnd._jdf.queryExecution(), "formatted"
-        )
-        # the tree section ends at the first blank-line-separated node
-        # detail; the cached relation's INNER build plan is indented
-        # under InMemoryRelation, so cut the tree at that marker to
-        # count only the round's own operators
-        tree = plan.split("InMemoryRelation", 1)[0]
-        assert "SortMergeJoin" in tree or "ShuffledHashJoin" in tree, tree
-        # exactly one exchange in the round above the cache: the
-        # message aggregate's (node-keyed); the adjacency side must
-        # reuse hashpartitioning(src) with no exchange of its own
-        assert tree.count("Exchange") == 1, tree
-        pinned.unpersist()
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-
-
 # queries whose multi-consumer frames were pinned in round 5 after the
 # same-table rescan audit (tools/rescan_audit.py): unpinned, their
 # source scans compound per consumer (triangle counting measured 14
@@ -512,15 +454,12 @@ def test_ivf_centroid_plan_depth_constant_in_iterations(spark, sf_dir):
 
 
 def test_pregel_default_pin_is_checkpoint_not_cache(spark):
-    """Round-5 measurement guard: the kernels' DEFAULT adjacency pin
-    must be the raw-row checkpoint, not a cached relation — the
+    """Round-5 measurement guard: the kernels' one adjacency pin must
+    be the raw-row checkpoint, not a cached relation — the
     repartition+persist variant measured 3-4x slower for the same
     rounds at sf0.1 (columnar cache build over array columns + GC)
-    while AQE broadcast made its preserved partitioning moot. The
-    persist regime stays available behind pin="persist" (covered by
-    test_pregel_adjacency_partitioning_survives_pinning and the
-    kernel equivalence test); this test fails if someone flips the
-    default back."""
+    while AQE broadcast made its preserved partitioning moot. This
+    test fails if the pin becomes a cache again."""
     import pyspark.sql.functions as F
 
     from aws_lakehouse_spark.operators.graph import pagerank

@@ -630,7 +630,7 @@ def test_cosine_guard_matches_numpy(spark, vecs, zero_a):
     got = {
         r["i"]: r["sim"]
         for r in df.select(
-            "i", cosine_sim_col(F.col("a"), F.col("b")).alias("sim")
+            "i", cosine_sim_col("a", "b").alias("sim")
         ).collect()
     }
     for i, (a, b) in enumerate(rows):

@@ -250,14 +250,12 @@ def test_hoisted_norm_cosine_is_bit_identical(spark):
     ]
     df = spark.createDataFrame(
         rows, "a array<double>, b array<double>"
-    ).withColumn("na", norm_col(F.col("a"))).withColumn(
-        "nb", norm_col(F.col("b"))
-    )
+    ).withColumn("na", norm_col("a")).withColumn("nb", norm_col("b"))
     got = df.select(
         "a",
-        cosine_sim_col(F.col("a"), F.col("b")).alias("per_pair"),
+        cosine_sim_col("a", "b").alias("per_pair"),
         cosine_ratio_col(
-            dot_col(F.col("a"), F.col("b")), F.col("na"), F.col("nb")
+            dot_col("a", "b"), F.col("na"), F.col("nb")
         ).alias("hoisted"),
     ).collect()
     assert len(got) == len(rows)

@@ -93,6 +93,25 @@ def test_maintenance_ops_apply_on_snapshot_table(spark, table_path):
     assert snapshots.read_snapshot(spark, table_path).count() == 5
 
 
+def test_run_maintenance_passes_retain_days(spark, table_path, monkeypatch):
+    """``run_maintenance``'s ``retain_days`` reaches snapshot expiry
+    and the orphan sweep: with 0 days the older of two versions
+    expires and its files go, where the 7-day defaults keep both."""
+    from aws_lakehouse_spark.sources import maintenance
+
+    snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
+    snapshots.snapshot_write(spark, _df(spark, 0, 5), table_path, "overwrite")
+    monkeypatch.setattr(maintenance, "_table_location", lambda s, t: table_path)
+    ops = {
+        r["op"]: r
+        for r in maintenance.run_maintenance(spark, ["t_snap"], retain_days=0)
+    }
+    assert ops["expire_snapshots"]["expired_versions"] == [0]
+    assert ops["remove_orphans"]["removed_files"] > 0
+    assert snapshots.versions(table_path) == [1]
+    assert snapshots.read_snapshot(spark, table_path).count() == 5
+
+
 def test_cdc_diff_between_snapshot_versions(spark, table_path):
     """snapshot_diff over two time-travel reads: the lakehouse
     'what changed between yesterday and today' query."""
