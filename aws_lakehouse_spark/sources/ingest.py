@@ -3,64 +3,52 @@
 The reference's Lambda (``lambda/nyc_tlc_ingest.py``) lists a public
 source prefix, filters to ``.parquet``, and copies each object into
 the Bronze layout *iff absent* (idempotent daily re-runs,
-``:45-53,183-186,242-245``). Engine equivalent without boto3: Spark
-reads the source directly and writes the Bronze partition layout;
-idempotency is ONE existence check on the whole dataset directory
-``{bronze_root}/{dataset}`` — not per object, and not per partition:
-a target that already holds any data is skipped entirely, so new
-partitions for a later day are NOT ingested into an existing target.
+``:45-53,183-186,242-245``). The engine does the same on a local or
+mounted filesystem without boto3: idempotency is per file, keyed by
+the file's path relative to the source root, so a later day's new
+files land beside the earlier ones and a re-run copies nothing. As in
+the reference, a source file that was updated under a name already
+in Bronze is not copied again.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
-
-from aws_lakehouse_spark.sources.readers import scan_parquet
-
-
-def _target_exists(path: str) -> bool:
-    # local/posix path check; on object stores this is a prefix list
-    return os.path.isdir(path) and any(
-        not n.startswith((".", "_")) for n in os.listdir(path)
-    )
+from pyspark.sql import SparkSession
 
 
 def ingest_copy(
-    spark: SparkSession,
-    source_path: str,
-    bronze_root: str,
-    dataset: str,
-    partition_by: tuple[str, ...] = (),
-    transform=None,
+    spark: SparkSession, source_path: str, bronze_root: str, dataset: str
 ) -> dict:
-    """S8+S9 — copy-if-absent ingest into the Bronze layout.
-
-    Reads the source as Parquet, optionally applies a light
-    ``transform`` (e.g. adding partition columns), and writes
-    ``{bronze_root}/{dataset}/KEY=value/...`` — the same layout the
-    reference's Lambda constructs by string-formatting object keys
-    (``nyc_tlc_ingest.py:30-37``), except Spark's ``partitionBy``
-    produces it natively. Skips entirely when the dataset directory
-    already has any data (idempotent re-run); the check does not look
-    at which partitions the source would add.
-
-    Returns a small manifest dict (driver-side bookkeeping only —
-    no per-row driver work).
+    """S8+S9 — copy each source file whose path relative to
+    ``source_path`` is absent under ``{bronze_root}/{dataset}``, so
+    ``KEY=value`` directories keep their layout. A copy lands as a
+    hidden ``.name.tmp`` and is renamed into place, so no reader sees
+    a partial file. ``_``/``.`` names are skipped, as Spark's listing
+    skips them. No Spark job runs. Raises ``FileNotFoundError`` on a
+    missing source. Returns a manifest dict: ``copied`` new files,
+    ``skipped`` when there were none.
     """
-    target = f"{bronze_root.rstrip('/')}/{dataset}"
-    if _target_exists(target):
-        return {"dataset": dataset, "target": target, "skipped": True}
-
-    df: DataFrame = scan_parquet(spark, source_path)
-    if transform is not None:
-        df = transform(df)
-    w = df.write.mode("overwrite").format("parquet")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(target)
-    return {"dataset": dataset, "target": target, "skipped": False}
+    if not os.path.isdir(source_path):
+        raise FileNotFoundError(f"ingest source {source_path!r} is not a directory")
+    target = os.path.join(bronze_root, dataset)
+    copied = 0
+    for src_dir, dirs, files in os.walk(source_path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        dst_dir = os.path.join(target, os.path.relpath(src_dir, source_path))
+        for name in files:
+            dst = os.path.join(dst_dir, name)
+            if name.startswith(("_", ".")) or os.path.exists(dst):
+                continue
+            os.makedirs(dst_dir, exist_ok=True)
+            tmp = os.path.join(dst_dir, f".{name}.tmp")
+            shutil.copyfile(os.path.join(src_dir, name), tmp)
+            os.replace(tmp, dst)
+            copied += 1
+    return {"dataset": dataset, "target": target, "copied": copied,
+            "skipped": copied == 0}
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,8 @@ import math
 
 from pyspark.sql import SparkSession
 
+from aws_lakehouse_spark.sources.writers import sink_partition_overwrite
+
 TARGET_FILE_BYTES = 256 * 1024 * 1024  # ref iceberg_maintenance.py:66
 
 
@@ -71,12 +73,12 @@ def expire_snapshots(
 def compact_files(
     spark: SparkSession, table: str, target_bytes: int = TARGET_FILE_BYTES
 ) -> dict:
-    """M2 — binpack small files toward the 256 MB target.
-
-    Plain-Parquet path: size the table, rewrite with
-    ``repartition(ceil(bytes/target))`` — a real compaction, same
-    outcome as Iceberg's rewrite_data_files for unpartitioned/
-    per-partition rewrites.
+    """M2 — binpack small files toward the 256 MB target: size the
+    table and rewrite it with ``repartition(ceil(bytes/target))``, the
+    outcome of Iceberg's rewrite_data_files. A partitioned table is
+    rewritten in place by ``sink_partition_overwrite``; an
+    unpartitioned one through a ``__compacted`` sibling and a rename,
+    because Spark refuses to overwrite a table it is reading.
     """
     import os
 
@@ -91,26 +93,20 @@ def compact_files(
         except OSError:
             pass
     n_files = max(1, math.ceil(size_bytes / target_bytes))
-    # partition layout must survive the rewrite: repartitioning on
-    # the partition columns keeps each output task writing into few
-    # partition dirs, and partitionBy preserves pruning downstream
     part_cols = [
         c.name for c in spark.catalog.listColumns(table) if c.isPartition
     ]
-    compacted = (
-        df.repartition(n_files, *part_cols) if part_cols else df.repartition(n_files)
-    )
-    w = compacted.write.mode("overwrite").format("parquet")
     if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.saveAsTable(f"{table}__compacted")
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {table}__compacted RENAME TO {table}")
-    if part_cols:
-        # RENAME moves the data directory but catalog partition
-        # entries still point at the old location → recover them,
-        # otherwise the table silently reads empty
-        spark.sql(f"MSCK REPAIR TABLE {table}")
+        # repartitioning on the partition columns keeps each task
+        # writing into few partition dirs
+        sink_partition_overwrite(
+            df.repartition(n_files, *part_cols), table, part_cols
+        )
+    else:
+        w = df.repartition(n_files).write.mode("overwrite").format("parquet")
+        w.saveAsTable(f"{table}__compacted")
+        spark.sql(f"DROP TABLE {table}")
+        spark.sql(f"ALTER TABLE {table}__compacted RENAME TO {table}")
     return {"table": table, "op": "compact_files", "applied": True,
             "target_files": n_files}
 

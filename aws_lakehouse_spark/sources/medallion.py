@@ -47,6 +47,8 @@ ELEMENT_NAMES: dict[str, str] = {
 }
 # elements stored in tenths (normalized /10 in gold, :91-93)
 TENTHS_ELEMENTS = ("TMAX", "TMIN")
+# the date partition columns of Silver observations and the Gold fact
+DATE_PARTITIONS = ("year", "month", "day")
 
 
 def bronze_to_silver_observations(
@@ -77,9 +79,10 @@ def bronze_to_silver_observations(
     d = F.col("observation_date")
     return cleansed.withColumns(
         {
-            "year": F.year(d).cast("int"),
-            "month": F.month(d).cast("int"),
-            "day": F.dayofmonth(d).cast("int"),
+            name: fn(d).cast("int")
+            for name, fn in zip(
+                DATE_PARTITIONS, (F.year, F.month, F.dayofmonth)
+            )
         }
     )
 
@@ -191,8 +194,8 @@ def build_dim_date(silver: DataFrame) -> DataFrame:
 
 def build_fact(silver: DataFrame) -> DataFrame:
     """Gold fact with conditional tenths normalization
-    (``noaa_ghcn_silver_to_gold.py:82-94``); keeps year/month/day
-    partition columns for the partition-overwrite write."""
+    (``noaa_ghcn_silver_to_gold.py:82-94``); keeps the
+    ``DATE_PARTITIONS`` columns for the partition-overwrite write."""
     return silver.select(
         "station_id",
         F.col("observation_date").alias("date_key"),
@@ -204,9 +207,7 @@ def build_fact(silver: DataFrame) -> DataFrame:
         .alias("value"),
         "measurement_flag",
         "source_flag",
-        "year",
-        "month",
-        "day",
+        *DATE_PARTITIONS,
     )
 
 

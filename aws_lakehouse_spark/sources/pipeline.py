@@ -20,6 +20,7 @@ from pyspark.sql import SparkSession
 from aws_lakehouse_spark.sources.ingest import ingest_copy
 from aws_lakehouse_spark.sources.maintenance import run_maintenance
 from aws_lakehouse_spark.sources.medallion import (
+    DATE_PARTITIONS,
     bronze_to_silver_observations,
     parse_countries,
     parse_inventory,
@@ -125,7 +126,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         manifest["bronze_to_silver"] = "empty-input-short-circuit"
         return manifest
     silver_table = f"{cfg.silver_db}.observations"
-    sink_partition_overwrite(silver, silver_table, ("year", "month", "day"))
+    sink_partition_overwrite(silver, silver_table, DATE_PARTITIONS)
     manifest["bronze_to_silver"] = {"table": silver_table, "format": "parquet"}
 
     # 4. SilverToGold — dims overwrite, fact partition-overwrite
@@ -134,9 +135,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     sink_table_overwrite(gold["dim_element"], f"{cfg.gold_db}.dim_element")
     sink_table_overwrite(gold["dim_date"], f"{cfg.gold_db}.dim_date")
     sink_partition_overwrite(
-        gold["fact_climate"],
-        f"{cfg.gold_db}.fact_climate",
-        ("year", "month", "day"),
+        gold["fact_climate"], f"{cfg.gold_db}.fact_climate", DATE_PARTITIONS
     )
     manifest["silver_to_gold"] = "done"
 

@@ -61,17 +61,26 @@ def sink_partition_overwrite(
     """Overwrite only the partitions present in ``df`` (dynamic
     partition overwrite) — the fix for the reference's fact-table
     duplication bug (SURVEY §4.3.5: it re-appended the full fact on
-    every run). Idempotent per-partition refresh at any scale."""
+    every run). The first write creates the table, partitioned by
+    ``partition_by``. Later writes use ``insertInto``: it ignores a
+    per-write ``partitionOverwriteMode`` option, so the session conf
+    is set to ``dynamic`` and restored after; it matches columns by
+    position, so ``df`` is selected in the table's column order
+    first. The table's stored ``maxRecordsPerFile`` still applies."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    if not spark.catalog.tableExists(table):
         (
-            df.write.mode("overwrite")
-            .format("parquet")
+            df.write.format("parquet")
             .partitionBy(*partition_by)
             .option("maxRecordsPerFile", DEFAULT_MAX_RECORDS_PER_FILE)
             .saveAsTable(table)
+        )
+        return
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        df.select(*spark.table(table).columns).write.insertInto(
+            table, overwrite=True
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -1,7 +1,8 @@
 """End-to-end medallion pipeline tests over reference-shaped raw
 fixtures (FIXTURES.md §B; SURVEY §5.2.2-3): bronze→silver→gold
 correctness, idempotency (dims identical after re-run, fact not
-duplicated — fixing SURVEY §4.3.5), and skip-if-exists ingest."""
+duplicated — fixing SURVEY §4.3.5), per-file copy-if-absent ingest,
+and a day-by-day refresh that ends where a one-shot run does."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import os
 
 import pytest
 
+from aws_lakehouse_spark.sources.ingest import ingest_copy
 from aws_lakehouse_spark.sources.medallion import (
     bronze_to_silver_observations,
     parse_countries,
@@ -165,6 +167,92 @@ def test_pipeline_idempotent_rerun(spark, raw_dir, tmp_path):
     assert spark.table("t_silver.observations").count() == fact1
 
 
+def test_sink_partition_overwrite_replaces_only_present_partitions(spark):
+    """A later write replaces only the partitions its frame holds;
+    a frame whose columns come in another order lands by name."""
+    from aws_lakehouse_spark.sources.writers import sink_partition_overwrite
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(conf)
+
+    def write(rows, schema="k string, v double, day int"):
+        sink_partition_overwrite(
+            spark.createDataFrame(rows, schema), "t_part_ow", ("day",)
+        )
+
+    def read():
+        return sorted(
+            tuple(r) for r in spark.table("t_part_ow").select("k", "v", "day").collect()
+        )
+
+    spark.sql("DROP TABLE IF EXISTS t_part_ow")
+    try:
+        write([("a", 1.0, 1)])
+        write([("b", 2.0, 2)])
+        assert read() == [("a", 1.0, 1), ("b", 2.0, 2)]
+        write([("c", 3.0, 1), ("d", 4.0, 1)])
+        assert read() == [("b", 2.0, 2), ("c", 3.0, 1), ("d", 4.0, 1)]
+        write([(2, 5.0, "e")], "day int, v double, k string")
+        assert read() == [("c", 3.0, 1), ("d", 4.0, 1), ("e", 5.0, 2)]
+        assert spark.conf.get(conf) == mode
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_part_ow")
+
+
+def test_pipeline_day_by_day_equals_one_shot(spark, raw_dir, tmp_path):
+    """A daily refresh (d1, d2, then d1 again) into one Bronze root and
+    one pair of databases ends where one run over both days' files
+    does: each day's files reach Bronze, earlier days survive in
+    Silver and Gold, and the repeated day copies nothing."""
+    import shutil
+
+    obs = spark.read.parquet(str(raw_dir / "bronze" / "observations"))
+    src = {}
+    for day, date in (("d1", "20250115"), ("d2", "20250116")):
+        src[day] = str(tmp_path / f"src_{day}")
+        # Spark names each part file with a fresh UUID: distinct per day
+        obs.filter(f"DATE = '{date}'").write.partitionBy("YEAR", "ELEMENT").parquet(
+            src[day]
+        )
+    both = str(tmp_path / "src_both")
+    for day in ("d1", "d2"):
+        shutil.copytree(src[day], both, dirs_exist_ok=True)
+
+    def run(source, bronze, db):
+        return run_pipeline(spark, PipelineConfig(
+            source_path=source, bronze_root=bronze, dataset="obs",
+            silver_db=f"{db}_silver", gold_db=f"{db}_gold",
+        ))
+
+    daily = str(tmp_path / "bronze_daily")
+    for day in ("d1", "d2"):
+        assert run(src[day], daily, "dd")["ingest"]["skipped"] is False
+    again = run(src["d1"], daily, "dd")["ingest"]
+    assert again["skipped"] is True and again["copied"] == 0
+    # Spark's _SUCCESS and .crc files are not copied into Bronze
+    assert not [
+        n for _, _, files in os.walk(daily) for n in files if n[0] in "_."
+    ]
+    with pytest.raises(FileNotFoundError):
+        ingest_copy(spark, str(tmp_path / "no_such_source"), daily, "obs")
+    run(both, str(tmp_path / "bronze_once"), "os")
+
+    def result(db):
+        fact = spark.sql(
+            f"SELECT date_key, count(*) AS n, round(sum(value), 6) AS s "
+            f"FROM {db}_gold.fact_climate GROUP BY date_key"
+        )
+        return (
+            spark.table(f"{db}_silver.observations").count(),
+            sorted(tuple(r) for r in fact.collect()),
+            sorted(tuple(r) for r in spark.table(f"{db}_gold.dim_date").collect()),
+        )
+
+    daily_result = result("dd")
+    assert daily_result == result("os")
+    assert [str(d) for d, _, _ in daily_result[1]] == ["2025-01-15", "2025-01-16"]
+
+
 def test_pipeline_gold_snapshot_versions(spark, raw_dir, tmp_path):
     """With gold_snapshot_path set, each pipeline run commits one
     snapshot version of the gold fact — time-travelable across runs
@@ -247,22 +335,40 @@ def test_maintenance_compaction(spark, tmp_path, monkeypatch):
     }
 
 
-def test_maintenance_compaction_partitioned_preserves_data(spark):
+def test_maintenance_compaction_partitioned_preserves_data(spark, monkeypatch):
     """Regression: compaction of a *partitioned* table must preserve
-    both the rows (catalog partition locations go stale after the
-    rename swap) and the partition spec (for later appends)."""
+    the rows, the partition spec (for later appends) and the table's
+    location. It rewrites in place through the partition overwrite:
+    no DROP, RENAME or MSCK swap."""
     import pyspark.sql.functions as F
 
-    from aws_lakehouse_spark.sources.maintenance import compact_files
+    from aws_lakehouse_spark.sources.maintenance import (
+        _table_location,
+        compact_files,
+    )
 
     spark.range(0, 5_000).withColumn(
         "year", (F.col("id") % 3 + 2023).cast("int")
     ).repartition(10).write.partitionBy("year").mode("overwrite").saveAsTable(
         "t_maint_part"
     )
+    location = _table_location(spark, "t_maint_part")
+    before = len(spark.table("t_maint_part").inputFiles())
+    statements = []
+    real_sql = spark.sql
+    monkeypatch.setattr(
+        spark, "sql", lambda q, *a, **kw: statements.append(q) or real_sql(q, *a, **kw)
+    )
     for _ in range(2):  # repeated maintenance runs must be stable
         compact_files(spark, "t_maint_part")
         assert spark.table("t_maint_part").count() == 5_000
+    monkeypatch.undo()
+    assert not [
+        q for q in statements
+        if any(w in q.upper() for w in ("DROP", "RENAME", "MSCK"))
+    ]
+    assert _table_location(spark, "t_maint_part") == location
+    assert len(spark.table("t_maint_part").inputFiles()) < before
     assert [
         c.name
         for c in spark.catalog.listColumns("t_maint_part")

@@ -660,3 +660,24 @@ def test_scale_bench_decade_ratio_cpus_and_design_refusal():
     with pytest.raises(SystemExit):
         sb.scale_bench(["/data/sf0.1", "/data/sf0.001"], 8, cell=cell)
     assert not calls
+
+
+def test_pipeline_spans_name_pipeline_attributes():
+    """``lakebench/run.py --trace 1`` wraps each ``PIPELINE_SPANS`` key
+    with ``setattr(pipeline, name, wrap(getattr(pipeline, name)))``,
+    so a renamed or dropped callee in ``sources.pipeline`` would crash
+    the traced run. Reads the table from the benchmark's source."""
+    import ast
+
+    from aws_lakehouse_spark.sources import pipeline
+
+    with open(os.path.join(REPO, "lakebench", "tracing.py")) as fh:
+        tree = ast.parse(fh.read())
+    spans = next(
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and [getattr(t, "id", None) for t in node.targets] == ["PIPELINE_SPANS"]
+    )
+    assert "sink_partition_overwrite" in spans
+    assert [n for n in spans if not hasattr(pipeline, n)] == []
