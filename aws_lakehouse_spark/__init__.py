@@ -25,7 +25,7 @@ cannot express the semantics (Arrow-batched, never per-row).
 """
 
 from aws_lakehouse_spark.session import get_spark, configure_runtime
-from aws_lakehouse_spark.catalog import TABLES, load_table, load_tables, register_views
+from aws_lakehouse_spark.catalog import TABLES, load_table, register_views
 from aws_lakehouse_spark.registry import REGISTRY, register, QuerySpec
 
 __all__ = [
@@ -33,7 +33,6 @@ __all__ = [
     "configure_runtime",
     "TABLES",
     "load_table",
-    "load_tables",
     "register_views",
     "REGISTRY",
     "register",

@@ -6,14 +6,12 @@ from aws_lakehouse_spark.functions.scalar import (
     fixed_width_field,
     split_fields,
     code_map,
-    null_or_empty,
 )
 from aws_lakehouse_spark.functions.datetime_fns import (
     to_date_fmt,
-    date_parts,
     calendar_dim_parts,
 )
-from aws_lakehouse_spark.functions.json_fns import json_get, json_schema_parse
+from aws_lakehouse_spark.functions.json_fns import json_get
 
 __all__ = [
     "regex_extract",
@@ -21,10 +19,7 @@ __all__ = [
     "fixed_width_field",
     "split_fields",
     "code_map",
-    "null_or_empty",
     "to_date_fmt",
-    "date_parts",
     "calendar_dim_parts",
     "json_get",
-    "json_schema_parse",
 ]

@@ -1,8 +1,9 @@
-"""Date/time scalar helpers (SURVEY §2.8 F9-F11, F14).
+"""Date/time scalar helpers (SURVEY §2.8 F9, F11, F14).
 
 - F9 ``to_date(cast(x AS string), 'yyyyMMdd')`` — the reference's
   date-parse idiom, ``glue-jobs/noaa_ghcn_bronze_to_silver.py:79``;
-- F10 year/month/day partition derivation — ``:96-98``;
+  F10, the year/month/day partition derivation (``:96-98``), is
+  inline in ``sources/medallion.py``;
 - F11 calendar dimension attributes —
   ``glue-jobs/noaa_ghcn_silver_to_gold.py:75-78``.
 
@@ -20,15 +21,6 @@ from pyspark.sql import Column
 def to_date_fmt(col: Column, fmt: str = "yyyyMMdd") -> Column:
     """F9 — parse a (possibly numeric) YYYYMMDD-style column to date."""
     return F.to_date(col.cast("string"), fmt)
-
-
-def date_parts(col: Column) -> dict[str, Column]:
-    """F10 — partition-grain parts (year/month/day)."""
-    return {
-        "year": F.year(col).cast("int"),
-        "month": F.month(col).cast("int"),
-        "day": F.dayofmonth(col).cast("int"),
-    }
 
 
 def calendar_dim_parts(col: Column) -> dict[str, Column]:

@@ -83,11 +83,6 @@ def code_map(
     return out.otherwise(default)
 
 
-def null_or_empty(col: Column) -> Column:
-    """F16 — ``IS NULL OR = ''`` three-valued combo."""
-    return col.isNull() | (col == F.lit(""))
-
-
 def finite(col: Column) -> Column:
     """``col`` with NaN/±Inf turned to NULL — the guard for float
     measures flowing into ANSI integer casts (``floor(x*100)`` cent

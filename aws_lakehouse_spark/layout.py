@@ -5,10 +5,11 @@ The reference compacts files by size only (binpack,
 `OPTIMIZE ZORDER` additionally cluster rows so per-file min/max
 statistics become selective on SEVERAL columns at once. This module
 is that capability on plain Spark: an interleaved-bits (Morton) sort
-key computed as pure JVM expressions, plus a writer that range-
-partitions on it — each output file then covers a compact hyper-cube
-of the value space, and any engine reading the parquet footers
-(Spark, DuckDB, Trino) skips files on any of the clustered columns.
+key computed as pure JVM expressions. ``snapshots.optimize_zorder``
+range-partitions a table rewrite on it — each output file then covers
+a compact hyper-cube of the value space, and any engine reading the
+parquet footers (Spark, DuckDB, Trino) skips files on any of the
+clustered columns.
 
 At 100 TB this is the difference between touching every file for a
 2-column predicate and touching the few files whose cube intersects
@@ -18,7 +19,7 @@ write/compaction time.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -62,29 +63,6 @@ def zorder_code(
             bit = F.shiftright(q, b).bitwiseAND(F.lit(1))
             code = code.bitwiseOR(F.shiftleft(bit, b * n + i))
     return code
-
-
-def sink_parquet_zordered(
-    df: DataFrame,
-    path: str,
-    col_ranges: Mapping[str, tuple[float, float]],
-    n_files: int,
-    bits: int = 8,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered by the
-    Z-order of ``col_ranges``: range-partition on the Morton code
-    (one shuffle — same cost as any repartition) and sort within each
-    partition, so every file's footer min/max is tight on every
-    clustered column simultaneously."""
-    code = zorder_code(col_ranges, bits)
-    (
-        df.withColumn("__z", code)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def widen_if_narrow(df: DataFrame, min_factor: int = 1) -> DataFrame:

@@ -19,6 +19,10 @@ is replaced left-to-right and NON-OVERLAPPING in every word, with
 simultaneous-pass semantics: a symbol produced by a merge this round
 never re-merges as the LEFT side within the same round (the fold
 carries a just-merged flag to enforce it).
+
+No query trains: ``text_bpe_encode`` applies a frozen merge table.
+``bpe_train`` and its helpers stay as the training half that
+produces such a table.
 """
 
 from __future__ import annotations

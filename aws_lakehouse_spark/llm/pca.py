@@ -18,6 +18,10 @@ against literal component vectors), fully JVM-side.
 Sign convention: an eigenvector is only defined up to ±1; each
 component is normalized so its largest-|coordinate| entry is
 positive, making projections reproducible across runs/backends.
+
+No query calls ``principal_components``: the registry projects onto
+a frozen basis. It stays as the generator of that basis,
+``llm/pca_fixture.py``.
 """
 
 from __future__ import annotations

@@ -605,81 +605,3 @@ def lsh_bucket_topk_multiprobe(
         .filter(F.col("rnk") <= k)
         .withColumn("rnk", F.col("rnk").cast("int"))
     )
-
-
-def mmr_rerank(
-    candidates: DataFrame,
-    k: int = 5,
-    lambda_relevance: float = 0.7,
-    query_col: str = "query_id",
-    id_col: str = "neighbor_id",
-    vec_col: str = "embedding",
-    score_col: str = "cosine_sim",
-) -> DataFrame:
-    """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
-    1998) of an ANN candidate set: greedily pick the item maximizing
-    ``λ·relevance − (1−λ)·max-similarity-to-already-picked`` — the
-    diversity pass retrieval pipelines run on top-N before handing
-    top-k to a consumer (dedups near-identical hits that plain
-    cosine ranking stacks together).
-
-    Scale shape: MMR is inherently sequential in k, but it runs on
-    the BOUNDED candidate table ANN already produced (N per query,
-    e.g. 50), grouped per query — so the greedy loop executes inside
-    ``applyInPandas``, one Arrow batch per query group, never on the
-    corpus. k iterations over N candidates is O(k·N·d) per query —
-    microseconds at candidate scale; the cluster-level cost stays
-    the one shuffle that groups candidates by query.
-
-    ``candidates`` must carry (query_col, id_col, vec_col,
-    score_col). Returns (query_id, neighbor_id, mmr_rank, mmr_score,
-    relevance) with deterministic id tie-breaks.
-    """
-    import numpy as np
-    import pandas as pd
-
-    lam = float(lambda_relevance)
-    out_schema = (
-        f"{query_col} bigint, {id_col} bigint, mmr_rank int, "
-        "mmr_score double, relevance double"
-    )
-
-    def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([score_col, id_col], ascending=[False, True])
-        vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(vecs, axis=1)
-        norms[norms == 0] = 1.0
-        unit = vecs / norms[:, None]
-        rel = pdf[score_col].to_numpy(dtype=np.float64)
-        ids = pdf[id_col].to_numpy()
-        n = len(pdf)
-        picked: list[int] = []
-        scores: list[float] = []
-        cand = list(range(n))
-        while cand and len(picked) < k:
-            if not picked:
-                # ties already broken by the (score desc, id asc) sort
-                best_pos = 0
-                best_score = lam * rel[cand[0]]
-            else:
-                P = unit[picked]
-                best_pos, best_score = 0, -np.inf
-                for pos, ci in enumerate(cand):
-                    redundancy = float(np.max(P @ unit[ci]))
-                    s = lam * rel[ci] - (1.0 - lam) * redundancy
-                    if s > best_score + 1e-12:
-                        best_pos, best_score = pos, s
-            picked.append(cand.pop(best_pos))
-            scores.append(float(best_score))
-        sel = pdf.iloc[picked]
-        return pd.DataFrame(
-            {
-                query_col: sel[query_col].to_numpy(),
-                id_col: ids[picked],
-                "mmr_rank": np.arange(1, len(picked) + 1, dtype="int32"),
-                "mmr_score": np.round(scores, 6),
-                "relevance": np.round(rel[picked], 6),
-            }
-        )
-
-    return candidates.groupBy(query_col).applyInPandas(rerank, out_schema)

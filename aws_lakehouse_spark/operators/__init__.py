@@ -6,10 +6,6 @@ deterministic dedup tie-breaks, null-safe predicates), never a
 re-implementation of what Catalyst already optimizes.
 """
 
-from aws_lakehouse_spark.operators.projections import (
-    project_rename_cast,
-    derive_columns,
-)
 from aws_lakehouse_spark.operators.filters import (
     filter_quality_null_flags,
     filter_nonempty_key,
@@ -44,8 +40,6 @@ from aws_lakehouse_spark.operators.setops import (
 )
 
 __all__ = [
-    "project_rename_cast",
-    "derive_columns",
     "filter_quality_null_flags",
     "filter_nonempty_key",
     "filter_range_quality",

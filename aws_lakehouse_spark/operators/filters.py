@@ -20,11 +20,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def null_or_empty(col: Column) -> Column:
-    """Three-valued ``flag IS NULL OR flag = ''`` (F16 semantics)."""
-    return col.isNull() | (col == F.lit(""))
-
-
 def filter_quality_null_flags(
     df: DataFrame,
     value_col: str,

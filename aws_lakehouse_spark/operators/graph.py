@@ -209,8 +209,8 @@ def _pagerank_rounds(
     sliced: DataFrame, iterations: int, damping: float
 ) -> DataFrame:
     """The synchronous PageRank iterate over a hub-sliced adjacency
-    frame ``(src, deg, slice_i, nbrs)``; see :func:`pagerank` for the
-    algorithm/scale contract.
+    frame ``(src, deg, slice_i, nbrs)``; see
+    :func:`pagerank_from_adjacency` for the algorithm/scale contract.
 
     The adjacency is pinned for the rounds with a lazy
     ``localCheckpoint``: raw row-format partitions stored once, which
@@ -251,67 +251,48 @@ def _pagerank_rounds(
     return pr
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 5,
-    damping: float = 0.85,
-    max_degree: int = DEFAULT_MAX_DEGREE,
-) -> DataFrame:
-    """PageRank on an undirected (src<dst, distinct) edge list:
-    symmetric adjacency, uniform ``1/N`` init, K synchronous rounds of
-    ``pr'(v) = (1-d)/N + d * Σ_{u~v} pr(u)/deg(u)``; returns
-    ``(node, pr)``.
-
-    A symmetric graph has no dangling nodes (every node in the edge
-    list has degree ≥ 1), so no dangling-mass redistribution term is
-    needed — and, because every node therefore RECEIVES at least one
-    contribution each round, the aggregate over incoming edges
-    already covers the full node set: no per-round left join back to
-    a node table is needed at all (dropping it removed 5 node-sized
-    joins + sorts from the plan, −40% wall at sf0.1).
-
-    ``N`` comes off a count action — one scalar on the driver, never
-    row data. The adjacency is collapsed to per-node neighbor LISTS
-    (HUB-SLICED at build time: a node past ``max_degree`` neighbors
-    becomes several bounded rows via :func:`sliced_adjacency`, so a
-    web-scale super-hub can't OOM an executor or serialize the
-    explode — contributions from its slices re-merge in the same
-    keyed aggregate every round already runs, at no extra cost),
-    materialized ONCE for the rounds (a lazy ``localCheckpoint``; see
-    :func:`_pagerank_rounds` for the measurement); messages explode
-    out of the neighbor lists only AFTER the per-round join, so the
-    edge-sized frame is never a join input (vs joining the raw 2×|E|
-    adjacency every round). The only data-sized movement per round is
-    the contribution aggregate's shuffle, which map-side partial
-    aggregation bounds at (nodes × partitions). This is the Pregel
-    shape: edges stay put, only the O(N) rank vector moves.
-    Lineage is truncated with a lazy ``localCheckpoint`` every
-    :data:`ROUNDS_PER_CHECKPOINT`-th round, not every round: each
-    checkpoint costs a materialization barrier (~25% of the 5-round
-    wall when done per-round, measured at sf0.1), while the plan tree
-    only needs bounding, not flattening — three unchained rounds
-    deepen it by a constant.
-    """
-    return _pagerank_rounds(
-        sliced_adjacency(edges, max_degree), iterations, damping
-    )
-
-
 def pagerank_from_adjacency(
     adj_lists: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
     max_degree: int = DEFAULT_MAX_DEGREE,
 ) -> DataFrame:
-    """PageRank rounds over a prebuilt adjacency-list frame
-    ``(src, nbrs)`` — one row per node, ``nbrs`` its DISTINCT
-    neighbors. Callers that can produce neighbor lists in one shuffle
-    (e.g. ``collect_set`` straight off the pair expansion, which
-    dedups for free) skip the distinct-edge aggregate entirely; the
-    lists are hub-sliced (:func:`_slice_nbr_lists`) before the
-    rounds, so everything downstream of the caller's one build
-    aggregate is bounded at ``max_degree`` elements per row; see
-    :func:`pagerank` for the algorithm/scale contract."""
+    """PageRank over a prebuilt adjacency-list frame ``(src, nbrs)``
+    of an undirected graph — one row per node, ``nbrs`` its DISTINCT
+    neighbors: uniform ``1/N`` init, K synchronous rounds of
+    ``pr'(v) = (1-d)/N + d * Σ_{u~v} pr(u)/deg(u)``; returns
+    ``(node, pr)``.
+
+    Callers produce the lists in one shuffle (``collect_set`` straight
+    off the pair expansion, which dedups for free), so no
+    distinct-edge aggregate runs. A symmetric graph has no dangling
+    nodes (every listed node has degree ≥ 1), so no dangling-mass
+    redistribution term is needed — and, because every node
+    therefore RECEIVES at least one contribution each round, the
+    aggregate over incoming edges already covers the full node set:
+    no per-round left join back to a node table (dropping it removed
+    5 node-sized joins + sorts from the plan, −40% wall at sf0.1).
+
+    ``N`` comes off a count action — one scalar on the driver, never
+    row data. The lists are HUB-SLICED (:func:`_slice_nbr_lists`): a
+    node past ``max_degree`` neighbors becomes several bounded rows,
+    so a web-scale super-hub can't OOM an executor or serialize the
+    explode — contributions from its slices re-merge in the same
+    keyed aggregate every round already runs. The sliced frame is
+    materialized ONCE for the rounds (a lazy ``localCheckpoint``; see
+    :func:`_pagerank_rounds` for the measurement); messages explode
+    out of the neighbor lists only AFTER the per-round join, so the
+    edge-sized frame is never a join input. The only data-sized
+    movement per round is the contribution aggregate's shuffle, which
+    map-side partial aggregation bounds at (nodes × partitions). This
+    is the Pregel shape: edges stay put, only the O(N) rank vector
+    moves. Lineage is truncated with a lazy ``localCheckpoint`` every
+    :data:`ROUNDS_PER_CHECKPOINT`-th round, not every round: each
+    checkpoint costs a materialization barrier (~25% of the 5-round
+    wall when done per-round, measured at sf0.1), while the plan tree
+    only needs bounding, not flattening — three unchained rounds
+    deepen it by a constant.
+    """
     return _pagerank_rounds(
         _slice_nbr_lists(adj_lists, max_degree), iterations, damping
     )

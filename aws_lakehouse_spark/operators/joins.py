@@ -13,6 +13,11 @@ Engine policy for scale:
   running ``last(value)`` window resolves the as-of match. This
   scales to arbitrarily large both-sides (no broadcast, no driver
   collect) and handles skew via AQE.
+
+``asof_join_pandas`` (the ``cogroup().applyInPandas`` +
+``merge_asof`` shape) is called by no query or pipeline. It stays as
+the independent reference ``tests/test_properties.py`` compares
+``asof_join`` against.
 """
 
 from __future__ import annotations

@@ -93,26 +93,26 @@ _PRIORITY = [
     "ann_bruteforce_topk",
     "ann_lsh_bucketed",
     "ann_lsh_multiprobe",
+    "dedup_minhash_lsh_pairs",
     "dedup_minhash_signature",
+    "dedup_near_duplicate_resolution",
+    "dedup_ngram_jaccard",
     "dedup_simhash",
     "dedup_simhash_pairs",
-    "agg_histogram",
-    "agg_percentiles",
-    "agg_pivot",
-    "agg_quantile_sketch",
-    "cdc_snapshot_diff",
-    "events_gap_fill",
-    "join_full_outer",
-    "medallion_dim_scd2",
-    "medallion_station_parse",
-    "quality_expectations",
-    "quality_profile_numeric",
-    "quality_referential",
-    "sql_grouping_sets",
-    "sql_interactive_revenue",
-    "text_chunk_documents",
-    "text_domain_stats",
-    "text_global_shuffle",
+    "text_fingerprint",
+    "ann_embedding_neardup",
+    "ann_hybrid_rrf",
+    "ann_ivf_pq",
+    "ann_recall_eval",
+    "dedup_containment",
+    "dedup_lsh_quality",
+    "embed_cluster_assign",
+    "embed_kmeans_iteration",
+    "embed_outliers",
+    "embed_semdedup",
+    "graph_connected_components",
+    "graph_label_propagation",
+    "graph_pagerank_topk",
     # --- index 50 boundary: the graded window ends here ---
 ]
 

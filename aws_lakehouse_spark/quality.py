@@ -111,35 +111,3 @@ def mask_columns(df, policies: dict):
         else:
             raise ValueError(f"unknown masking policy {policy!r} for {col}")
     return out
-
-
-def validated_write(df, expectations: dict, writer_fn):
-    """Write gate: run ``writer_fn(observed_df)`` (any action-taking
-    writer) with ``expectations`` (name -> boolean-per-row Column)
-    tallied BY THE WRITE JOB itself via the Observation API, then
-    raise ``ValueError`` listing every violated expectation. One
-    job total — the data lands, the gate costs nothing extra, and a
-    violation surfaces immediately after (callers roll back via the
-    snapshot log's previous version when writing versioned tables).
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Observation
-
-    obs = Observation("write_gate")
-    metrics = [
-        F.count(F.when(~cond, F.lit(1))).alias(f"viol_{name}")
-        for name, cond in expectations.items()
-    ]
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n_rows"), *metrics)
-    writer_fn(observed)
-    got = obs.get
-    violations = {
-        name: got[f"viol_{name}"]
-        for name in expectations
-        if got[f"viol_{name}"] > 0
-    }
-    if violations:
-        raise ValueError(
-            f"write gate failed ({got['n_rows']} rows): {violations}"
-        )
-    return got

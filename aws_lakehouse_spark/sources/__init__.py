@@ -1,23 +1,8 @@
 """Sources & sinks: readers, writers, ingest, medallion pipeline,
 table maintenance (SURVEY §2.1 S1-S9, §2.9 M1-M4, §2.12 C1-C5)."""
 
-from aws_lakehouse_spark.sources.readers import (
-    scan_parquet,
-    scan_text,
-    scan_table,
-    scan_csv,
-    scan_json,
-)
-from aws_lakehouse_spark.sources.writers import (
-    sink_table_append,
-    sink_table_overwrite,
-    sink_table_bucketed,
-    sink_parquet_path,
-    sink_csv_path,
-    sink_json_path,
-    create_table_if_absent,
-    upsert_table,
-)
+from aws_lakehouse_spark.sources.readers import scan_parquet, scan_text
+from aws_lakehouse_spark.sources.writers import sink_table_overwrite
 from aws_lakehouse_spark.sources.ingest import ingest_copy
 from aws_lakehouse_spark.sources.maintenance import (
     compact_files,
@@ -30,17 +15,7 @@ from aws_lakehouse_spark.sources.pipeline import run_pipeline, retrying
 __all__ = [
     "scan_parquet",
     "scan_text",
-    "scan_table",
-    "scan_csv",
-    "scan_json",
-    "sink_table_append",
     "sink_table_overwrite",
-    "sink_table_bucketed",
-    "sink_parquet_path",
-    "sink_csv_path",
-    "sink_json_path",
-    "create_table_if_absent",
-    "upsert_table",
     "ingest_copy",
     "compact_files",
     "expire_snapshots",

@@ -85,6 +85,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     C4 (empty-input short-circuit) uses ``isEmpty()`` — one partial
     scan, not the reference's triple ``count()`` (SURVEY §4.3.1).
+    Maintenance isolates each table's ops, then a ``RuntimeError``
+    names every op that failed: the data is written, but the run did
+    not succeed.
     """
     retry = retrying(attempts=2, interval_s=cfg.retry_interval_s)
     manifest: dict = {}
@@ -152,6 +155,13 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     # 5. Maintenance (M1-M4)
     tables = cfg.maintenance_tables or (silver_table,)
     manifest["maintenance"] = run_maintenance(spark, list(tables))
+    failed = [
+        f"{e['table']} {e['op']}: {e['error']}"
+        for e in manifest["maintenance"]
+        if "error" in e
+    ]
+    if failed:
+        raise RuntimeError("maintenance failed: " + "; ".join(failed))
     return manifest
 
 
@@ -263,27 +273,6 @@ def run_scheduled(
             results.append({"at": fire, "result": None, "error": str(exc)})
         t = fire
     return results
-
-
-def with_observed_metrics(df, name: str, **metric_exprs):
-    """C5, zero-extra-job flavor — attach named aggregate metrics to
-    a DataFrame via Spark's Observation API: the metrics are computed
-    BY THE SAME JOB that executes the frame (accumulator-backed),
-    unlike the reference's ``df.count()`` progress logging which
-    re-runs the whole plan per metric
-    (``glue-jobs/noaa_ghcn_bronze_to_silver.py:52,56,92`` — the
-    triple-count inefficiency SURVEY §4.3.1 flags).
-
-    Returns ``(observed_df, observation)``; read
-    ``observation.get`` AFTER an action on ``observed_df``.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    observed = df.observe(obs, *[
-        expr.alias(alias) for alias, expr in metric_exprs.items()
-    ])
-    return observed, obs
 
 
 def run_backfill(

@@ -1,4 +1,5 @@
-"""Scan operators (SURVEY §2.1 S1-S3).
+"""Scan operators (SURVEY §2.1 S1-S2; S3, a catalog table scan, is
+``spark.table(name)`` at its call sites).
 
 S1 fixes the reference's self-inflicted inefficiency (SURVEY
 §4.3.2): it scanned with ``recursiveFileLookup`` — which *disables*
@@ -45,49 +46,3 @@ def scan_text(spark: SparkSession, path: str) -> DataFrame:
     (ref ``noaa_dimensions_bronze_to_silver.py:46,114,149,183``)."""
     configure_runtime(spark)
     return spark.read.text(path)
-
-
-def scan_table(spark: SparkSession, name: str) -> DataFrame:
-    """S3 — catalog table scan by name
-    (ref ``noaa_ghcn_silver_to_gold.py:41,45-47``)."""
-    return spark.table(name)
-
-
-def scan_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    header: bool = True,
-    sep: str = ",",
-) -> DataFrame:
-    """CSV scan (engine extension — the open-data files the reference
-    ingests ship as CSV upstream of its Bronze parquet). An explicit
-    ``schema`` DDL string avoids the inference pre-pass, which at
-    100 TB is a full extra read of every file; always pass one in
-    production paths."""
-    configure_runtime(spark)
-    reader = spark.read.option("header", str(header).lower()).option("sep", sep)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def scan_json(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    multiline: bool = False,
-) -> DataFrame:
-    """JSON-lines scan (engine extension). Same rule as ``scan_csv``:
-    pass a schema DDL to skip the inference read. ``multiline=True``
-    only for whole-file JSON documents — it disables per-line input
-    splitting, so each file becomes one task's work."""
-    configure_runtime(spark)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if multiline:
-        reader = reader.option("multiLine", "true")
-    return reader.json(path)

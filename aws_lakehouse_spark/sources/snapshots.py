@@ -1341,20 +1341,6 @@ def resolve_tag(table_path: str, name: str) -> int:
         raise ValueError(f"unknown tag {name!r} at {table_path!r}") from None
 
 
-def list_tags(table_path: str) -> dict[str, int]:
-    """All tags as name -> version."""
-    tags_dir = os.path.join(_log_path(table_path), "tags")
-    if not os.path.isdir(tags_dir):
-        return {}
-    out = {}
-    for f in sorted(os.listdir(tags_dir)):
-        if f.endswith(".json"):
-            with open(os.path.join(tags_dir, f)) as fh:
-                d = json.load(fh)
-            out[d["name"]] = int(d["version"])
-    return out
-
-
 def _branches_dir(table_path: str) -> str:
     return os.path.join(_log_path(table_path), "branches")
 

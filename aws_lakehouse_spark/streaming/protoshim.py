@@ -38,6 +38,10 @@ the function returns False and changes nothing, so callers keep
 their documented skip. Round-trip of the actual StateMessage proto
 (serialize + parse) was verified against the 6.32 runtime before
 adopting the skew waiver.
+
+No registry query runs a v2 stateful stream; the shim stays for the
+``transformWithStateInPandas`` faces in ``streaming/stateful.py``
+(``running_profile_per_key``), which callers shim first.
 """
 
 from __future__ import annotations

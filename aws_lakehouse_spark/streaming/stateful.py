@@ -11,6 +11,10 @@ Scale properties: state lives in the executor state store keyed by
 the grouping key (one shuffle per batch on that key); batches arrive
 as Arrow-backed pandas frames, so the per-key update is vectorized,
 never per-row Python.
+
+No registry query runs these operators; each is the readStream face
+of a registry batch query, and ``tests/test_streaming.py`` /
+``tests/test_cep.py`` hold the two equal.
 """
 
 from __future__ import annotations

@@ -7,6 +7,10 @@ streaming transformations with watermarks. Each builder takes a
 attach a sink. Late data beyond the watermark is dropped by the
 engine — the state store stays bounded no matter how long the stream
 runs (the 100 TB-stream equivalent of partition pruning).
+
+No registry query runs these builders; each is the readStream face of
+a registry batch query, and ``tests/test_streaming.py`` holds the two
+equal.
 """
 
 from __future__ import annotations
@@ -44,32 +48,6 @@ def streaming_tumbling_counts(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
             *keys,
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def streaming_session_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    gap: str = "30 minutes",
-    key: str = "user_id",
-) -> DataFrame:
-    """Watermarked session windows per key (gap-merged)."""
-    events = _ltz(events, ts_col)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), key)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            key,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
             "n_events",
             "total_value",
         )

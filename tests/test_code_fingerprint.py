@@ -1,10 +1,18 @@
 """Contracts for the transitive code-object fingerprint that drives
 grade tainting (r9 verdict item 2): deterministic, path-independent,
 sensitive to executed-code and oracle changes, insensitive to
-registry ordering. No Spark session."""
+registry ordering. The same walk also proves that every package
+function is reached from an entry point. No Spark session."""
 
+import ast
+import dis
+import glob
+import importlib
+import inspect
 import os
+import pkgutil
 import sys
+import types
 
 sys.path.insert(
     0,
@@ -12,8 +20,11 @@ sys.path.insert(
 )
 
 from code_fingerprint import (  # noqa: E402
+    PKG,
+    _class_functions,
     closure_items,
     fingerprint,
+    reached_codes,
     registry_fingerprints,
 )
 
@@ -162,3 +173,163 @@ def test_function_scoped_import_module_as_alias():
     codes, _ = closure_items(ns["q"])
     names = {c.split(b"\x1f", 1)[0].decode() for c in codes}
     assert "widen_if_narrow" in names
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_STREAM_FACE = (
+    "readStream face of a registry batch query; tests/test_streaming.py "
+    "and tests/test_cep.py hold the two equal"
+)
+
+# Package functions no entry point calls, each with the reason it
+# stays (its module docstring repeats it). What a kept function calls
+# (``stream_stream_attribution_outer`` runs ``stream_stream_attribution``)
+# is reached through it and not listed.
+KEEP = {
+    "aws_lakehouse_spark.operators.joins.asof_join_pandas": (
+        "cogroup reference tests/test_properties.py compares asof_join "
+        "against"
+    ),
+    "aws_lakehouse_spark.llm.pca.principal_components": (
+        "generator of the frozen basis in llm/pca_fixture.py"
+    ),
+    "aws_lakehouse_spark.llm.bpe.bpe_train": (
+        "training half whose merge table text_bpe_encode ships"
+    ),
+    "aws_lakehouse_spark.streaming.windows.streaming_tumbling_counts": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.windows.streaming_dedup": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.windows.stream_enrich_static": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.windows.stream_stream_attribution_outer": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.stateful.running_totals_per_key": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.stateful.sessionize_per_key": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.stateful.detect_pattern_per_key": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.stateful.running_profile_per_key": _STREAM_FACE,
+    "aws_lakehouse_spark.streaming.protoshim.enable_protobuf_shim": (
+        "makes google.protobuf importable for the "
+        "transformWithStateInPandas streaming faces"
+    ),
+}
+
+
+def _modules() -> list:
+    import aws_lakehouse_spark
+
+    return [aws_lakehouse_spark] + [
+        importlib.import_module(info.name)
+        for info in pkgutil.walk_packages(aws_lakehouse_spark.__path__, PKG + ".")
+    ]
+
+
+def _package_functions(modules) -> dict:
+    """Qualified name -> code of every function and method defined in
+    a package file. Dataclass-generated methods are compiled from a
+    string, not a package file, so they are not listed."""
+    pkg_dir = os.path.dirname(modules[0].__file__)
+    out = {}
+    for mod in modules:
+        for v in vars(mod).values():
+            if getattr(v, "__module__", None) != mod.__name__:
+                continue
+            for fn in _class_functions(v) if isinstance(v, type) else [v]:
+                code = getattr(inspect.unwrap(fn), "__code__", None)
+                if code is not None and code.co_filename.startswith(pkg_dir):
+                    out[f"{mod.__name__}.{fn.__qualname__}"] = code
+    return out
+
+
+def _import_time_names(modules):
+    """What each module's body loads while it is imported: decorators
+    and their arguments (an ``oracle=`` string built by a helper) and
+    module-level calls. Read off the body's own bytecode, so names
+    used only inside a function body do not count."""
+    for mod in modules:
+        with open(mod.__file__) as fh:
+            body = compile(fh.read(), mod.__file__, "exec")
+        g = vars(mod)
+        for ins in dis.get_instructions(body):
+            if ins.opname == "LOAD_NAME" and ins.argval in g:
+                yield g[ins.argval]
+
+
+def _tool_imports():
+    """Every package object bench.py, lakebench/ and tools/ import. A
+    module import contributes only the attributes the file reads off
+    its name (``pipeline.run_pipeline``); a bare ``import pkg.mod``
+    without ``as`` is not read."""
+    paths = [os.path.join(REPO, "bench.py")]
+    for d in ("lakebench", "tools"):
+        paths += sorted(glob.glob(os.path.join(REPO, d, "*.py")))
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        read = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                read.setdefault(node.value.id, set()).add(node.attr)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG):
+                mod = importlib.import_module(node.module)
+                bound = [
+                    (a.asname or a.name, getattr(mod, a.name)
+                     if hasattr(mod, a.name)
+                     else importlib.import_module(f"{node.module}.{a.name}"))
+                    for a in node.names
+                ]
+            elif isinstance(node, ast.Import):
+                bound = [
+                    (a.asname, importlib.import_module(a.name))
+                    for a in node.names
+                    if a.name.startswith(PKG) and a.asname
+                ]
+            else:
+                continue
+            for alias, obj in bound:
+                if isinstance(obj, types.ModuleType):
+                    yield from (
+                        getattr(obj, a) for a in read.get(alias, ()) if hasattr(obj, a)
+                    )
+                else:
+                    yield obj
+
+
+def _reached(roots) -> set:
+    codes: set = set()
+    for obj in {id(r): r for r in roots}.values():
+        for fn in _class_functions(obj) if isinstance(obj, type) else [obj]:
+            codes |= reached_codes(fn)
+    return codes
+
+
+def test_every_package_function_is_reached_from_an_entry_point():
+    """Roots: the registry builders, the driver contract, the pipeline
+    entry points, what the benchmark and tools import, and what each
+    module runs while it is imported. A function none of them reaches
+    is deleted, or kept in ``KEEP`` with its reason. The walk cannot
+    see dynamic calls (``getattr`` on a computed name), so grep a name
+    before deleting it."""
+    import __spark_entry__
+    from aws_lakehouse_spark.plans import REGISTRY
+    from aws_lakehouse_spark.sources import pipeline
+
+    modules = _modules()
+    reached = _reached([
+        *(spec.fn for spec in REGISTRY.values()),
+        __spark_entry__.entry,
+        __spark_entry__.queries,
+        __spark_entry__.oracle_sql,
+        pipeline.run_pipeline,
+        pipeline.run_scheduled,
+        pipeline.run_backfill,
+        *_tool_imports(),
+        *_import_time_names(modules),
+    ])
+    functions = _package_functions(modules)
+    unreached = {n for n, code in functions.items() if code not in reached}
+    kept = _reached(
+        getattr(importlib.import_module(mod), attr)
+        for mod, _, attr in (n.rpartition(".") for n in KEEP)
+    )
+    assert sorted(n for n in unreached if functions[n] not in kept) == []
+    # a name an entry point reaches needs no reason to stay
+    assert sorted(set(KEEP) - unreached) == []

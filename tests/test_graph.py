@@ -7,8 +7,11 @@ import math
 import pyspark.sql.functions as F
 
 from aws_lakehouse_spark.operators.graph import (
+    _pagerank_rounds,
     degrees,
-    pagerank,
+    pagerank_from_adjacency,
+    sliced_adjacency,
+    symmetrize,
     triangle_count,
 )
 
@@ -18,6 +21,14 @@ SF_DIR = "/root/testdata/sf0.001"
 def _edges(spark, pairs):
     return spark.createDataFrame(
         [(int(a), int(b)) for a, b in pairs], "src bigint, dst bigint"
+    )
+
+
+def _nbr_lists(edges):
+    """``(src, nbrs)`` distinct-neighbour lists of an undirected edge
+    list: the input ``pagerank_from_adjacency`` takes."""
+    return symmetrize(edges).groupBy("src").agg(
+        F.collect_set("dst").alias("nbrs")
     )
 
 
@@ -54,7 +65,9 @@ def test_pagerank_sums_to_one_and_respects_symmetry(spark):
     # path 1-2-3: symmetric ends must tie exactly; mass conserved
     pr = {
         r["node"]: r["pr"]
-        for r in pagerank(_edges(spark, [(1, 2), (2, 3)]), 10).collect()
+        for r in pagerank_from_adjacency(
+            _nbr_lists(_edges(spark, [(1, 2), (2, 3)])), 10
+        ).collect()
     }
     assert math.isclose(sum(pr.values()), 1.0, rel_tol=1e-9)
     assert pr[1] == pr[3]
@@ -74,7 +87,10 @@ def test_pagerank_matches_dense_reference(spark):
     p = np.full(n, 1.0 / n)
     for _ in range(it):
         p = (1 - d) / n + d * adj.T @ (p / deg)
-    got = {r["node"]: r["pr"] for r in pagerank(_edges(spark, e), it).collect()}
+    got = {
+        r["node"]: r["pr"]
+        for r in pagerank_from_adjacency(_nbr_lists(_edges(spark, e)), it).collect()
+    }
     for i in range(n):
         assert math.isclose(got[i + 1], p[i], rel_tol=1e-12), (i, got, p)
 
@@ -92,29 +108,19 @@ def test_copurchase_edges_are_canonical(spark):
 
 
 def test_pagerank_from_adjacency_matches_edge_form(spark):
-    """The adjacency-list fast path must produce the same ranks as
-    pagerank() over the equivalent edge list."""
-    import pyspark.sql.functions as F
-
-    from aws_lakehouse_spark.operators.graph import (
-        pagerank,
-        pagerank_from_adjacency,
-        symmetrize,
-    )
-
+    """The adjacency-list path must produce the same ranks as the
+    same rounds over the edge-list build (``sliced_adjacency``, which
+    label propagation uses)."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 4), (2, 4)], "src long, dst long"
     )
     via_edges = {
         r["node"]: round(r["pr"], 10)
-        for r in pagerank(edges, iterations=4).collect()
+        for r in _pagerank_rounds(sliced_adjacency(edges, 10**6), 4, 0.85).collect()
     }
-    adj = symmetrize(edges).groupBy("src").agg(
-        F.collect_set("dst").alias("nbrs")
-    )
     via_adj = {
         r["node"]: round(r["pr"], 10)
-        for r in pagerank_from_adjacency(adj, iterations=4).collect()
+        for r in pagerank_from_adjacency(_nbr_lists(edges), iterations=4).collect()
     }
     assert via_edges == via_adj
     assert abs(sum(via_adj.values()) - 1.0) < 1e-9
@@ -247,32 +253,25 @@ def test_hub_slicing_matches_unsliced_pagerank(spark):
     regroups the same per-edge contributions, and the keyed
     aggregate re-merges them (verdict r4 'super-hub OOM' watch
     item). Exercises BOTH slicing paths: the salted build
-    (pagerank over edges) and the array-slice path
+    (``sliced_adjacency`` over edges) and the array-slice path
     (pagerank_from_adjacency)."""
-    from aws_lakehouse_spark.operators.graph import (
-        pagerank,
-        pagerank_from_adjacency,
-        sliced_adjacency,
-        symmetrize,
-    )
-
     # hub 0 connected to 1..60, plus a ring 1-2, 3-4, ... for texture
     pairs = [(0, i) for i in range(1, 61)] + [
         (i, i + 1) for i in range(1, 60, 2)
     ]
     edges = _edges(spark, pairs)
 
+    adj = _nbr_lists(edges)
     unsliced = {
         r["node"]: r["pr"]
-        for r in pagerank(edges, iterations=4, max_degree=10**6).collect()
+        for r in pagerank_from_adjacency(
+            adj, iterations=4, max_degree=10**6
+        ).collect()
     }
     via_salted = {
         r["node"]: r["pr"]
-        for r in pagerank(edges, iterations=4, max_degree=7).collect()
+        for r in _pagerank_rounds(sliced_adjacency(edges, 7), 4, 0.85).collect()
     }
-    adj = symmetrize(edges).groupBy("src").agg(
-        F.collect_set("dst").alias("nbrs")
-    )
     via_arrayslice = {
         r["node"]: r["pr"]
         for r in pagerank_from_adjacency(
@@ -350,8 +349,8 @@ def test_pagerank_random_graphs_any_cap_matches_dense(spark):
             p = (1 - d) / n + d * adj.T @ (p / deg)
         got = {
             r["node"]: r["pr"]
-            for r in pagerank(
-                _edges(spark, pairs), it, max_degree=cap
+            for r in pagerank_from_adjacency(
+                _nbr_lists(_edges(spark, pairs)), it, max_degree=cap
             ).collect()
         }
         assert set(got) == set(present), (seed, cap)

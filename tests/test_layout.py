@@ -1,13 +1,10 @@
 """Z-order layout tests: Morton code correctness + the actual
-file-skipping payoff (per-file min/max tightness vs hash layout)."""
+file-skipping payoff of a Z-ordered rewrite (per-file min/max
+tightness vs hash layout)."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
-
-from aws_lakehouse_spark.layout import sink_parquet_zordered, zorder_code
+from aws_lakehouse_spark.layout import zorder_code
 
 
 def test_zorder_code_interleaves_bits(spark):
@@ -31,56 +28,37 @@ def test_zorder_code_interleaves_bits(spark):
                    morton(3, 3), morton(1, 2)]
 
 
-def _mean_file_range(path: str, col: str) -> float:
-    widths = []
-    for f in glob.glob(f"{path}/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        lo = min(
-            md.row_group(i).column(idx).statistics.min
-            for i in range(md.num_row_groups)
-        )
-        hi = max(
-            md.row_group(i).column(idx).statistics.max
-            for i in range(md.num_row_groups)
-        )
-        widths.append(hi - lo)
-    return sum(widths) / len(widths)
-
-
 def test_zorder_tightens_file_stats(spark, sf_dir, tmp_path):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_quantity", "l_extendedprice"
+    """``snapshots.optimize_zorder`` rewrites a hash-laid-out table
+    clustered by ``zorder_code``; each file's footer range must get
+    much tighter on both clustered columns."""
+    from aws_lakehouse_spark.sources import snapshots
+
+    cols = ("l_quantity", "l_extendedprice")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(*cols)
+    lo = li.agg({c: "min" for c in cols}).collect()[0]
+    hi = li.agg({c: "max" for c in cols}).collect()[0]
+    ranges = {c: (lo[f"min({c})"], hi[f"max({c})"]) for c in cols}
+    table = str(tmp_path / "z")
+    v0 = snapshots.snapshot_write(
+        spark, li.repartition(8), table, "overwrite", stats_cols=list(cols)
     )
-    stats = li.agg(
-        {"l_quantity": "min", "l_extendedprice": "min"}
-    ).collect()[0]
-    stats_max = li.agg(
-        {"l_quantity": "max", "l_extendedprice": "max"}
-    ).collect()[0]
-    ranges = {
-        "l_quantity": (stats["min(l_quantity)"], stats_max["max(l_quantity)"]),
-        "l_extendedprice": (
-            stats["min(l_extendedprice)"],
-            stats_max["max(l_extendedprice)"],
-        ),
-    }
-    zpath = str(tmp_path / "z")
-    hpath = str(tmp_path / "h")
-    sink_parquet_zordered(li, zpath, ranges, n_files=8)
-    li.repartition(8).write.mode("overwrite").parquet(hpath)
+    v1 = snapshots.optimize_zorder(spark, table, ranges, n_files=8)
+
+    def mean_file_range(version, col):
+        stats = snapshots._read_manifest(table, version)["stats"]
+        widths = [s[col][1] - s[col][0] for s in stats.values()]
+        return sum(widths) / len(widths)
 
     # hash layout: every file spans ~the full domain of both columns;
     # z-order: each file covers a compact cube → much tighter stats
-    for col in ("l_quantity", "l_extendedprice"):
-        z_w = _mean_file_range(zpath, col)
-        h_w = _mean_file_range(hpath, col)
+    for col in cols:
+        z_w = mean_file_range(v1, col)
+        h_w = mean_file_range(v0, col)
         assert z_w < 0.7 * h_w, (col, z_w, h_w)
 
     # layout must not lose or duplicate rows
-    assert (
-        spark.read.parquet(zpath).count() == li.count()
-    )
+    assert snapshots.read_snapshot(spark, table, v1).count() == li.count()
 
 
 def test_widen_if_narrow_no_rdd_materialization(spark, tmp_path):

@@ -748,55 +748,6 @@ def test_bpe_simultaneous_pass_no_remerge(spark):
     assert got2 == ["aaa", "aa", "a"]
 
 
-def test_mmr_rerank_prefers_diversity(spark):
-    """MMR must break up a cluster of near-identical top hits: with
-    two duplicate high-relevance vectors and one orthogonal medium
-    hit, rank 2 goes to the orthogonal item, not the duplicate."""
-    from aws_lakehouse_spark.llm.similarity import mmr_rerank
-
-    rows = [
-        # query 0: two identical direction vectors (sim 0.95, 0.94)
-        # and an orthogonal one (sim 0.6)
-        (0, 10, [1.0, 0.0], 0.95),
-        (0, 11, [1.0, 0.0], 0.94),
-        (0, 12, [0.0, 1.0], 0.60),
-    ]
-    cand = spark.createDataFrame(
-        rows,
-        "query_id bigint, neighbor_id bigint, "
-        "embedding array<double>, cosine_sim double",
-    )
-    out = {
-        r["mmr_rank"]: r["neighbor_id"]
-        for r in mmr_rerank(cand, k=3, lambda_relevance=0.7).collect()
-    }
-    assert out[1] == 10          # best relevance first
-    assert out[2] == 12          # diversity beats the duplicate
-    assert out[3] == 11
-
-
-def test_mmr_rerank_lambda_one_is_pure_relevance(spark):
-    from aws_lakehouse_spark.llm.similarity import mmr_rerank
-
-    rows = [
-        (0, 1, [1.0, 0.0], 0.9),
-        (0, 2, [1.0, 0.0], 0.8),
-        (0, 3, [0.0, 1.0], 0.7),
-        (1, 4, [1.0, 1.0], 0.5),
-        (1, 5, [1.0, 0.0], 0.4),
-    ]
-    cand = spark.createDataFrame(
-        rows,
-        "query_id bigint, neighbor_id bigint, "
-        "embedding array<double>, cosine_sim double",
-    )
-    out = {
-        (r["query_id"], r["mmr_rank"]): r["neighbor_id"]
-        for r in mmr_rerank(cand, k=2, lambda_relevance=1.0).collect()
-    }
-    assert out == {(0, 1): 1, (0, 2): 2, (1, 1): 4, (1, 2): 5}
-
-
 def _bpe_fold_reference(word: str, merges: list[tuple[str, str]]) -> list[str]:
     """Sequential reference for one word: per rule, left-to-right
     non-overlapping simultaneous-pass replacement over the symbol

@@ -300,6 +300,37 @@ def test_pipeline_empty_input_short_circuit(spark, tmp_path):
     assert "silver_to_gold" not in manifest
 
 
+def test_pipeline_raises_on_maintenance_error(spark, raw_dir, tmp_path, monkeypatch):
+    """A maintenance op that fails must fail the run, after every
+    table has had its ops: the missing table's error does not stop
+    the real table's expiry, compaction and orphan sweep."""
+    from aws_lakehouse_spark.sources import pipeline
+
+    entries = []
+    real_maintenance = pipeline.run_maintenance
+    monkeypatch.setattr(
+        pipeline,
+        "run_maintenance",
+        lambda s, t: entries.extend(real_maintenance(s, t)) or entries,
+    )
+    cfg = PipelineConfig(
+        source_path=str(raw_dir / "bronze" / "observations"),
+        bronze_root=str(tmp_path / "bronze"),
+        silver_db="e_silver",
+        gold_db="e_gold",
+        dataset="obs",
+        maintenance_tables=("e_silver.no_such_table", "e_silver.observations"),
+    )
+    with pytest.raises(RuntimeError, match="e_silver.no_such_table"):
+        run_pipeline(spark, cfg)
+    ok = [e for e in entries if e["table"] == "e_silver.observations"]
+    assert [e["op"] for e in ok] == [
+        "expire_snapshots", "compact_files", "remove_orphans",
+    ]
+    assert not [e for e in ok if "error" in e]
+    assert [e for e in entries if "error" in e]
+
+
 def test_maintenance_compaction(spark, tmp_path, monkeypatch):
     import pyspark.sql.functions as F
 
@@ -381,40 +412,43 @@ def test_maintenance_compaction_partitioned_preserves_data(spark, monkeypatch):
     assert spark.table("t_maint_part").count() == 5_001
 
 
-def test_upsert_table_scd1(spark):
-    from aws_lakehouse_spark.sources import upsert_table
+def test_upsert_table_scd1(spark, tmp_path):
+    """SCD-1 upsert through ``snapshots.merge_into``: matched rows are
+    replaced, new keys inserted, untouched rows survive, and
+    re-applying the same updates changes nothing."""
+    from aws_lakehouse_spark.sources import snapshots
 
-    spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "k bigint, name string, v double",
-    ).write.mode("overwrite").saveAsTable("upsert_target")
-    try:
-        updates = spark.createDataFrame(
-            [(2, "b2", 21.0), (4, "d", 40.0)],
+    table = str(tmp_path / "upsert_target")
+    snapshots.snapshot_write(
+        spark,
+        spark.createDataFrame(
+            [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
             "k bigint, name string, v double",
-        )
-        upsert_table(spark, "upsert_target", updates, ["k"])
-        got = {
+        ),
+        table,
+        "overwrite",
+    )
+    updates = spark.createDataFrame(
+        [(2, "b2", 21.0), (4, "d", 40.0)], "k bigint, name string, v double"
+    )
+
+    def rows():
+        return {
             r["k"]: (r["name"], r["v"])
-            for r in spark.table("upsert_target").collect()
+            for r in snapshots.read_snapshot(spark, table).collect()
         }
-        assert got == {
-            1: ("a", 10.0),   # untouched survives
-            2: ("b2", 21.0),  # updated in place
-            3: ("c", 30.0),
-            4: ("d", 40.0),   # inserted
-        }
-        # idempotent: re-applying the same updates changes nothing
-        upsert_table(spark, "upsert_target", updates, ["k"])
-        again = {
-            r["k"]: (r["name"], r["v"])
-            for r in spark.table("upsert_target").collect()
-        }
-        assert again == got
-        assert not spark.catalog.tableExists("upsert_target__upsert_staging")
-    finally:
-        spark.sql("DROP TABLE IF EXISTS upsert_target")
-        spark.sql("DROP TABLE IF EXISTS upsert_target__upsert_staging")
+
+    snapshots.merge_into(spark, table, updates, on=["k"])
+    got = rows()
+    assert got == {
+        1: ("a", 10.0),   # untouched survives
+        2: ("b2", 21.0),  # updated in place
+        3: ("c", 30.0),
+        4: ("d", 40.0),   # inserted
+    }
+    # idempotent: re-applying the same updates changes nothing
+    snapshots.merge_into(spark, table, updates, on=["k"])
+    assert rows() == got
 
 
 def test_cron_next_reference_cadence():
@@ -476,29 +510,3 @@ def test_run_scheduled_injectable_clock_and_isolation():
     ]
     assert [r["result"] for r in results] == ["run1", None, "run3"]
     assert results[1]["error"] == "transient"
-
-
-def test_observed_metrics_single_job(spark, sf_dir):
-    """C5 via the Observation API: row counts and quality tallies
-    arrive from the SAME job that writes the data — no re-execution
-    of the plan per metric (the reference's triple-count bug)."""
-    import pyspark.sql.functions as F
-
-    from aws_lakehouse_spark.catalog import load_table
-    from aws_lakehouse_spark.sources.pipeline import with_observed_metrics
-
-    li = load_table(spark, sf_dir, "lineitem")
-    observed, obs = with_observed_metrics(
-        li.filter(F.col("l_quantity") > 0),
-        "cleanse_metrics",
-        n_rows=F.count(F.lit(1)),
-        n_null_ship=F.count(
-            F.when(F.col("l_shipdate").isNull(), F.lit(1))
-        ),
-        total_qty=F.sum("l_quantity"),
-    )
-    observed.write.format("noop").mode("overwrite").save()
-    m = obs.get
-    assert m["n_rows"] == li.filter(F.col("l_quantity") > 0).count()
-    assert m["n_null_ship"] == 0
-    assert m["total_qty"] > 0

@@ -168,39 +168,6 @@ def test_asof_pandas_matches_window_path(spark, sf_dir):
     assert a == b and len(a) == left.count()
 
 
-def test_validated_write_gate(spark, tmp_path):
-    """The write gate lands the data and tallies expectations in the
-    SAME job; violations raise with per-rule counts."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from aws_lakehouse_spark.quality import validated_write
-
-    good = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0)], "k bigint, v double"
-    )
-    out = str(tmp_path / "good")
-    got = validated_write(
-        good,
-        {"v_positive": F.col("v") > 0, "k_notnull": F.col("k").isNotNull()},
-        lambda df: df.write.mode("overwrite").parquet(out),
-    )
-    assert got["n_rows"] == 2
-    assert spark.read.parquet(out).count() == 2
-
-    bad = spark.createDataFrame(
-        [(1, 10.0), (2, -5.0), (3, -1.0)], "k bigint, v double"
-    )
-    with pytest.raises(ValueError, match="v_positive.*2|2.*v_positive"):
-        validated_write(
-            bad,
-            {"v_positive": F.col("v") > 0},
-            lambda df: df.write.mode("overwrite").parquet(
-                str(tmp_path / "bad")
-            ),
-        )
-
-
 def test_backfill_idempotent_and_resumable(tmp_path):
     """run_backfill executes only unmarked days; failures retry on
     the next invocation; widening the range backfills only new days."""

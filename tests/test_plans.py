@@ -91,37 +91,6 @@ def test_asof_single_shuffle(spark, sf_dir):
     assert plan.count(" Exchange (") == 1
 
 
-def test_bucketed_join_no_exchange(spark, sf_dir):
-    """Two tables bucketed on the join key into the same bucket count
-    must join with zero Exchange — the 100 TB co-location strategy
-    for repeated fact-fact joins."""
-    from aws_lakehouse_spark.catalog import load_table
-    from aws_lakehouse_spark.sources import sink_table_bucketed
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    sink_table_bucketed(li, "bkt_lineitem", ["l_orderkey"], n_buckets=4)
-    sink_table_bucketed(o, "bkt_orders", ["o_orderkey"], n_buckets=4)
-    try:
-        a = spark.table("bkt_lineitem")
-        b = spark.table("bkt_orders")
-        joined = a.join(
-            b.hint("merge"), a.l_orderkey == b.o_orderkey
-        ).groupBy("l_orderkey").agg({"l_quantity": "sum"})
-        plan = spark._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in plan, plan
-        assert joined.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-
-
 def test_banded_range_join_is_equi(spark, sf_dir):
     """The banded range join must plan as an equi-join on the band id
     (hash/broadcast-hash), never a nested loop over the cross space."""
@@ -462,12 +431,18 @@ def test_pregel_default_pin_is_checkpoint_not_cache(spark):
     test fails if the pin becomes a cache again."""
     import pyspark.sql.functions as F
 
-    from aws_lakehouse_spark.operators.graph import pagerank
+    from aws_lakehouse_spark.operators.graph import (
+        pagerank_from_adjacency,
+        symmetrize,
+    )
 
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3)], "src bigint, dst bigint"
     )
-    pr = pagerank(edges, iterations=2)
+    adj = symmetrize(edges).groupBy("src").agg(
+        F.collect_set("dst").alias("nbrs")
+    )
+    pr = pagerank_from_adjacency(adj, iterations=2)
     plan = spark._sc._jvm.PythonSQLUtils.explainString(
         pr._jdf.queryExecution(), "formatted"
     )

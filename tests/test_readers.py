@@ -1,15 +1,10 @@
-"""Reader-operator tests (SURVEY §2.1 S1-S2 + csv/json extensions)."""
+"""Reader-operator tests (SURVEY §2.1 S1-S2, Python data source)."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from aws_lakehouse_spark.sources import (
-    scan_csv,
-    scan_json,
-    scan_parquet,
-    scan_text,
-)
+from aws_lakehouse_spark.sources import scan_parquet, scan_text
 
 
 def test_scan_parquet_partition_discovery_and_pruning(spark, tmp_path):
@@ -32,121 +27,12 @@ def test_scan_parquet_partition_discovery_and_pruning(spark, tmp_path):
     assert pruned.count() == 25
 
 
-def test_scan_csv_explicit_schema(spark, tmp_path):
-    p = tmp_path / "t.csv"
-    p.write_text("k,v\n1,a\n2,b\n")
-    out = scan_csv(spark, str(p), schema="k INT, v STRING")
-    assert out.schema.simpleString() == "struct<k:int,v:string>"
-    assert sorted((r["k"], r["v"]) for r in out.collect()) == [
-        (1, "a"), (2, "b")
-    ]
-
-
-def test_scan_json_lines(spark, tmp_path):
-    p = tmp_path / "t.jsonl"
-    p.write_text('{"k": 1, "v": "a"}\n{"k": 2, "v": "b"}\n')
-    out = scan_json(spark, str(p), schema="k BIGINT, v STRING")
-    assert sorted((r["k"], r["v"]) for r in out.collect()) == [
-        (1, "a"), (2, "b")
-    ]
-
-
 def test_scan_text_single_value_column(spark, tmp_path):
     p = tmp_path / "fixed.txt"
     p.write_text("US  United States\nFR  France\n")
     out = scan_text(spark, str(p))
     assert out.columns == ["value"]
     assert out.count() == 2
-
-
-def test_csv_json_write_read_roundtrip(spark, tmp_path):
-    from aws_lakehouse_spark.sources import sink_csv_path, sink_json_path
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5)], "k INT, v STRING, x DOUBLE"
-    )
-    cpath, jpath = str(tmp_path / "c"), str(tmp_path / "j")
-    sink_csv_path(df, cpath)
-    sink_json_path(df, jpath)
-    back_c = scan_csv(spark, cpath, schema="k INT, v STRING, x DOUBLE")
-    back_j = scan_json(spark, jpath, schema="k INT, v STRING, x DOUBLE")
-    rows = sorted((r["k"], r["v"], r["x"]) for r in df.collect())
-    assert sorted((r["k"], r["v"], r["x"]) for r in back_c.collect()) == rows
-    assert sorted((r["k"], r["v"], r["x"]) for r in back_j.collect()) == rows
-
-
-class _FakePaginator:
-    def __init__(self, pages):
-        self._pages = pages
-
-    def paginate(self, **kw):
-        return iter(self._pages)
-
-
-class _FakeS3:
-    """Minimal S3 client double: list pagination, head/copy with the
-    real botocore 404 error shape."""
-
-    def __init__(self, src_objects, existing_dst=()):
-        self._src = src_objects
-        self.dst = set(existing_dst)
-        self.copies = []
-
-    def get_paginator(self, op):
-        assert op == "list_objects_v2"
-        # two pages to prove pagination is exercised
-        half = len(self._src) // 2
-        return _FakePaginator(
-            [{"Contents": self._src[:half]}, {"Contents": self._src[half:]}]
-        )
-
-    def head_object(self, Bucket, Key):
-        from botocore.exceptions import ClientError
-
-        if Key in self.dst:
-            return {"ContentLength": 1}
-        raise ClientError(
-            {"Error": {"Code": "404", "Message": "Not Found"}}, "HeadObject"
-        )
-
-    def copy_object(self, Bucket, Key, CopySource):
-        self.copies.append((CopySource["Key"], Key))
-        self.dst.add(Key)
-
-
-def test_object_store_ingest_copy_if_absent_idempotent():
-    from aws_lakehouse_spark.sources.ingest import object_store_ingest
-
-    src = [
-        {"Key": "trip-data/yellow_2024-01.parquet", "Size": 10},
-        {"Key": "trip-data/yellow_2024-02.parquet", "Size": 11},
-        {"Key": "trip-data/readme.txt", "Size": 1},  # filtered by suffix
-        {"Key": "trip-data/yellow_2024-03.parquet", "Size": 12},
-    ]
-    fake = _FakeS3(src, existing_dst={"bronze/nyc/yellow_2024-01.parquet"})
-    m = object_store_ingest(fake, "pub", "trip-data/", "lake", "bronze/nyc")
-    assert m["n_copied"] == 2 and m["n_skipped"] == 1
-    assert ("trip-data/yellow_2024-02.parquet",
-            "bronze/nyc/yellow_2024-02.parquet") in fake.copies
-    # second run: everything skipped — the Lambda's idempotent re-run
-    m2 = object_store_ingest(fake, "pub", "trip-data/", "lake", "bronze/nyc")
-    assert m2["n_copied"] == 0 and m2["n_skipped"] == 3
-
-
-def test_anonymous_fallback_client_builds_without_creds(monkeypatch):
-    """No ambient credentials in this sandbox → the helper must return
-    an UNSIGNED client rather than raising (the Lambda's anonymous
-    retry for public buckets)."""
-    for var in ("AWS_ACCESS_KEY_ID", "AWS_SECRET_ACCESS_KEY",
-                "AWS_SESSION_TOKEN", "AWS_PROFILE"):
-        monkeypatch.delenv(var, raising=False)
-    from aws_lakehouse_spark.sources.ingest import anonymous_fallback_client
-
-    import botocore
-
-    client = anonymous_fallback_client()
-    assert client is not None
-    assert client.meta.config.signature_version is botocore.UNSIGNED
 
 
 def test_python_datasource_partition_invariant(spark):

@@ -545,7 +545,7 @@ def test_tags_resolve_and_are_immutable(spark, table_path):
     assert snapshots.tag_snapshot(table_path, "baseline", v0) == v0
     assert snapshots.tag_snapshot(table_path, "latest") == v1  # default=latest
     assert snapshots.resolve_tag(table_path, "baseline") == v0
-    assert snapshots.list_tags(table_path) == {"baseline": v0, "latest": v1}
+    assert snapshots.resolve_tag(table_path, "latest") == v1
     # tagged time travel reads the tagged version's content
     df = snapshots.read_snapshot(
         spark, table_path, snapshots.resolve_tag(table_path, "baseline")
@@ -1471,7 +1471,8 @@ def test_staged_only_log_has_no_default_head(spark, tmp_path):
         assert str(err.value) == msg, name
     # nothing was committed, tagged, branched or cloned
     assert snapshots.versions(t) == [0]
-    assert snapshots.list_tags(t) == {}
+    with pytest.raises(ValueError, match="unknown tag"):
+        snapshots.resolve_tag(t, "prod")
     assert snapshots.list_branches(t) == {}
     assert snapshots.versions(clone) == []
 

@@ -57,6 +57,7 @@ import hashlib
 import importlib
 import inspect
 import json
+import os
 import sys
 import types
 
@@ -165,11 +166,21 @@ def _class_functions(cls):
 def closure_items(root_fn) -> tuple[list[bytes], list[str]]:
     """(code-object serializations, global-constant tokens) for the
     transitive package-internal closure of ``root_fn``."""
+    codes, const_items = _walk(root_fn, whole_modules=True)
+    return [_code_bytes(c) for c in codes], const_items
+
+
+def reached_codes(root_fn) -> set[types.CodeType]:
+    """Code objects ``root_fn`` can run: the same walk, except that a
+    module reference adds only the attributes its referrer names."""
+    return _walk(root_fn, whole_modules=False)[0]
+
+
+def _walk(root_fn, whole_modules: bool):
     seen_fns: set[int] = set()
     seen_codes: set[types.CodeType] = set()
     seen_classes: set[int] = set()
     seen_modules: set[str] = set()
-    code_items: list[bytes] = []
     const_items: list[str] = []
     fn_stack = [root_fn]
 
@@ -193,9 +204,10 @@ def closure_items(root_fn) -> tuple[list[bytes], list[str]]:
             ):
                 seen_modules.add(mn)
                 for attr_name, attr in list(vars(v).items()):
-                    consider(
-                        attr, via_module=True, name=f"{mn}.{attr_name}"
-                    )
+                    if whole_modules or attr_name in names:
+                        consider(
+                            attr, via_module=True, name=f"{mn}.{attr_name}"
+                        )
         elif name is not None and not callable(v):
             # a non-callable global referenced BY NAME from hashed
             # code: its value is part of the semantics. Via a module
@@ -217,13 +229,13 @@ def closure_items(root_fn) -> tuple[list[bytes], list[str]]:
         if code is None or code in seen_codes:
             continue
         g = getattr(fn, "__globals__", {})
-        names: set[str] = set()
+        names = {n for c in _iter_nested_codes(code) for n in c.co_names}
+        if not whole_modules:
+            seen_modules.clear()
         for c in _iter_nested_codes(code):
             if c in seen_codes:
                 continue
             seen_codes.add(c)
-            code_items.append(_code_bytes(c))
-            names.update(c.co_names)
             for mod_name, attr in _import_targets(c):
                 if not (
                     mod_name == PKG or mod_name.startswith(PKG + ".")
@@ -291,7 +303,7 @@ def closure_items(root_fn) -> tuple[list[bytes], list[str]]:
                 consider(v, name=name)
             elif only_pkg_defined:
                 consider(v, name=name)
-    return code_items, const_items
+    return seen_codes, const_items
 
 
 def fingerprint(fn, oracle: str | None) -> str:
@@ -310,8 +322,6 @@ def fingerprint(fn, oracle: str | None) -> str:
 
 def registry_fingerprints(tree: str | None = None) -> dict[str, str]:
     if tree is not None:
-        import os
-
         tree = os.path.abspath(tree)
         sys.path = [
             p
@@ -331,7 +341,6 @@ def registry_fingerprints(tree: str | None = None) -> dict[str, str]:
 
 def main() -> int:
     import argparse
-    import os
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--tree", default=None)
