@@ -42,16 +42,13 @@ from aws_lakehouse_spark.registry import REGISTRY
 # after its last green grade re-enters the next window as a re-verify
 # pin (`tools/rotate_window.py --changed` derives the list from the
 # git diff against each query's last-grade driver commit, through the
-# fingerprint taint, tools/code_fingerprint.py since r10). The ROUND
-# 11 window applies the rotation r10 computed but never landed (r10
-# verdict item 2): the 50 stalest fingerprint-changed grades —
-# tpch_q4..q9 (r2-era), the r3 text/embed kernels, the r4 agg/
-# snapshot/streaming faces, the r5 graph/snapshot rows — pinned
-# stalest-last-green-round first. 21 further changed grades did not
-# fit and are DEFERRED to r12 (list in the r11 round notes; also
-# reprinted by any `rotate_window.py --changed` run). Overlap with
-# the r10 window: 0/50 — every driver slot this round buys fresh
-# evidence. Head-of-tree cover for the un-graded remainder stays the
+# fingerprint taint, tools/code_fingerprint.py since r10). The current
+# window pins, stalest last-green round first, the queries whose
+# fingerprint changed since their last green grade, among them the
+# table-writing builders whose scratch location moved to
+# ``session.scratch_dir``; the changed grades that did not fit are
+# reprinted as DEFERRED by any `rotate_window.py --changed` run.
+# Head-of-tree cover for the un-graded remainder stays the
 # committed full-registry parity artifacts (PARITY_SF001_r11.txt,
 # PARITY_SF1_r11.txt).
 #
@@ -63,6 +60,9 @@ from aws_lakehouse_spark.registry import REGISTRY
 # (the r10 fumble, made mechanical). Update this comment with each
 # round's rationale.
 _PRIORITY = [
+    "format_roundtrip_csv",
+    "format_roundtrip_orc",
+    "streaming_incremental_bookmark",
     "embed_pca_covariance",
     "snapshot_check_constraints",
     "snapshot_clone_shallow",
@@ -83,8 +83,15 @@ _PRIORITY = [
     "dedup_minhash_jaccard_estimate",
     "embed_drift_monitor",
     "embed_matryoshka_topk",
+    "format_roundtrip_json",
+    "format_roundtrip_xml",
+    "join_bucketed_colocated",
+    "join_dynamic_partition_pruning",
     "incremental_join_maintenance",
+    "incremental_partition_recompute",
     "layout_zorder_pruned_scan",
+    "sink_dynamic_partition_overwrite",
+    "source_python_stream_datasource",
     "ann_ivf_topk",
     "dedup_incremental_minhash",
     "join_range_banded",
@@ -103,16 +110,6 @@ _PRIORITY = [
     "ann_embedding_neardup",
     "ann_hybrid_rrf",
     "ann_ivf_pq",
-    "ann_recall_eval",
-    "dedup_containment",
-    "dedup_lsh_quality",
-    "embed_cluster_assign",
-    "embed_kmeans_iteration",
-    "embed_outliers",
-    "embed_semdedup",
-    "graph_connected_components",
-    "graph_label_propagation",
-    "graph_pagerank_topk",
     # --- index 50 boundary: the graded window ends here ---
 ]
 

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from aws_lakehouse_spark.catalog import load_table
 from aws_lakehouse_spark.operators.skew import salted_group_agg
 from aws_lakehouse_spark.registry import register
+from aws_lakehouse_spark.session import scratch_dir
 
 
 @register(
@@ -487,14 +488,13 @@ def cdc_snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recomputes the same diff straight from the source parquet, so "
     "a green row certifies write -> manifest commit -> time-travel "
     "read -> diff, not just the diff algebra. Each call commits to "
-    "a fresh temp table dir (left on disk for the caller's collect; "
-    "bounded by |orders| at test SF). Reference parity: Iceberg "
+    "a fresh session scratch dir (kept for the caller's collect, "
+    "removed by spark.stop()). Reference parity: Iceberg "
     "snapshots + time travel the reference relies on "
     "(glue-jobs/noaa_ghcn_bronze_to_silver.py:108-143).",
 )
 def snapshot_time_travel_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.operators.cdc import snapshot_diff
     from aws_lakehouse_spark.sources.snapshots import (
@@ -512,9 +512,7 @@ def snapshot_time_travel_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("o_orderstatus"),
         "o_totalprice",
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_snap_tt_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     assert snapshot_write(spark, v0, table, mode="overwrite") == 0
     assert snapshot_write(spark, v1, table, mode="overwrite") == 1
     old = read_snapshot(spark, table, version=0)
@@ -624,7 +622,6 @@ def maintenance_compact_roundtrip_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.maintenance import compact_path
 
@@ -636,9 +633,7 @@ def maintenance_compact_roundtrip_q(
         return spark.createDataFrame(
             [], "o_orderpriority string, n_orders bigint, sum_price double"
         )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_compact_"), "orders_small_files"
-    )
+    path = os.path.join(scratch_dir(spark), "orders_small_files")
     orders.repartition(64).write.mode("overwrite").parquet(path)
     stats = compact_path(spark, path)
     assert stats["files_before"] >= 64, stats
@@ -677,7 +672,6 @@ def maintenance_compact_roundtrip_q(
 )
 def snapshot_delete_update_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         delete_where,
@@ -695,9 +689,7 @@ def snapshot_delete_update_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderkey bigint, o_orderstatus string, o_totalprice double"
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_dml_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     assert snapshot_write(spark, orders, table, "overwrite") == 0
     d = delete_where(spark, table, F.col("o_orderkey") % 10 == 0)
     assert d["version"] == 1 and d["rows_deleted"] > 0, d
@@ -730,7 +722,6 @@ def snapshot_delete_update_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         read_snapshot_evolved,
@@ -738,9 +729,7 @@ def snapshot_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_evolve_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     v0 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )
@@ -779,7 +768,6 @@ def snapshot_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_merge_into_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         merge_into,
@@ -790,9 +778,7 @@ def snapshot_merge_into_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_merge_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     target = orders.filter(F.col("o_orderkey") % 3 != 0)
     assert snapshot_write(spark, target, table, "overwrite") == 0
     # 10% bump in EXACT decimal arithmetic (decimal(18,2) * decimal(3,1)
@@ -1316,7 +1302,6 @@ def join_asof_nearest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_tagged_read_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         read_snapshot,
@@ -1328,9 +1313,7 @@ def snapshot_tagged_read_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_tag_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     v0 = snapshot_write(
         spark, orders.filter(F.col("o_orderkey") % 2 == 0), table, "overwrite"
     )
@@ -1581,7 +1564,6 @@ def agg_bitmap_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_rollback_restore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         read_snapshot,
@@ -1593,9 +1575,7 @@ def snapshot_rollback_restore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_rollback_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     assert snapshot_write(
         spark, orders.filter(F.col("o_orderkey") % 3 == 0), table, "overwrite"
     ) == 0
@@ -1637,7 +1617,6 @@ def snapshot_rollback_restore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_stats_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         plan_pruned_files,
@@ -1653,9 +1632,7 @@ def snapshot_stats_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderstatus string, n_orders bigint, total_price double"
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_stats_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     clustered = orders.repartitionByRange(8, "o_orderkey")
     assert snapshot_write(
         spark, clustered, table, "overwrite", stats_cols=["o_orderkey"]
@@ -1703,7 +1680,6 @@ def snapshot_stats_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_bloom_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         plan_bloom_pruned_files,
@@ -1721,9 +1697,7 @@ def snapshot_bloom_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders bigint, total_price double, "
             "min_orderkey bigint, max_orderkey bigint",
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_bloom_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     # hash-clustered on the lookup key: each file holds ~1/8 of the
     # custkey space, so the bloom rules out ~7/8 of files
     clustered = orders.repartition(8, "o_custkey")
@@ -1774,7 +1748,6 @@ def snapshot_bloom_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_incremental_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         read_snapshot_incremental,
@@ -1784,9 +1757,7 @@ def snapshot_incremental_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_incr_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     v0 = snapshot_write(
         spark, orders.filter(F.col("o_orderkey") % 3 == 0), table, "overwrite"
     )
@@ -1839,7 +1810,6 @@ def incremental_partition_recompute_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1855,9 +1825,7 @@ def incremental_partition_recompute_q(
             "event_date string, event_type string, "
             "n_events bigint, total_value double",
         )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_increcompute_"), "events_by_day"
-    )
+    path = os.path.join(scratch_dir(spark), "events_by_day")
     ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
     # partition-column type inference reads event_date back as DATE;
     # the gold contract keys on the yyyy-MM-dd string
@@ -1922,7 +1890,6 @@ def incremental_partition_recompute_q(
 )
 def snapshot_wap_publish_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         publish_staged,
@@ -1938,9 +1905,7 @@ def snapshot_wap_publish_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderstatus string, n_orders bigint, total_price double"
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_wap_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     base = orders.filter(F.col("o_orderkey") % 2 == 0)
     batch = orders.filter(F.col("o_orderkey") % 2 == 1)
     if batch.isEmpty():
@@ -2006,7 +1971,6 @@ def snapshot_partition_evolution_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
@@ -2026,9 +1990,7 @@ def snapshot_partition_evolution_q(
             [], "o_orderstatus string, n_orders bigint, total_price double"
         )
     split = n_max // 2
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_specevo_"), "orders_evo"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_evo")
     # spec v0: coarse clustering (4 range files) over the high keys
     # (the table's historical half)
     high = orders.filter(F.col("o_orderkey") >= split).repartitionByRange(
@@ -2096,7 +2058,6 @@ def snapshot_partition_evolution_q(
 )
 def snapshot_branch_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         create_branch,
@@ -2116,9 +2077,7 @@ def snapshot_branch_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderstatus string, n_orders bigint, total_price double"
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_branch_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     base = orders.filter(F.col("o_orderkey") % 3 == 0)
     b1 = orders.filter(F.col("o_orderkey") % 3 == 1)
     b2 = orders.filter(F.col("o_orderkey") % 3 == 2)
@@ -2179,7 +2138,6 @@ def snapshot_branch_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_clone_shallow_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         _data_files,
@@ -2191,7 +2149,7 @@ def snapshot_clone_shallow_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="lakehouse_clone_")
+    root = scratch_dir(spark)
     src = os.path.join(root, "orders_src")
     dst = os.path.join(root, "orders_clone")
     base = orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -2306,7 +2264,6 @@ def snapshot_segmented_manifest_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         _read_manifest_raw,
@@ -2317,9 +2274,7 @@ def snapshot_segmented_manifest_q(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_segmf_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     v0 = snapshot_write(
         spark,
         orders.filter(F.col("o_orderkey") % 3 == 0),
@@ -2406,7 +2361,6 @@ def incremental_join_maintenance_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         read_snapshot,
@@ -2448,9 +2402,7 @@ def incremental_join_maintenance_q(
         )
 
     # base view, materialized and read back — the standing M
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_ivm_"), "nation_rev"
-    )
+    table = os.path.join(scratch_dir(spark), "nation_rev")
     snapshot_write(spark, agg(joined(o0, c0)), table, "overwrite")
     m0 = read_snapshot(spark, table)
 
@@ -2510,7 +2462,6 @@ def snapshot_optimize_zorder_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         optimize_zorder,
@@ -2522,9 +2473,7 @@ def snapshot_optimize_zorder_q(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_optz_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     # ingest in arrival order (order-key clustered), 8 files, with
     # stats recorded — the layout queries suffer before OPTIMIZE
     snapshot_write(
@@ -2694,7 +2643,6 @@ def join_asof_tolerance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_rewrite_files_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         read_snapshot,
@@ -2710,9 +2658,7 @@ def snapshot_rewrite_files_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderstatus string, n_orders bigint, total_price double"
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_rwf_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     snapshot_write(
         spark, orders.repartition(12), table, "overwrite",
         stats_cols=["o_orderkey"],
@@ -2774,7 +2720,6 @@ def snapshot_rewrite_files_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_history_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         snapshot_history,
@@ -2784,9 +2729,7 @@ def snapshot_history_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_hist_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     snapshot_write(
         spark,
         orders.filter(F.col("o_orderkey") % 3 == 0).repartition(4),
@@ -2839,7 +2782,6 @@ def snapshot_check_constraints_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import (
         ConstraintViolationError,
@@ -2870,9 +2812,7 @@ def snapshot_check_constraints_q(
         return spark.createDataFrame(
             [], "o_orderstatus string, n_orders bigint, total_price double"
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_chk_"), "orders_snap"
-    )
+    table = os.path.join(scratch_dir(spark), "orders_snap")
     add_table_constraint(table, "price_positive", "o_totalprice > 0")
 
     checked_snapshot_write(

@@ -25,13 +25,13 @@ engine's CSV reader discipline, ``sources/readers.py:56``).
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from aws_lakehouse_spark.catalog import load_table
 from aws_lakehouse_spark.registry import register
+from aws_lakehouse_spark.session import scratch_dir
 
 
 @register(
@@ -58,9 +58,7 @@ def format_roundtrip_orc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_orc_"), "orders_orc"
-    )
+    path = os.path.join(scratch_dir(spark), "orders_orc")
     orders.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return (
@@ -98,9 +96,7 @@ def format_roundtrip_csv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_csv_"), "customer_csv"
-    )
+    path = os.path.join(scratch_dir(spark), "customer_csv")
     cust.write.mode("overwrite").option("header", "true").csv(path)
     back = spark.read.schema(
         "c_custkey bigint, c_mktsegment string, c_acctbal double"
@@ -150,9 +146,7 @@ def format_roundtrip_json_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate_s"),
     )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_json_"), "orders_json"
-    )
+    path = os.path.join(scratch_dir(spark), "orders_json")
     orders.write.mode("overwrite").json(path)
     back = spark.read.schema(
         "o_orderkey bigint, o_orderpriority string, "
@@ -231,9 +225,6 @@ def source_python_datasource_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source parquet.",
 )
 def partition_pruned_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "ts",
@@ -247,9 +238,7 @@ def partition_pruned_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_type string, n_events bigint, sum_value double"
         )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_partlayout_"), "events_by_day"
-    )
+    path = os.path.join(scratch_dir(spark), "events_by_day")
     ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
     back = spark.read.parquet(path).filter(
         F.col("event_date").isin("2024-01-03", "2024-01-04")
@@ -290,7 +279,7 @@ def partition_pruned_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "checks the VALUES equal a plain join of the source parquet.",
 )
 def join_bucketed_colocated_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = tempfile.mkdtemp(prefix="lakehouse_bucketed_")
+    base = scratch_dir(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
@@ -365,9 +354,7 @@ def layout_zorder_pruned_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_type string, n_events bigint, total_value double"
         )
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_zorder_"), "events_z"
-    )
+    table = os.path.join(scratch_dir(spark), "events_z")
     code = zorder_code({"user_id": (0, 1500), "value": (0, 600)})
     clustered = (
         events.withColumn("__z", code)
@@ -438,7 +425,7 @@ def join_dynamic_partition_pruning_q(
         return spark.createDataFrame(
             [], "event_type string, n_events bigint, total_value double"
         )
-    base = os.path.join(tempfile.mkdtemp(prefix="lakehouse_dpp_"), "events_p")
+    base = os.path.join(scratch_dir(spark), "events_p")
     events.write.mode("overwrite").partitionBy("event_type").parquet(base)
     fact = spark.read.parquet(base)
     # the dim filter rides on an AGGREGATED attribute (first seen
@@ -498,7 +485,7 @@ def source_python_stream_datasource_q(
     from aws_lakehouse_spark.sources.pydatasource import register_synthdocs
 
     register_synthdocs(spark)
-    base = tempfile.mkdtemp(prefix="lakehouse_pystream_")
+    base = scratch_dir(spark)
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     q = (
@@ -576,9 +563,7 @@ def sink_dynamic_partition_overwrite_q(
         return spark.createDataFrame(
             [], "event_type string, n_events bigint, sum_value double"
         )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_dynoverwrite_"), "events_by_day"
-    )
+    path = os.path.join(scratch_dir(spark), "events_by_day")
     ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
 
     def part_files(day: str) -> set[str]:
@@ -640,9 +625,7 @@ def format_roundtrip_xml_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") < 1000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse_xml_"), "orders_xml"
-    )
+    path = os.path.join(scratch_dir(spark), "orders_xml")
     (
         orders.write.mode("overwrite")
         .option("rootTag", "orders")

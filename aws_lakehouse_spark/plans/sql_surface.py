@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from aws_lakehouse_spark.catalog import load_table, register_views
 from aws_lakehouse_spark.registry import register
+from aws_lakehouse_spark.session import scratch_dir
 
 # The README revenue query (README.md:256-264) transliterated to the
 # synthetic schema — identical text runs on Spark SQL and DuckDB.
@@ -232,11 +233,9 @@ def set_union_missing_columns_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_streaming.",
 )
 def streaming_incremental_bookmark_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from aws_lakehouse_spark.streaming.incremental import incremental_process
 
-    work = tempfile.mkdtemp(prefix="bookmark-q-")
+    work = scratch_dir(spark)
     src = f"{work}/src"
     sink = f"{work}/sink"
     load_table(spark, sf_dir, "region").write.parquet(src)
@@ -286,7 +285,6 @@ def streaming_incremental_bookmark_q(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def streaming_cdc_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from aws_lakehouse_spark.sources.snapshots import read_snapshot
     from aws_lakehouse_spark.streaming.apply import streaming_upsert
@@ -301,7 +299,7 @@ def streaming_cdc_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderkey bigint, o_orderstatus string, o_totalprice double"
         )
-    work = tempfile.mkdtemp(prefix="lakehouse_cdc_stream_")
+    work = scratch_dir(spark)
     src = os.path.join(work, "src")
     ckpt = os.path.join(work, "ckpt")
     table = os.path.join(work, "merged")

@@ -16,11 +16,15 @@ Iceberg conf injection at session build time — reference
 ``configure_runtime`` hardens an *externally created* session (the
 correctness driver builds its own) with the runtime-settable confs we
 depend on — most importantly nanosecond-timestamp parquet reads.
+
+``scratch_dir`` is the one place a query builder gets a directory for
+the tables it writes.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -94,6 +98,21 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
             pass
     spark._lakehouse_runtime_configured = True
     return spark
+
+
+def scratch_dir(spark: SparkSession) -> str:
+    """A fresh directory for a query builder's tables, removed with the
+    session.
+
+    It is made inside the driver's SparkFiles root (``userFiles-*``
+    under the first Spark local dir), which ``SparkEnv.stop`` deletes
+    recursively, so ``spark.stop()`` removes everything written here;
+    nothing else tracks or sweeps it. Works for any SparkContext, the
+    correctness driver's plain session included. Driver-local, as
+    ``/tmp`` was.
+    """
+    files = spark.sparkContext._jvm.org.apache.spark.SparkFiles
+    return tempfile.mkdtemp(dir=files.getRootDirectory())
 
 
 def get_spark(

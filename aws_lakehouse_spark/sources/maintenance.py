@@ -40,12 +40,14 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
 
 def _snapshot_log_path(spark: SparkSession, table: str,
                        table_path: str | None) -> str | None:
-    """Path of the table's manifest log, if it has one."""
+    """Path of the table's manifest log, if it has one. ``table_path``
+    is the table's location when the caller has already looked it up
+    (``""`` when the catalog has none); ``None`` looks it up here."""
     import os
 
     from aws_lakehouse_spark.sources import snapshots
 
-    path = table_path or _table_location(spark, table)
+    path = _table_location(spark, table) if table_path is None else table_path
     if path and os.path.isdir(os.path.join(path, snapshots.LOG_DIR)):
         return path
     return None
@@ -208,7 +210,8 @@ def run_maintenance(
     the orphan-file age floor."""
     results = []
     for table in tables:
-        path = _table_location(spark, table)
+        # "" (not None) records a failed lookup, so neither op repeats it
+        path = _table_location(spark, table) or ""
         for op, kw in (
             (expire_snapshots,
              {"retain_days": retain_days, "table_path": path}),

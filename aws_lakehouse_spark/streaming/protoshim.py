@@ -78,7 +78,12 @@ def _stage_isolated(vendored: str) -> str | None:
     ``google.protobuf``, linked (or copied) out of the vendored tree.
     The staged ``google/`` carries no ``__init__.py``, so it is a
     namespace package that MERGES with any ``google.*`` already in
-    site-packages instead of replacing it."""
+    site-packages instead of replacing it.
+
+    The stage is a plain ``tempfile.mkdtemp``, not
+    ``session.scratch_dir``: it is a process-wide ``PYTHONPATH`` entry
+    rather than a table, it may be staged before any session exists,
+    and it removes itself at exit."""
     prior = _STAGED.get(vendored)
     if prior and os.path.isdir(os.path.join(prior, "google", "protobuf")):
         return prior

@@ -340,7 +340,8 @@ def test_maintenance_compaction(spark, tmp_path, monkeypatch):
         20
     ).write.mode("overwrite").saveAsTable("t_maint")
     before = len(spark.table("t_maint").inputFiles())
-    # one catalog DESCRIBE per table serves both snapshot-log ops
+    # one catalog DESCRIBE per table serves both snapshot-log ops,
+    # also when the table is missing and the lookup finds nothing
     lookups = []
     real_location = maintenance._table_location
     monkeypatch.setattr(
@@ -348,9 +349,13 @@ def test_maintenance_compaction(spark, tmp_path, monkeypatch):
         "_table_location",
         lambda s, t: lookups.append(t) or real_location(s, t),
     )
-    results = maintenance.run_maintenance(spark, ["t_maint"])
-    assert lookups == ["t_maint"]
-    ops = {r["op"]: r for r in results}
+    results = maintenance.run_maintenance(spark, ["t_maint", "no_such_table"])
+    assert lookups == ["t_maint", "no_such_table"]
+    missing = {r["op"]: r for r in results if r["table"] == "no_such_table"}
+    assert missing["expire_snapshots"]["applied"] is False
+    assert missing["remove_orphans"]["applied"] is False
+    assert "error" in missing["compact_files"]
+    ops = {r["op"]: r for r in results if r["table"] == "t_maint"}
     assert ops["compact_files"]["applied"]
     after = len(spark.table("t_maint").inputFiles())
     assert after <= ops["compact_files"]["target_files"] < before

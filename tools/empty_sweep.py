@@ -305,42 +305,18 @@ def build_truncated_dir(
     unicode_: bool = False,
     frozen: bool = False,
     hotkey: bool = False,
-    out: str | None = None,
+    *,
+    out: str,
 ) -> str:
     """``rows``-row parquet per table, preserving physical types
     (duckdb round-trips TIMESTAMP_NS for the events table). With
     ``nulls``, every column except each table's first is NULLed; with
     ``zeros``, keys survive but every measure is zeroed
-    (:func:`_zero_expr`). ``out`` names the destination directory
-    (callers with managed temp dirs — pytest's tmp_path_factory —
-    pass one so the build is cleaned up with the session); default
-    is a fresh ``tempfile.mkdtemp``."""
+    (:func:`_zero_expr`). ``out`` names the destination directory;
+    the caller owns it and removes it."""
     import duckdb
 
-    if nulls:
-        tag = "nulls"
-    elif zeros:
-        tag = "zeros"
-    elif dup:
-        tag = "dup"
-    elif negatives:
-        tag = "neg"
-    elif timewarp:
-        tag = "warp"
-    elif extreme:
-        tag = "extreme"
-    elif unicode_:
-        tag = "unicode"
-    elif frozen:
-        tag = "frozen"
-    elif hotkey:
-        tag = "hotkey"
-    else:
-        tag = f"rows{rows}"
-    if out is None:
-        out = tempfile.mkdtemp(prefix=f"lakehouse_sf_{tag}_")
-    else:
-        os.makedirs(out, exist_ok=True)
+    os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     for t in TABLES:
         proj = "*"
@@ -428,17 +404,25 @@ def main() -> int:
     ) and not rows:
         rows = 200
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    empty_dir = build_truncated_dir(
-        src, rows, nulls, zeros, dup, negatives, timewarp, extreme,
-        unicode_, frozen, hotkey,
-    )
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    with tempfile.TemporaryDirectory() as empty_dir:
+        build_truncated_dir(
+            src, rows, nulls, zeros, dup, negatives, timewarp, extreme,
+            unicode_, frozen, hotkey, out=empty_dir,
+        )
+        spark = (
+            SparkSession.builder.master("local[8]")
+            .config("spark.sql.shuffle.partitions", "8")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        try:
+            return _sweep(spark, empty_dir, rows)
+        finally:
+            spark.stop()
+
+
+def _sweep(spark, empty_dir: str, rows: int) -> int:
     # positional names restrict the sweep (r8: the --hotkey probe at
     # sf1 scale is only tractable for the skew machinery itself —
     # pair-generating queries are intentionally quadratic on a
@@ -494,7 +478,6 @@ def main() -> int:
     print(f"\n{ok} ok, {len(fails)} crash")
     if fails:
         print("crashes:", fails)
-    spark.stop()
     return 1 if fails else 0
 
 
