@@ -2250,10 +2250,10 @@ def agg_filtered_kpis_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "segment — metadata written per append is O(files added), "
     "never O(files in table), the property that lets a petabyte "
     "table absorb appends without rewriting its file inventory "
-    "every commit (sources/snapshots.py:snapshot_write "
-    "segmented=True; vs the reference's Iceberg manifests, "
-    "noaa_ghcn_bronze_to_silver.py:117-138). The query commits "
-    "three segmented snapshots (overwrite + 2 appends), asserts "
+    "every commit (sources/snapshots.py:snapshot_write, the "
+    "log's only manifest shape; vs the reference's Iceberg "
+    "manifests, noaa_ghcn_bronze_to_silver.py:117-138). The query "
+    "commits three snapshots (overwrite + 2 appends), asserts "
     "IN-BAND that each append added exactly one segment and reused "
     "the base's verbatim, then aggregates the resolved read; the "
     "oracle recomputes from source, so a green row proves "
@@ -2280,21 +2280,18 @@ def snapshot_segmented_manifest_q(
         orders.filter(F.col("o_orderkey") % 3 == 0),
         table,
         "overwrite",
-        segmented=True,
     )
     v1 = snapshot_write(
         spark,
         orders.filter(F.col("o_orderkey") % 3 == 1),
         table,
         "append",
-        segmented=True,
     )
     v2 = snapshot_write(
         spark,
         orders.filter(F.col("o_orderkey") % 3 == 2),
         table,
         "append",
-        segmented=True,
     )
     s0 = _read_manifest_raw(table, v0)["segments"]
     s1 = _read_manifest_raw(table, v1)["segments"]

@@ -7,9 +7,17 @@ procedures (``glue-jobs/noaa_ghcn_bronze_to_silver.py:108-143``,
 ``glue-jobs/iceberg_maintenance.py:47-81``). This module implements
 the table-format *idea* from first principles, the way Delta's log
 works: a table is a directory of immutable parquet files plus an
-ordered log of manifests, where manifest N lists the files live at
-version N. WAP staging, branches, tags, segments and stats/bloom
-manifest pruning all live on the same log. A directory that holds
+ordered log of manifests, where manifest N names the files live at
+version N. Every manifest has one shape, Iceberg's manifest list: a
+``segments`` list of immutable segment files (``_snapshots/segments``),
+each holding some data files with their per-file row counts, min/max
+stats and bloom bitsets. A write adds one segment, and an append's
+manifest reuses its base's segment list, so the metadata a commit
+writes is O(files added), never O(files in table). Visibility
+(``staged``, ``branch``) and ``committed_at`` sit in the manifest
+itself, so listing main's versions and expiring old ones open no
+segment. WAP staging, branches, tags and stats/bloom manifest
+pruning all live on the same log. A directory that holds
 a Delta table's ``_delta_log`` is refused by every write and read
 with ``RuntimeError``, so the log never adopts or corrupts a table
 another program wrote.
@@ -103,17 +111,18 @@ def _segments_dir(table_path: str) -> str:
 
 
 def _read_manifest_raw(table_path: str, version: int) -> dict:
-    """The manifest exactly as committed — a segmented manifest keeps
-    its ``segments`` reference list, files unresolved."""
+    """The manifest exactly as committed: its metadata keys and its
+    ``segments`` name list, files unresolved. Visibility and age
+    checks read only this, so they never open a segment."""
     with open(_manifest_file(table_path, version)) as fh:
         return json.load(fh)
 
 
 def _write_segment(table_path: str, content: dict) -> str:
     """Persist an immutable manifest segment (its own file subset +
-    per-file stats/bloom); returns the segment file name. Segments are
-    content-complete and never rewritten, so later commits reference
-    them by name at O(1) metadata cost."""
+    per-file stats/bloom/rows); returns the segment file name.
+    Segments are never rewritten, so later commits reference them by
+    name at O(1) metadata cost."""
     seg_dir = _segments_dir(table_path)
     os.makedirs(seg_dir, exist_ok=True)
     name = f"seg-{uuid.uuid4().hex}.json"
@@ -124,32 +133,24 @@ def _write_segment(table_path: str, content: dict) -> str:
     return name
 
 
+def _read_segment(table_path: str, name: str) -> dict:
+    with open(os.path.join(_segments_dir(table_path), name)) as fh:
+        return json.load(fh)
+
+
 def _read_manifest(table_path: str, version: int) -> dict:
-    """Resolved manifest view: always carries ``files`` (and merged
-    ``stats``/``bloom``), whether the commit was inline or segmented —
-    every reader downstream sees ONE shape."""
+    """Resolved manifest view: the committed keys plus ``files`` and
+    the per-file ``stats``/``bloom``/``rows`` merged from every
+    segment the manifest names."""
     m = _read_manifest_raw(table_path, version)
-    if "segments" not in m:
-        return m
+    out = {**m, "stats": {}, "bloom": {}, "rows": {}}
     files: set[str] = set()
-    stats: dict = {}
-    bloom: dict = {}
-    rows: dict = {}
     for name in m["segments"]:
-        with open(os.path.join(_segments_dir(table_path), name)) as fh:
-            seg = json.load(fh)
+        seg = _read_segment(table_path, name)
         files.update(seg["files"])
-        stats.update(seg.get("stats", {}))
-        bloom.update(seg.get("bloom", {}))
-        rows.update(seg.get("rows", {}))
-    out = dict(m)
+        for key in ("stats", "bloom", "rows"):
+            out[key].update(seg[key])
     out["files"] = sorted(files)
-    if stats:
-        out["stats"] = stats
-    if bloom:
-        out["bloom"] = bloom
-    if rows:
-        out["rows"] = rows
     return out
 
 
@@ -207,36 +208,6 @@ def _file_column_stats(path: str, cols: list[str], md=None) -> dict:
     return out
 
 
-def _file_row_count(path: str, md=None) -> int:
-    """Row count from the parquet FOOTER — no data pages read. Every
-    commit records this per new file so version-level row counts
-    (``snapshot_history``) are a metadata sum, never a scan job."""
-    if md is None:
-        md = _file_footer(path)
-    return md.num_rows
-
-
-def _complete_rows(table_path: str, manifest: dict) -> dict[str, int]:
-    """Per-file row counts covering EVERY file in ``manifest`` —
-    recorded counts where the commit wrote them, one parquet-footer
-    read per missing file otherwise (pre-row-count legacy logs). The
-    lazy backfill that keeps DML reporting and ``snapshot_history``
-    metadata-only on tables of any age: a footer read is a bounded
-    GET, never a scan job, and every metadata commit that passes
-    through here (publish / rollback / clone / fast-forward / append
-    base) persists the completed map so the backfill is paid at most
-    once per legacy file."""
-    rows = manifest.get("rows", {})
-    return {
-        f: (
-            rows[f]
-            if f in rows
-            else _file_row_count(os.path.join(table_path, f))
-        )
-        for f in manifest["files"]
-    }
-
-
 def snapshot_write(
     spark: SparkSession,
     df: DataFrame,
@@ -246,7 +217,6 @@ def snapshot_write(
     bloom_cols: list[str] | None = None,
     staged_id: str | None = None,
     branch: str | None = None,
-    segmented: bool = False,
 ) -> int:
     """Write ``df`` as a new snapshot; returns the committed version.
 
@@ -257,12 +227,17 @@ def snapshot_write(
     append's base is the last PUBLISHED manifest, so publishing
     yields exactly base + batch.
 
-    ``mode='append'``: new manifest = previous live files + new part
-    files. ``mode='overwrite'``: new manifest = new part files only;
-    prior files stay on disk, readable via time travel until expired.
+    The new part files, with their row counts and any stats/bloom,
+    land in ONE new immutable segment (Iceberg's manifest-list →
+    manifest-file hierarchy). ``mode='append'``: the manifest is the
+    base's segment list plus that segment, so metadata written per
+    append is O(files added), never O(files in table).
+    ``mode='overwrite'``: the manifest is that segment alone; prior
+    files stay on disk, readable via time travel until expired, and
+    ``remove_orphans`` reclaims segments no live manifest references.
 
     ``stats_cols`` records per-file min/max for those columns in the
-    manifest (footer-only reads — Iceberg's data-file stats), which
+    segment (footer-only reads — Iceberg's data-file stats), which
     :func:`read_snapshot_pruned` uses to plan range scans over only
     the files whose ranges intersect the predicate.
 
@@ -271,19 +246,6 @@ def snapshot_write(
     :func:`read_snapshot_bloom_pruned` uses to plan EQUALITY lookups
     — the skipping structure for high-cardinality keys that min/max
     ranges can't prune unless the data is range-clustered.
-
-    ``segmented=True`` commits the manifest as a SEGMENT REFERENCE
-    LIST instead of an inline file list (Iceberg's manifest-list →
-    manifest-file hierarchy): each commit's new files (plus their
-    stats/bloom) land in one immutable segment; an append's manifest
-    is the base's segment list + that one new segment. Metadata
-    written per append is O(files added), never O(files in table) —
-    the property that lets a petabyte table absorb appends without
-    rewriting its file inventory every commit. Readers are unchanged
-    (resolution is transparent in ``_read_manifest``), inline and
-    segmented commits interoperate on the same log (an append onto an
-    inline base converts the base into one segment, once), and
-    ``remove_orphans`` reclaims segments no live manifest references.
 
     ``branch`` commits onto a named BRANCH (Iceberg branch
     semantics): the append base is the branch's current head — never
@@ -319,9 +281,6 @@ def snapshot_write(
 
     vs = versions(table_path)
     version = (vs[-1] + 1) if vs else 0
-    stats: dict = {}
-    bloom: dict = {}
-    rows: dict = {}
     # append base: the branch head for branch commits, else the last
     # PUBLISHED state — a staged snapshot must never become part of
     # another write's lineage before publish
@@ -330,21 +289,13 @@ def snapshot_write(
     else:
         pub = published_versions(table_path)
         base_v = pub[-1] if pub else None
-    prev_segments: list[str] | None = None
-    prev: dict | None = None
+    segs: list[str] = []
     if mode == "append" and base_v is not None:
-        prev = _read_manifest(table_path, base_v)
-        live = prev["files"]
-        stats.update(prev.get("stats", {}))
-        bloom.update(prev.get("bloom", {}))
-        # completed (footer-backfilled) so an append onto a legacy
-        # pre-row-count base commits a fully-counted manifest
-        rows.update(_complete_rows(table_path, prev))
-        prev_segments = _read_manifest_raw(table_path, base_v).get(
-            "segments"
-        )
-    else:
-        live = []
+        # O(1) reuse: the base's segments are never rewritten
+        segs = list(_read_manifest_raw(table_path, base_v)["segments"])
+    stats: dict = {}
+    bloom: dict = {}
+    rows: dict = {}
     for f in new_files:
         # ONE footer read per just-written file serves the column
         # stats, the always-recorded row count, AND the bloom
@@ -355,70 +306,22 @@ def snapshot_write(
         md = _file_footer(path)
         if stats_cols:
             stats[f] = _file_column_stats(path, list(stats_cols), md=md)
-        rows[f] = _file_row_count(path, md=md)
+        rows[f] = md.num_rows
         if bloom_cols:
             bloom[f] = _file_bloom(path, list(bloom_cols), md=md)
+    if new_files:
+        segs.append(
+            _write_segment(
+                table_path,
+                {"files": new_files, "stats": stats, "bloom": bloom, "rows": rows},
+            )
+        )
     manifest = {
         "version": version,
         "mode": mode,
         "committed_at": time.time(),
+        "segments": segs,
     }
-    if segmented:
-        segs: list[str] = []
-        if mode == "append" and live:
-            if prev_segments:
-                segs.extend(prev_segments)  # O(1) reuse, never rewritten
-            else:
-                # inline base: convert its full state into ONE segment
-                # (one-time O(files) cost; every later append is O(delta))
-                assert prev is not None
-                segs.append(
-                    _write_segment(
-                        table_path,
-                        {
-                            "files": list(prev["files"]),
-                            "stats": prev.get("stats", {}),
-                            "bloom": prev.get("bloom", {}),
-                            # rows was completed from prev above
-                            "rows": {
-                                f: rows[f] for f in prev["files"]
-                            },
-                        },
-                    )
-                )
-        if new_files:
-            segs.append(
-                _write_segment(
-                    table_path,
-                    {
-                        "files": sorted(new_files),
-                        "stats": {
-                            f: stats[f] for f in new_files if f in stats
-                        },
-                        "bloom": {
-                            f: bloom[f] for f in new_files if f in bloom
-                        },
-                        "rows": {
-                            f: rows[f] for f in new_files if f in rows
-                        },
-                    },
-                )
-            )
-        manifest["segments"] = segs
-    else:
-        manifest["files"] = sorted(set(live) | set(new_files))
-        if stats:
-            manifest["stats"] = {
-                f: stats[f] for f in manifest["files"] if f in stats
-            }
-        if bloom:
-            manifest["bloom"] = {
-                f: bloom[f] for f in manifest["files"] if f in bloom
-            }
-        if rows:
-            manifest["rows"] = {
-                f: rows[f] for f in manifest["files"] if f in rows
-            }
     if staged_id is not None:
         manifest["staged"] = staged_id
     if branch is not None:
@@ -468,28 +371,23 @@ def _commit_copy(
     prefix: str = "",
 ) -> int:
     """Commit ``version`` of ``table_path`` as a metadata-only copy of
-    ``src_table``'s manifest ``src_version``: its files, stats, bloom
-    and complete per-file row counts (a legacy source is backfilled
-    from footers, so the copy is countable without a scan). Each file
-    reference becomes ``os.path.join(prefix, f)`` — the identity for
-    the default empty prefix, an absolute path into the source for a
-    shallow clone. ``provenance`` (mode plus where the files came
-    from) heads the manifest. Returns ``version``."""
+    ``src_table``'s manifest ``src_version``: ONE new segment holding
+    the source's resolved files with their stats, bloom and row
+    counts. Each file reference becomes ``os.path.join(prefix, f)`` —
+    the identity for the default empty prefix, an absolute path into
+    the source for a shallow clone. ``provenance`` (mode plus where
+    the files came from) heads the manifest. Returns ``version``."""
     src = _read_manifest(src_table, src_version)
     ref = {f: os.path.join(prefix, f) for f in src["files"]}
-    rows = _complete_rows(src_table, src)
+    seg = {"files": sorted(ref.values())}
+    for key in ("stats", "bloom", "rows"):
+        seg[key] = {ref[f]: meta for f, meta in src[key].items()}
     manifest = {
         "version": version,
         **provenance,
         "committed_at": time.time(),
-        "files": sorted(ref.values()),
+        "segments": [_write_segment(table_path, seg)],
     }
-    for key in ("stats", "bloom"):
-        if src.get(key):
-            manifest[key] = {
-                ref[f]: meta for f, meta in src[key].items() if f in ref
-            }
-    manifest["rows"] = {ref[f]: n for f, n in rows.items()}
     _commit_manifest(table_path, version, manifest)
     return version
 
@@ -502,7 +400,7 @@ def published_versions(table_path: str) -> list[int]:
         v
         for v in versions(table_path)
         if not (
-            {"staged", "branch"} & _read_manifest(table_path, v).keys()
+            {"staged", "branch"} & _read_manifest_raw(table_path, v).keys()
         )
     ]
 
@@ -516,7 +414,7 @@ def publish_staged(table_path: str, staged_id: str) -> int:
     ``ValueError`` when no staged snapshot carries ``staged_id``."""
     staged_v = None
     for v in versions(table_path):
-        if _read_manifest(table_path, v).get("staged") == staged_id:
+        if _read_manifest_raw(table_path, v).get("staged") == staged_id:
             staged_v = v  # latest wins if re-staged
     if staged_v is None:
         raise ValueError(
@@ -565,17 +463,19 @@ def _read_files(
     spark: SparkSession,
     table_path: str,
     files: list[str],
+    live: list[str],
     merge_schema: bool = False,
 ) -> DataFrame:
     """Scan exactly ``files`` (relative to ``table_path``, or absolute
-    for a shallow clone's references); no files reads as the table's
-    zero-row frame."""
-    if not files:
-        return spark.read.parquet(table_path).limit(0)
+    for a shallow clone's references). No files reads as the zero-row
+    frame of the version whose files are ``live``: its schema comes
+    from that version's own files, never from whatever parquet the
+    table root holds (a shallow clone's root holds none)."""
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[os.path.join(table_path, f) for f in files])
+    df = reader.parquet(*[os.path.join(table_path, f) for f in files or live])
+    return df if files else df.limit(0)
 
 
 def read_snapshot(
@@ -589,21 +489,31 @@ def read_snapshot(
     parquet scan."""
     v = _resolve_version(table_path, version)
     files = _read_manifest(table_path, v)["files"]
-    return _read_files(spark, table_path, files)
+    return _read_files(spark, table_path, files, files)
 
 
 def _plan_files(
     table_path: str, version: int | None, meta_key: str, excludes
-) -> tuple[list[str], int]:
+) -> tuple[list[str], list[str]]:
     """Manifest scan planning: keep each live file unless
     ``excludes(file_meta)`` proves it holds no match, where
     ``file_meta`` is the file's entry under ``meta_key`` ("stats" or
     "bloom"; empty when none was recorded, which never excludes).
-    Returns ``(planned_files, total_live_files)``."""
+    Returns ``(planned_files, live_files)``."""
     m = _read_manifest(table_path, _resolve_version(table_path, version))
-    meta = m.get(meta_key, {})
+    meta = m[meta_key]
     planned = [f for f in m["files"] if not excludes(meta.get(f, {}))]
-    return planned, len(m["files"])
+    return planned, m["files"]
+
+
+def _range_excludes(preds: dict):
+    """``excludes`` for conjunctive range planning: a file holds no
+    match when some ``col: (lo, hi)`` misses its recorded min/max."""
+    return lambda fstats: any(
+        (rng := fstats.get(col)) is not None
+        and (hi < rng[0] or lo > rng[1])
+        for col, (lo, hi) in preds.items()
+    )
 
 
 def plan_pruned_files(
@@ -619,15 +529,10 @@ def plan_pruned_files(
     clustered column simultaneously, so an N-dimensional range query
     prunes multiplicatively instead of on one leading column.
     Returns ``(planned_files, total_live_files)``."""
-
-    def excludes(fstats: dict) -> bool:
-        return any(
-            (rng := fstats.get(col)) is not None
-            and (hi < rng[0] or lo > rng[1])
-            for col, (lo, hi) in preds.items()
-        )
-
-    return _plan_files(table_path, version, "stats", excludes)
+    planned, live = _plan_files(
+        table_path, version, "stats", _range_excludes(preds)
+    )
+    return planned, len(live)
 
 
 def read_snapshot_pruned(
@@ -649,12 +554,14 @@ def read_snapshot_pruned(
 
     import pyspark.sql.functions as F
 
-    planned, _total = plan_pruned_files(table_path, preds, version)
+    planned, live = _plan_files(
+        table_path, version, "stats", _range_excludes(preds)
+    )
     residual = functools.reduce(
         operator.and_,
         [F.col(c).between(lo, hi) for c, (lo, hi) in preds.items()],
     )
-    return _read_files(spark, table_path, planned).filter(residual)
+    return _read_files(spark, table_path, planned, live).filter(residual)
 
 
 def read_snapshot_incremental(
@@ -678,13 +585,13 @@ def read_snapshot_incremental(
     )
     now = _read_manifest(table_path, _resolve_version(table_path, to_version))
     added = [f for f in now["files"] if f not in base]
-    return _read_files(spark, table_path, added)
+    return _read_files(spark, table_path, added, now["files"])
 
 
 def _recorded_cols(manifest: dict, meta_key: str) -> list[str]:
     """Columns the manifest records ``meta_key`` ("stats" or "bloom")
     for on any file — the skipping surface a rewrite carries over."""
-    per_file = manifest.get(meta_key, {}).values()
+    per_file = manifest[meta_key].values()
     return sorted({c for fmeta in per_file for c in fmeta})
 
 
@@ -696,7 +603,6 @@ def optimize_zorder(
     bits: int = 8,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
-    segmented: bool = False,
 ) -> int:
     """Delta ``OPTIMIZE ... ZORDER BY`` for the snapshot log: rewrite
     the CURRENT snapshot's live rows clustered by the Morton
@@ -722,9 +628,8 @@ def optimize_zorder(
     and ``bloom_cols`` defaults to the columns the current manifest
     records bloom bitsets for — so a table maintained for point
     lookups keeps its bloom pruning through an OPTIMIZE. Pass
-    explicit lists to change the skipping surface; pass
-    ``segmented=True`` to keep a segmented table's manifest-list
-    layout (the rewrite is one fresh segment either way)."""
+    explicit lists to change the skipping surface. The rewrite
+    commits as one fresh segment, like any overwrite."""
     from aws_lakehouse_spark.layout import zorder_code
 
     cur_v = _resolve_version(table_path)
@@ -749,7 +654,6 @@ def optimize_zorder(
         "overwrite",
         stats_cols=stats_cols,
         bloom_cols=bloom_cols or None,
-        segmented=segmented,
     )
 
 
@@ -757,7 +661,6 @@ def rewrite_data_files(
     spark: SparkSession,
     table_path: str,
     target_files: int,
-    segmented: bool = False,
 ) -> dict:
     """Iceberg ``rewrite_data_files`` / Delta ``OPTIMIZE`` bin-pack:
     coalesce the CURRENT snapshot's live rows into ``target_files``
@@ -782,7 +685,6 @@ def rewrite_data_files(
         "overwrite",
         stats_cols=stats_cols or None,
         bloom_cols=bloom_cols or None,
-        segmented=segmented,
     )
     new_m = _read_manifest(table_path, v)
     return {
@@ -889,12 +791,17 @@ def plan_bloom_pruned_files(
     ``value``. Files without a recorded bloom for ``col`` are kept
     (pruning must never drop a candidate). Returns
     ``(planned_files, total_live_files)``."""
-    return _plan_files(
-        table_path,
-        version,
-        "bloom",
-        lambda fbloom: col in fbloom
-        and not _bloom_maybe_contains(fbloom[col], value),
+    planned, live = _plan_files(
+        table_path, version, "bloom", _bloom_excludes(col, value)
+    )
+    return planned, len(live)
+
+
+def _bloom_excludes(col: str, value):
+    """``excludes`` for equality planning: a file holds no match when
+    its recorded bloom for ``col`` cannot contain ``value``."""
+    return lambda fbloom: col in fbloom and not _bloom_maybe_contains(
+        fbloom[col], value
     )
 
 
@@ -913,8 +820,12 @@ def read_snapshot_bloom_pruned(
     min/max range pruning for high-cardinality, unclustered keys."""
     import pyspark.sql.functions as F
 
-    planned, _total = plan_bloom_pruned_files(table_path, col, value, version)
-    return _read_files(spark, table_path, planned).filter(F.col(col) == value)
+    planned, live = _plan_files(
+        table_path, version, "bloom", _bloom_excludes(col, value)
+    )
+    return _read_files(spark, table_path, planned, live).filter(
+        F.col(col) == value
+    )
 
 
 def expire_snapshots(
@@ -944,7 +855,8 @@ def expire_snapshots(
         if v in keep:
             continue
         if older_than_s is not None:
-            if now - _read_manifest(table_path, v)["committed_at"] < older_than_s:
+            committed_at = _read_manifest_raw(table_path, v)["committed_at"]
+            if now - committed_at < older_than_s:
                 continue
         os.remove(_manifest_file(table_path, v))
         expired.append(v)
@@ -974,13 +886,12 @@ def remove_orphans(
     references them), and sweeping one makes that commit permanently
     unreadable. Pass 0 only when no writer can be in flight (e.g.
     single-writer test harnesses reclaiming just-expired files)."""
-    live: set[str] = set()
     live_segments: set[str] = set()
     for v in versions(table_path):
-        live |= set(_read_manifest(table_path, v)["files"])
-        live_segments |= set(
-            _read_manifest_raw(table_path, v).get("segments", [])
-        )
+        live_segments.update(_read_manifest_raw(table_path, v)["segments"])
+    live: set[str] = set()
+    for name in live_segments:  # each live segment opened once
+        live.update(_read_segment(table_path, name)["files"])
     # the same older_than gate protects DATA files: a concurrent
     # snapshot_write lands its part files before its manifest commit,
     # so a fresh unreferenced part file may be about to become live
@@ -1040,20 +951,11 @@ def remove_orphans(
     }
 
 
-def _version_row_count(
-    spark: SparkSession, table_path: str, version: int
-) -> int:
-    """Row count of a committed version from manifest metadata: per-
-    file footer counts recorded at write time, lazily backfilled from
-    the files' own parquet footers for pre-row-count legacy logs
-    (:func:`_complete_rows`). NEVER a scan job — ``spark`` is unused
-    and kept only for call-site compatibility (and so the no-scan
-    contract is testable by passing ``spark=None``). Keeps DML
-    reporting and history metadata-only on tables of any size or
-    age."""
-    del spark  # metadata-only by contract
-    m = _read_manifest(table_path, version)
-    return sum(_complete_rows(table_path, m).values())
+def _row_count(manifest: dict) -> int:
+    """Row count of a resolved manifest: the sum of the per-file
+    footer counts every commit records, so DML reporting and history
+    stay metadata-only (never a scan job) on tables of any size."""
+    return sum(manifest["rows"][f] for f in manifest["files"])
 
 
 def delete_where(
@@ -1085,14 +987,14 @@ def delete_where(
     survivors = current.filter(~F.coalesce(cond, F.lit(False)))
     # both counts are manifest sums (footer counts recorded at write
     # time) — the DELETE's only scan is the survivor rewrite itself
-    n_before = _version_row_count(spark, table_path, base_v)
+    n_before = _row_count(_read_manifest(table_path, base_v))
     version = snapshot_write(spark, survivors, table_path, "overwrite")
     return {
         "op": "delete_where",
         "version": version,
         "rows_before": n_before,
         "rows_deleted": n_before
-        - _version_row_count(spark, table_path, version),
+        - _row_count(_read_manifest(table_path, version)),
     }
 
 
@@ -1132,7 +1034,7 @@ def read_snapshot_evolved(
     ``mergeSchema`` so heterogeneous manifests read correctly."""
     v = _resolve_version(table_path, version)
     files = _read_manifest(table_path, v)["files"]
-    return _read_files(spark, table_path, files, merge_schema=True)
+    return _read_files(spark, table_path, files, files, merge_schema=True)
 
 
 def merge_into(
@@ -1496,16 +1398,12 @@ def snapshot_history(spark: SparkSession, table_path: str) -> DataFrame:
     every commit records per-file row counts in its manifest (one
     parquet-footer read per file at write time), so ``n_rows`` is a
     manifest sum — the history of a petabyte table costs zero scan
-    jobs. Versions committed before row counts were recorded backfill
-    each missing file's count from its parquet footer (a bounded
-    metadata read, still zero scan jobs), so old logs stay readable
-    AND metadata-only."""
+    jobs."""
     rows = []
     pub = set(published_versions(table_path))
     for v in versions(table_path):
         m = _read_manifest(table_path, v)
-        n_rows = _version_row_count(spark, table_path, v)
-        rows.append((v, m.get("mode", ""), len(m["files"]), n_rows, v in pub))
+        rows.append((v, m["mode"], len(m["files"]), _row_count(m), v in pub))
     return spark.createDataFrame(
         rows,
         "version int, mode string, n_files bigint, n_rows bigint, "

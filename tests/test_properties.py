@@ -471,19 +471,21 @@ def test_identity_column_matches_global_sort(spark, ids, langs):
 @given(
     ops=st.lists(
         st.tuples(
-            st.sampled_from(["append", "overwrite"]),
-            st.booleans(),  # segmented?
-            st.integers(min_value=1, max_value=30),  # batch size
+            st.sampled_from(["append", "overwrite", "rollback"]),
+            # batch size; for rollback, picks the target version
+            st.integers(min_value=1, max_value=30),
         ),
         min_size=1,
         max_size=5,
     )
 )
 @settings(max_examples=6, deadline=None)
-def test_segmented_log_equals_inline_replay(spark, tmp_path_factory, ops):
-    """Any interleaving of inline and segmented append/overwrite
-    commits reads back EXACTLY like the same op sequence replayed as
-    a pure-Python set fold — at every version, not just the head."""
+def test_snapshot_log_replays_as_set_fold(spark, tmp_path_factory, ops):
+    """Any sequence of append, overwrite and rollback commits reads
+    back EXACTLY like the same op sequence replayed as a pure-Python
+    set fold — at every version, not just the head. Appends reuse
+    their base's segments, overwrites start a fresh segment list and
+    rollbacks copy the target into one new segment."""
     import uuid as _uuid
 
     import pyspark.sql.functions as F
@@ -494,16 +496,21 @@ def test_segmented_log_equals_inline_replay(spark, tmp_path_factory, ops):
     expected: list[set[int]] = []
     state: set[int] = set()
     next_id = 0
-    for mode, segmented, size in ops:
-        batch = set(range(next_id, next_id + size))
-        next_id += size
-        df = spark.createDataFrame(
-            [(i,) for i in sorted(batch)], "id bigint"
-        ).select(F.col("id"))
-        snapshots.snapshot_write(
-            spark, df, table, mode, segmented=segmented
-        )
-        state = (state | batch) if mode == "append" else set(batch)
+    for op, size in ops:
+        if op == "rollback":
+            if not expected:
+                continue  # nothing to roll back to yet
+            target = size % len(expected)
+            snapshots.rollback_to(table, target)
+            state = set(expected[target])
+        else:
+            batch = set(range(next_id, next_id + size))
+            next_id += size
+            df = spark.createDataFrame(
+                [(i,) for i in sorted(batch)], "id bigint"
+            ).select(F.col("id"))
+            snapshots.snapshot_write(spark, df, table, op)
+            state = (state | batch) if op == "append" else batch
         expected.append(set(state))
     for v, want in enumerate(expected):
         got = {

@@ -301,6 +301,7 @@ def test_manifest_commit_is_put_if_absent(spark, tmp_path):
         SnapshotConflictError,
         _commit_manifest,
         _read_manifest,
+        _write_segment,
         snapshot_write,
     )
 
@@ -311,10 +312,13 @@ def test_manifest_commit_is_put_if_absent(spark, tmp_path):
         table,
         "overwrite",
     )
-    winner = {"version": 1, "mode": "append", "committed_at": 0.0,
-              "files": ["winner.parquet"]}
-    loser = {"version": 1, "mode": "append", "committed_at": 0.0,
-             "files": ["loser.parquet"]}
+    def manifest(name):
+        seg = {"files": [name], "stats": {}, "bloom": {}, "rows": {name: 1}}
+        return {"version": 1, "mode": "append", "committed_at": 0.0,
+                "segments": [_write_segment(table, seg)]}
+
+    winner = manifest("winner.parquet")
+    loser = manifest("loser.parquet")
     _commit_manifest(table, 1, winner)
     with pytest.raises(SnapshotConflictError):
         _commit_manifest(table, 1, loser)
@@ -1043,54 +1047,28 @@ def test_shallow_clone_carries_stats_and_time_travels(spark, tmp_path):
 
 
 def test_segmented_append_reuses_segments(spark, table_path):
-    """Segment reuse contract: an append onto a segmented base writes
-    exactly ONE new segment and keeps the base's segments verbatim —
-    metadata per append is O(files added), not O(files in table)."""
-    v0 = snapshots.snapshot_write(
-        spark, _df(spark, 0, 10), table_path, "overwrite", segmented=True
-    )
+    """Segment reuse contract: an append writes exactly ONE new
+    segment and keeps the base's segments verbatim — metadata per
+    append is O(files added), not O(files in table)."""
+    v0 = snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
     m0 = snapshots._read_manifest_raw(table_path, v0)
     assert "files" not in m0 and len(m0["segments"]) == 1
 
-    v1 = snapshots.snapshot_write(
-        spark, _df(spark, 10, 15), table_path, "append", segmented=True
-    )
+    v1 = snapshots.snapshot_write(spark, _df(spark, 10, 15), table_path, "append")
     m1 = snapshots._read_manifest_raw(table_path, v1)
     # prefix is the base's segment list, untouched; one new segment
     assert m1["segments"][: len(m0["segments"])] == m0["segments"]
     assert len(m1["segments"]) == len(m0["segments"]) + 1
 
-    v2 = snapshots.snapshot_write(
-        spark, _df(spark, 15, 18), table_path, "append", segmented=True
-    )
+    v2 = snapshots.snapshot_write(spark, _df(spark, 15, 18), table_path, "append")
     m2 = snapshots._read_manifest_raw(table_path, v2)
     assert m2["segments"][: len(m1["segments"])] == m1["segments"]
     assert len(m2["segments"]) == len(m1["segments"]) + 1
 
-    # resolved reads are identical to the inline form
+    # resolved reads see every segment's files, at every version
     assert snapshots.read_snapshot(spark, table_path).count() == 18
     assert snapshots.read_snapshot(spark, table_path, v1).count() == 15
     assert snapshots.read_snapshot(spark, table_path, v0).count() == 10
-
-
-def test_segmented_interoperates_with_inline_log(spark, table_path):
-    """Inline and segmented commits share one log: a segmented append
-    onto an inline base converts the base into one segment (once),
-    and a later inline append resolves the segmented base fine."""
-    snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
-    v1 = snapshots.snapshot_write(
-        spark, _df(spark, 10, 15), table_path, "append", segmented=True
-    )
-    m1 = snapshots._read_manifest_raw(table_path, v1)
-    assert len(m1["segments"]) == 2  # converted base + new batch
-    assert snapshots.read_snapshot(spark, table_path, v1).count() == 15
-
-    v2 = snapshots.snapshot_write(
-        spark, _df(spark, 15, 18), table_path, "append"
-    )
-    m2 = snapshots._read_manifest_raw(table_path, v2)
-    assert "segments" not in m2 and len(m2["files"]) > 0
-    assert snapshots.read_snapshot(spark, table_path, v2).count() == 18
 
 
 def test_segmented_stats_carried_and_pruned(spark, table_path):
@@ -1102,7 +1080,6 @@ def test_segmented_stats_carried_and_pruned(spark, table_path):
         table_path,
         "overwrite",
         stats_cols=["id"],
-        segmented=True,
     )
     snapshots.snapshot_write(
         spark,
@@ -1110,7 +1087,6 @@ def test_segmented_stats_carried_and_pruned(spark, table_path):
         table_path,
         "append",
         stats_cols=["id"],
-        segmented=True,
     )
     m = snapshots._read_manifest(table_path, 1)
     assert m["stats"]  # merged across segments
@@ -1125,19 +1101,13 @@ def test_segmented_stats_carried_and_pruned(spark, table_path):
 
 
 def test_segment_gc_after_expiry(spark, table_path):
-    """Expiring segmented manifests leaves their unshared segments
+    """Expiring manifests leaves their unshared segments
     unreferenced; remove_orphans reclaims exactly those."""
-    snapshots.snapshot_write(
-        spark, _df(spark, 0, 10), table_path, "overwrite", segmented=True
-    )
-    snapshots.snapshot_write(
-        spark, _df(spark, 10, 15), table_path, "append", segmented=True
-    )
+    snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
+    snapshots.snapshot_write(spark, _df(spark, 10, 15), table_path, "append")
     # overwrite: fresh single segment; earlier segments now only
     # referenced by the expired-soon manifests
-    snapshots.snapshot_write(
-        spark, _df(spark, 100, 103), table_path, "overwrite", segmented=True
-    )
+    snapshots.snapshot_write(spark, _df(spark, 100, 103), table_path, "overwrite")
     seg_dir = snapshots._segments_dir(table_path)
     assert len(os.listdir(seg_dir)) == 3
 
@@ -1182,19 +1152,17 @@ def test_optimize_zorder_preserves_data_and_history(spark, table_path):
 
 def test_optimize_zorder_carries_bloom_and_segments(spark, table_path):
     """OPTIMIZE must not silently degrade the skipping surface: a
-    table maintained with bloom bitsets (and segmented manifests)
-    keeps both through the rewrite by default."""
+    table maintained with bloom bitsets keeps them (and its stats)
+    through the rewrite by default, committed as a segment list."""
     df = _df(spark, 0, 400)
     snapshots.snapshot_write(
         spark, df.repartition(4), table_path, "overwrite",
-        stats_cols=["id"], bloom_cols=["v"], segmented=True,
+        stats_cols=["id"], bloom_cols=["v"],
     )
     v1 = snapshots.optimize_zorder(
-        spark, table_path, {"id": (0.0, 400.0)}, n_files=4,
-        segmented=True,
+        spark, table_path, {"id": (0.0, 400.0)}, n_files=4
     )
-    raw = snapshots._read_manifest_raw(table_path, v1)
-    assert "segments" in raw
+    assert len(snapshots._read_manifest_raw(table_path, v1)["segments"]) == 1
     m = snapshots._read_manifest(table_path, v1)
     for f in m["files"]:
         assert "id" in m["stats"][f]
@@ -1217,7 +1185,7 @@ def test_remove_orphans_reclaims_crashed_segment_tmp(spark, table_path):
     fresh tmp may belong to a concurrent writer's in-flight commit
     about to os.replace it, and sweeping it would fail that commit."""
     snapshots.snapshot_write(
-        spark, _df(spark, 0, 10), table_path, "overwrite", segmented=True
+        spark, _df(spark, 0, 10), table_path, "overwrite"
     )
     seg_dir = snapshots._segments_dir(table_path)
     fresh = os.path.join(seg_dir, "seg-inflight.json.tmp")
@@ -1288,106 +1256,129 @@ def test_check_constraints_gate_writes(spark, table_path):
         snapshots.checked_snapshot_write(spark, nullish, table_path, "append")
 
 
-def test_snapshot_history_is_metadata_only(spark, table_path, monkeypatch):
+def test_snapshot_history_is_metadata_only(
+    spark, table_path, tmp_path, monkeypatch
+):
     """Every commit records per-file row counts (one footer read at
-    write time), so history over freshly written logs must never
-    launch a count job — the property that makes pointing a dashboard
-    at a petabyte table's history safe. Locked by poisoning the scan
-    fallback: any read_snapshot call from snapshot_history fails."""
+    write time), so history and DML counts must never launch a count
+    job — the property that makes pointing a dashboard at a petabyte
+    table's history safe. Every path that commits a manifest (write,
+    rollback, WAP publish, shallow clone, fast-forward, copy-on-write
+    DML) commits a segment list whose counts cover every file. Locked
+    by poisoning the scan fallback: any read_snapshot call from
+    snapshot_history fails."""
     snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
     snapshots.snapshot_write(spark, _df(spark, 10, 15), table_path, "append")
-    snapshots.snapshot_write(
-        spark, _df(spark, 100, 103), table_path, "append", segmented=True
-    )
+    snapshots.snapshot_write(spark, _df(spark, 100, 103), table_path, "append")
     snapshots.rollback_to(table_path, 1)
+    snapshots.snapshot_write(
+        spark, _df(spark, 30, 34), table_path, "overwrite", staged_id="aud"
+    )
+    snapshots.publish_staged(table_path, "aud")
+    dst = str(tmp_path / "clone")
+    snapshots.clone_snapshot(table_path, dst, version=1)
+    res = snapshots.delete_where(spark, table_path, "id >= 32")
+    assert (res["rows_before"], res["rows_deleted"]) == (4, 2)
+    snapshots.create_branch(table_path, "exp")
+    snapshots.snapshot_write(
+        spark, _df(spark, 40, 43), table_path, "append", branch="exp"
+    )
+    snapshots.fast_forward_main(table_path, "exp")
+
+    for tp in (table_path, dst):
+        for v in snapshots.versions(tp):
+            raw = snapshots._read_manifest_raw(tp, v)
+            assert "segments" in raw and "files" not in raw, (tp, v)
+            m = snapshots._read_manifest(tp, v)
+            assert set(m["rows"]) == set(m["files"]), (tp, v)
 
     def boom(*a, **k):
         raise AssertionError("snapshot_history fell back to a scan job")
 
     monkeypatch.setattr(snapshots, "read_snapshot", boom)
     hist = {
-        r["version"]: (r["n_rows"], r["n_files"])
+        r["version"]: r["n_rows"]
         for r in snapshots.snapshot_history(spark, table_path).collect()
     }
-    assert hist[0][0] == 10
-    assert hist[1][0] == 15
-    assert hist[2][0] == 18  # segmented append carries base + batch
-    assert hist[3][0] == 15  # rollback carries the target's counts
+    assert hist == {
+        0: 10,
+        1: 15,
+        2: 18,  # append carries base + batch
+        3: 15,  # rollback carries the target's counts
+        4: 4,  # the staged batch
+        5: 4,  # its publish
+        6: 2,  # delete_where's survivors
+        7: 5,  # branch append onto the survivors
+        8: 5,  # fast-forward carries the branch head's counts
+    }
+    clone = snapshots.snapshot_history(spark, dst).collect()
+    assert [(r["version"], r["n_rows"]) for r in clone] == [(0, 15)]
 
 
-def _strip_rows(table_path, version):
-    """Simulate a pre-round-6 manifest: drop its per-file counts."""
-    import json as _json
+def test_metadata_reads_open_no_segment(spark, table_path, monkeypatch):
+    """Listing main's versions, finding a WAP stage and the age check
+    of expire_snapshots read only the top-level manifests: with
+    segment resolution poisoned they still answer, so a commit never
+    opens every segment of every version."""
+    for lo in (0, 10, 20):
+        snapshots.snapshot_write(
+            spark, _df(spark, lo, lo + 10), table_path, "append"
+        )
 
-    mf = snapshots._manifest_file(table_path, version)
-    m = _json.load(open(mf))
-    m.pop("rows", None)
-    _json.dump(m, open(mf, "w"))
+    def boom(*a, **k):
+        raise AssertionError("resolved a manifest's segments")
 
-
-def test_snapshot_history_counts_pre_rows_manifests(spark, table_path):
-    """Manifests committed before per-file row counts existed (or
-    hand-edited logs missing one) still produce correct history —
-    since round 8 via per-file parquet-FOOTER backfill, which is
-    metadata-only: passing spark=None proves no count job is even
-    reachable (the old fallback ran read_snapshot().count())."""
-    snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
-    _strip_rows(table_path, 0)
-    assert snapshots._version_row_count(None, table_path, 0) == 10
-    hist = snapshots.snapshot_history(spark, table_path).collect()
-    assert hist[0]["n_rows"] == 10
-
-
-def test_legacy_logs_stay_metadata_only_through_every_path(
-    spark, table_path, tmp_path
-):
-    """r7 verdict item 7: any version written by ANY path — append
-    onto a legacy base, rollback to a legacy version, clone of a
-    legacy table, publish of a legacy staged snapshot — commits a
-    COMPLETE per-file count map, and counting a still-legacy version
-    itself backfills from footers without a scan job."""
-    snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
-    snapshots.snapshot_write(spark, _df(spark, 10, 15), table_path, "append")
-    for v in (0, 1):
-        _strip_rows(table_path, v)
-
-    def complete(tp, v):
-        m = snapshots._read_manifest(tp, v)
-        return set(m.get("rows", {})) == set(m["files"])
-
-    # counting the stripped versions: correct, and spark=None proves
-    # the path can't launch a job
-    assert snapshots._version_row_count(None, table_path, 0) == 10
-    assert snapshots._version_row_count(None, table_path, 1) == 15
-    # append onto the legacy base: the new manifest covers the base's
-    # files too
-    v2 = snapshots.snapshot_write(
-        spark, _df(spark, 20, 23), table_path, "append"
+    monkeypatch.setattr(snapshots, "_read_manifest", boom)
+    assert snapshots.published_versions(table_path) == [0, 1, 2]
+    with pytest.raises(ValueError, match="no staged snapshot"):
+        snapshots.publish_staged(table_path, "absent")
+    res = snapshots.expire_snapshots(
+        table_path, retain_last=1, older_than_s=3600.0
     )
-    assert complete(table_path, v2)
-    assert snapshots._version_row_count(None, table_path, v2) == 18
-    # rollback to the legacy v0: the restore commit is fully counted
-    v3 = snapshots.rollback_to(table_path, 0)
-    assert complete(table_path, v3)
-    assert snapshots._version_row_count(None, table_path, v3) == 10
-    # clone of the still-legacy v1: counted from birth
-    dst = str(tmp_path / "clone_of_legacy")
-    snapshots.clone_snapshot(table_path, dst, version=1)
-    assert complete(dst, 0)
-    assert snapshots._version_row_count(None, dst, 0) == 15
-    # WAP publish of a legacy staged snapshot
-    v4 = snapshots.snapshot_write(
-        spark, _df(spark, 30, 34), table_path, "overwrite", staged_id="aud"
+    assert res["expired_versions"] == []
+    res = snapshots.expire_snapshots(
+        table_path, retain_last=1, older_than_s=0.0
     )
-    _strip_rows(table_path, v4)
-    v5 = snapshots.publish_staged(table_path, "aud")
-    assert complete(table_path, v5)
-    assert snapshots._version_row_count(None, table_path, v5) == 4
-    # DML reporting on a legacy head: rows_before/rows_deleted are
-    # manifest+footer sums (the only scan is the survivor rewrite)
-    _strip_rows(table_path, v5)
-    res = snapshots.delete_where(spark, table_path, "id >= 32")
-    assert (res["rows_before"], res["rows_deleted"]) == (4, 2)
+    assert res["expired_versions"] == [0, 1]
+
+
+def test_zero_file_reads_take_the_version_schema(spark, tmp_path):
+    """A read that plans no file is the zero-row frame of the version
+    being read, schema taken from that version's own files: on a
+    shallow clone, whose root holds no parquet, and on a table whose
+    root also holds the files of an older schema."""
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    snapshots.snapshot_write(
+        spark, _df(spark, 0, 10), src, "overwrite",
+        stats_cols=["id"], bloom_cols=["v"],
+    )
+    snapshots.clone_snapshot(src, dst)
+    assert snapshots._data_files(dst) == set()
+    assert snapshots.plan_bloom_pruned_files(dst, "v", -1)[0] == []
+    assert snapshots.plan_pruned_files(dst, {"id": (1000, 2000)})[0] == []
+    for empty in (
+        snapshots.read_snapshot_incremental(spark, dst, 0),
+        snapshots.read_snapshot_bloom_pruned(spark, dst, "v", -1),
+        snapshots.read_snapshot_pruned(spark, dst, {"id": (1000, 2000)}),
+    ):
+        assert empty.columns == ["id", "v"]
+        assert empty.collect() == []
+
+    # the old schema's files outnumber the live version's file
+    t = str(tmp_path / "evolved")
+    snapshots.snapshot_write(
+        spark, _df(spark, 0, 40).repartition(8), t, "overwrite"
+    )
+    v1 = snapshots.snapshot_write(
+        spark,
+        _df(spark, 0, 4).withColumn("w", F.lit("x")).coalesce(1),
+        t,
+        "overwrite",
+    )
+    empty = snapshots.read_snapshot_incremental(spark, t, v1)
+    assert empty.columns == ["id", "v", "w"]
+    assert empty.collect() == []
 
 
 # --- one table format: foreign tables are refused ------------------
